@@ -142,7 +142,7 @@ def test_float_wav_now_decodes_for_real():
     assert rate == 8000
     want = np.round(np.clip(np.array(vals), -1, 1) * 32767.0).astype(np.int16)
     assert (samples[:, 0] == want).all()
-    out = _features_chunk(_chunk("audio", payload), fake_decode=True)
+    out = _features_chunk(_chunk("audio", payload))
     feat, thumb = audio_features(samples)
     assert out["feat"][0] == pytest.approx(feat.astype(np.float32).tolist())
     assert out["thumb_mean"][0] == pytest.approx(thumb.astype(np.float32).tolist())
@@ -166,7 +166,7 @@ def test_features_chunk_falls_back_on_adpcm_wav():
     """A genuinely unsupported compressed format (ADPCM, tag 0x0011)
     still degrades per-row to the byte histogram."""
     payload = _wav(0x0011, 4, b"\x12\x34\x56\x78")
-    out = _features_chunk(_chunk("audio", payload), fake_decode=True)
+    out = _features_chunk(_chunk("audio", payload))
     assert len(out) == 1
     feat, thumb = _byte_histogram_features(payload)
     assert out["feat"][0] == pytest.approx(feat.astype(np.float32).tolist())
@@ -175,24 +175,21 @@ def test_features_chunk_falls_back_on_adpcm_wav():
 
 def test_features_chunk_falls_back_on_truncated_mjpeg():
     bad = b"\xff\xd8" + b"\x00" * 64  # SOI prefix, garbage body
-    for fake in (True, False):
-        out = _features_chunk(_chunk("video", bad), fake_decode=fake)
-        assert len(out) == 1
-        feat, _ = _byte_histogram_features(bad)
-        assert out["feat"][0] == pytest.approx(feat.astype(np.float32).tolist())
+    out = _features_chunk(_chunk("video", bad))
+    assert len(out) == 1
+    feat, _ = _byte_histogram_features(bad)
+    assert out["feat"][0] == pytest.approx(feat.astype(np.float32).tolist())
 
 
 def test_features_chunk_falls_back_on_truncated_jpeg_image():
-    """A sniffed-but-corrupt image payload degrades per-row in BOTH
-    decode modes (the NotImplementedError seam is for unrecognized
-    formats, not corrupt recognized ones)."""
+    """A sniffed-but-corrupt image payload degrades per-row to the byte
+    histogram."""
     e = encode_jpeg(_img(9))
     bad = e[:-5] + e[-2:]
-    for fake in (True, False):
-        out = _features_chunk(_chunk("image", bad), fake_decode=fake)
-        feat, thumb = _byte_histogram_features(bad)
-        assert out["feat"][0] == pytest.approx(feat.astype(np.float32).tolist())
-        assert out["thumb_mean"][0] == pytest.approx(thumb.tolist())
+    out = _features_chunk(_chunk("image", bad))
+    feat, thumb = _byte_histogram_features(bad)
+    assert out["feat"][0] == pytest.approx(feat.astype(np.float32).tolist())
+    assert out["thumb_mean"][0] == pytest.approx(thumb.tolist())
 
 
 def test_thumbnails_survive_corrupt_image(spark):
@@ -216,7 +213,7 @@ def test_thumbnails_survive_corrupt_image(spark):
         ],
         MEDIA_SCHEMA,
     )
-    rows = image_thumbnails(media, fake_decode=False).collect()
+    rows = image_thumbnails(media).collect()
     assert len(rows) == 2
     by_id = {r.media_id: bytes(r.thumb) for r in rows}
     assert any(b != 0 for b in by_id[0])  # real decode
@@ -230,14 +227,14 @@ def test_features_chunk_real_paths_unaffected():
 
     samples = (np.random.RandomState(0).randn(512, 1) * 8000).astype(np.int16)
     wav = encode_wav(samples, 8000)
-    out = _features_chunk(_chunk("audio", wav), fake_decode=False)
+    out = _features_chunk(_chunk("audio", wav))
     hist, _ = _byte_histogram_features(wav)
     assert out["feat"][0] != pytest.approx(hist.astype(np.float32).tolist())
 
 
 def test_sample_video_frames_survives_malformed_mjpeg(spark):
-    """An SOI-prefixed but broken payload must yield stub-path rows, not
-    a failed task."""
+    """An SOI-prefixed but broken payload must yield byte-histogram rows,
+    not a failed task."""
     from web_template_forensics_spark.operators.multimodal import (
         MEDIA_SCHEMA,
         sample_video_frames,
@@ -261,8 +258,8 @@ def test_sample_video_frames_survives_malformed_mjpeg(spark):
         ],
         MEDIA_SCHEMA,
     )
-    rows = sample_video_frames(media, every_ms=1000, fake_decode=True).collect()
-    assert len(rows) == 3  # one per sampled position, all via stub path
+    rows = sample_video_frames(media, every_ms=1000).collect()
+    assert len(rows) == 3  # one per sampled position, all via the fallback
 
 
 # ------------------------------------- round-5 second review pass vectors
@@ -366,10 +363,9 @@ def test_png_decompression_bomb_bounded():
 def test_codec_variant_gap_degrades_per_row_not_task_kill(monkeypatch):
     """The contract for any FUTURE codec-variant gap: a codec-level
     NotImplementedError on a recognized format surfaces as the
-    ValueError-family UnsupportedVariantError, so the row degrades in
-    BOTH decode modes instead of killing the task. (All legal PNG
-    variants now decode for real — see test_png_codec — so the trigger
-    is injected.)"""
+    ValueError-family UnsupportedVariantError, and the row degrades
+    instead of killing the task. (All legal PNG variants now decode for
+    real — see test_png_codec — so the trigger is injected.)"""
     from web_template_forensics_spark.operators import multimodal as mm
 
     def boom(_payload):
@@ -381,12 +377,11 @@ def test_codec_variant_gap_degrades_per_row_not_task_kill(monkeypatch):
         fromlist=["encode_png"],
     ).encode_png(_img(16))
     with pytest.raises(mm.UnsupportedVariantError):
-        mm.decode_image(payload, fake=True)
+        mm.decode_image(payload)
     assert issubclass(mm.UnsupportedVariantError, ValueError)
-    for fake in (True, False):
-        out = mm._features_chunk(_chunk("image", payload), fake_decode=fake)
-        feat, _ = _byte_histogram_features(payload)
-        assert out["feat"][0] == pytest.approx(feat.astype(np.float32).tolist())
+    out = mm._features_chunk(_chunk("image", payload))
+    feat, _ = _byte_histogram_features(payload)
+    assert out["feat"][0] == pytest.approx(feat.astype(np.float32).tolist())
 
 
 def test_adam7_png_decodes_for_real_in_feature_path():
@@ -397,26 +392,27 @@ def test_adam7_png_decodes_for_real_in_feature_path():
 
     img = _img(17, 16, 24)
     payload = _manual_png(24, 16, 8, 2, _interlaced_raw(img), interlace=1)
-    out = _features_chunk(_chunk("image", payload), fake_decode=False)
+    out = _features_chunk(_chunk("image", payload))
     want = np.histogram(img, bins=8, range=(0, 255))[0].astype(np.float64)
     want = want / max(1.0, want.sum())
     assert out["feat"][0] == pytest.approx(want.astype(np.float32).tolist())
 
 
 def test_no_codec_seam_stays_loud():
-    """The fake=False unrecognized-format seam is a bare
-    NotImplementedError (NOT a ValueError): pipelines without codecs
-    must opt into fake=True explicitly, not silently degrade. (GIF left
-    this club in late round 5 — a WebP payload is the example now; a
-    CORRUPT GIF is a ValueError-family GifFormatError instead, the
-    per-row degrade path.)"""
+    """decode_image keeps its two failure kinds apart: an unrecognized
+    format raises a bare NotImplementedError (NOT a ValueError), a
+    corrupt or unsupported-variant payload a ValueError-family error
+    (a CORRUPT GIF is a GifFormatError). The per-row operators degrade
+    both kinds the same way (byte histogram / zero thumbnail, see
+    test_unknown_format_image_row_degrades); this pins the decoder's
+    own contract."""
     from web_template_forensics_spark.functions.gif_codec import GifFormatError
     from web_template_forensics_spark.operators.multimodal import decode_image
 
     with pytest.raises(NotImplementedError):
-        decode_image(b"II*\x00" + bytes(64), fake=False)  # TIFF: no codec
+        decode_image(b"II*\x00" + bytes(64))  # TIFF: no codec
     with pytest.raises(GifFormatError):
-        decode_image(b"GIF89a" + bytes(64), fake=False)
+        decode_image(b"GIF89a" + bytes(64))
     # lossy VP8 is VALID WebP in a variant without a dependency-free
     # codec: ValueError-family UnsupportedVariantError (per-row degrade)
     from web_template_forensics_spark.operators.multimodal import (
@@ -424,7 +420,52 @@ def test_no_codec_seam_stays_loud():
     )
 
     with pytest.raises(UnsupportedVariantError):
-        decode_image(b"RIFF\x24\x00\x00\x00WEBPVP8 " + bytes(48), fake=False)
+        decode_image(b"RIFF\x24\x00\x00\x00WEBPVP8 " + bytes(48))
+
+
+def test_unknown_format_image_row_degrades(spark):
+    """A payload with no codec (TIFF magic) degrades ITS row in every
+    per-row operator — byte histogram for features and frames, zero
+    thumbnail — while the job completes and a real row beside it still
+    decodes."""
+    from web_template_forensics_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        extract_media_features,
+        image_thumbnails,
+        sample_video_frames,
+    )
+
+    tiff = b"II*\x00" + bytes(range(256))
+    meta = {
+        "width": None,
+        "height": None,
+        "sample_rate": None,
+        "duration_ms": 2000,
+        "codec": "tiff",
+    }
+    media = spark.createDataFrame(
+        [
+            (0, "image", bytearray(tiff), meta),
+            (1, "image", bytearray(encode_jpeg(_img(11))), meta),
+            (2, "video", bytearray(tiff), meta),
+        ],
+        MEDIA_SCHEMA,
+    )
+    want, zero = _byte_histogram_features(tiff)
+    want = pytest.approx(want.astype(np.float32).tolist())
+
+    feats = {r.media_id: r for r in extract_media_features(media).collect()}
+    assert len(feats) == 3
+    assert feats[0].feat == want and feats[0].thumb_mean == pytest.approx(zero.tolist())
+    assert feats[1].feat != feats[0].feat  # the JPEG row decodes for real
+
+    thumbs = {r.media_id: bytes(r.thumb) for r in image_thumbnails(media).collect()}
+    assert thumbs[0] == bytes(8 * 8 * 3)
+    assert any(thumbs[1])
+
+    frames = sample_video_frames(media, every_ms=1000).collect()
+    assert [r.position_ms for r in frames] == [0, 1000]
+    assert all(r.feat == want for r in frames)
 
 
 def test_sample_video_frames_null_duration_meta(spark):
@@ -452,7 +493,7 @@ def test_sample_video_frames_null_duration_meta(spark):
         ],
         MEDIA_SCHEMA,
     )
-    rows = sample_video_frames(media, every_ms=1000, fake_decode=True).collect()
+    rows = sample_video_frames(media, every_ms=1000).collect()
     assert rows == []  # null duration -> 0 positions, no crash
 
 

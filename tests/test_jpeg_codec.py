@@ -149,9 +149,7 @@ def test_round_trip_property(h, w, seed, grey):
 
 
 def test_decode_image_real_jpeg_path():
-    """decode_image routes JPEG payloads to the real codec — both with
-    and without fake=True (fake is a fallback permission for codec-less
-    formats, not an override)."""
+    """decode_image routes JPEG payloads to the real codec."""
     from web_template_forensics_spark.operators.multimodal import decode_image
 
     y, x = np.mgrid[0:20, 0:24]
@@ -161,7 +159,6 @@ def test_decode_image_real_jpeg_path():
     data = encode_jpeg(img, quality=95)
     out = decode_image(data)
     assert out.shape == img.shape and _err(out, img) < 1.5
-    assert np.array_equal(decode_image(data, fake=True), out)
     # greyscale scan normalizes to 3 identical channels
     g = ((y * 5 + x) % 256).astype(np.uint8)
     out = decode_image(encode_jpeg(g, quality=95))
@@ -171,7 +168,7 @@ def test_decode_image_real_jpeg_path():
 
 def test_media_features_real_jpeg_on_cluster(spark):
     """End-to-end through the byte-bounded mapInPandas operator with
-    REAL JPEG payloads and fake_decode=False: features must equal the
+    REAL JPEG payloads: features must equal the
     driver-side numpy computation on the decoded pixels."""
     from web_template_forensics_spark.operators.multimodal import (
         MEDIA_SCHEMA,
@@ -198,7 +195,7 @@ def test_media_features_real_jpeg_on_cluster(spark):
         )
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     feats = (
-        extract_media_features(media, fake_decode=False)
+        extract_media_features(media)
         .toPandas()
         .set_index("media_id")
         .sort_index()

@@ -8,21 +8,51 @@ from pyspark.sql import functions as F
 
 
 def test_pipeline_invariant_and_geocode(spark):
-    from web_template_forensics_spark.plans.pipeline import pages_to_geo
+    from web_template_forensics_spark.plans.pipeline import pages_to_geo_fused
     from web_template_forensics_spark.sources.pages import build_pages_df, gen_pages_pdf
 
     n = 400
     pages = build_pages_df(spark, n, seed=42)
-    geo = pages_to_geo(spark, pages, verify_text=True)  # raises on any byte mismatch
-    got = geo.select("url", "lat", "lon").toPandas().set_index("url")
+    geo = pages_to_geo_fused(pages, verify_text=True)
+    got = geo.select("url", "text_ok", "lat", "lon").toPandas().set_index("url")
 
     gold = gen_pages_pdf(0, n, 42, with_gold=True)
     # duplicate urls: keep any row (same url -> same html -> same geocode)
     gold = gold.drop_duplicates("url").set_index("url")
     assert len(got) == n
+    assert (got.text_ok == 1).all()  # extracted text byte-identical per row
     joined = got.join(gold[["gold_lat", "gold_lon"]])
     assert (joined.lat == joined.gold_lat).all()
     assert (joined.lon == joined.gold_lon).all()
+
+
+def test_fused_geocode_nulls_ungeocodable_pages(spark):
+    """A page with neither a geo <meta> tag nor a known host/TLD gets
+    null lat, lon AND cell_id; a meta tag alone geocodes any url."""
+    from datetime import datetime
+
+    from web_template_forensics_spark.geo.cells import cell_encode
+    from web_template_forensics_spark.plans.pipeline import CELL_LEVEL, pages_to_geo_fused
+    from web_template_forensics_spark.sources.pages import PAGES_SCHEMA
+
+    meta = '<html><head><meta name="geo.position" content="12.5;-45.25"></head><body>x</body></html>'
+    plain = "<html><head></head><body>x</body></html>"
+    ts = datetime(2025, 1, 1)
+    rows = [
+        ("https://foreign.org/x", ts, plain.encode(), "x", "en"),
+        ("https://h12.example.zz/p/1", ts, plain.encode(), "x", "en"),
+        ("https://foreign.org/meta", ts, meta.encode(), "x", "en"),
+    ]
+    pages = spark.createDataFrame(rows, PAGES_SCHEMA)
+    got = {
+        r.url: r
+        for r in pages_to_geo_fused(pages).select("url", "lat", "lon", "cell_id").collect()
+    }
+    for url in ("https://foreign.org/x", "https://h12.example.zz/p/1"):
+        assert (got[url].lat, got[url].lon, got[url].cell_id) == (None, None, None), url
+    m = got["https://foreign.org/meta"]
+    assert (m.lat, m.lon) == (12.5, -45.25)
+    assert m.cell_id == int(cell_encode(12.5, -45.25, CELL_LEVEL))
 
 
 def test_checkpointed_write_resume(spark, tmp_path):

@@ -258,11 +258,9 @@ def test_dimension_bomb_guard_fires_at_parse_time():
 
 
 def test_decode_image_real_png_path():
-    """decode_image now really decodes PNG payloads — fake=True is a
-    fallback permission for codec-less formats, not an override."""
+    """decode_image really decodes PNG payloads."""
     rgb = _rand_img(12, 9, 3, seed=5)
     assert (decode_image(encode_png(rgb)) == rgb).all()
-    assert (decode_image(encode_png(rgb), fake=True) == rgb).all()
     grey = _rand_img(6, 7, 1, seed=6)
     out = decode_image(encode_png(grey))
     assert out.shape == (6, 7, 3)
@@ -273,7 +271,7 @@ def test_decode_image_real_png_path():
     # JPEG payloads now route to the real jpeg_codec (corrupt body ->
     # format error, not NotImplementedError); WebP is recognized since
     # late r5 (VP8L real, chunkless header = ValueError-family variant/
-    # corrupt); genuinely codec-less formats (TIFF) keep the stub error
+    # corrupt); genuinely codec-less formats (TIFF) raise NotImplementedError
     from web_template_forensics_spark.functions.jpeg_codec import JpegFormatError
     from web_template_forensics_spark.operators.multimodal import (
         UnsupportedVariantError,
@@ -289,7 +287,7 @@ def test_decode_image_real_png_path():
 
 def test_media_features_real_png_on_cluster(spark):
     """End-to-end through the byte-bounded mapInPandas operator with
-    REAL PNG payloads and fake_decode=False: the histogram features must
+    REAL PNG payloads: the histogram features must
     equal the driver-side numpy computation on the same pixels."""
     from web_template_forensics_spark.operators.multimodal import (
         MEDIA_SCHEMA,
@@ -311,7 +309,7 @@ def test_media_features_real_png_on_cluster(spark):
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     feats = (
-        extract_media_features(media, fake_decode=False)
+        extract_media_features(media)
         .toPandas()
         .set_index("media_id")
         .sort_index()
@@ -325,7 +323,7 @@ def test_media_features_real_png_on_cluster(spark):
         )
 
     thumbs = (
-        image_thumbnails(media, out_h=4, out_w=4, fake_decode=False)
+        image_thumbnails(media, out_h=4, out_w=4)
         .toPandas()
         .set_index("media_id")
         .sort_index()

@@ -97,7 +97,7 @@ def test_multimodal_feature_extraction(spark):
     )
 
     media = synth_media_df(spark, n=60)
-    feats = extract_media_features(media, fake_decode=True).toPandas()
+    feats = extract_media_features(media).toPandas()
     assert len(feats) == 60
     assert set(feats.kind) == {"image", "audio", "video"}
     # features are unit-ish histograms of fixed arity
@@ -106,7 +106,7 @@ def test_multimodal_feature_extraction(spark):
     img = feats[feats.kind == "image"]
     assert all(len(t) == 3 for t in img.thumb_mean)
     # deterministic: second run bit-identical
-    feats2 = extract_media_features(media, fake_decode=True).toPandas()
+    feats2 = extract_media_features(media).toPandas()
     a = feats.sort_values("media_id").reset_index(drop=True)
     b = feats2.sort_values("media_id").reset_index(drop=True)
     assert all(np.array_equal(x, y) for x, y in zip(a.feat, b.feat))
@@ -115,7 +115,7 @@ def test_multimodal_feature_extraction(spark):
 def test_build_media_df_real_corpus(spark):
     """The bench's real-media corpus builder: deterministic across
     partitionings, every payload decodes for REAL (feature extraction
-    with fake_decode=False produces zero byte-histogram fallbacks:
+    produces zero byte-histogram fallbacks:
     every image row's thumb_mean must equal the per-channel pixel mean
     of a driver-side decode of the same payload, which a fallback row
     cannot)."""
@@ -136,7 +136,7 @@ def test_build_media_df_real_corpus(spark):
         if r["kind"] == "image":
             img = decode_image(bytes(r["payload"]))
             assert img.shape == (r["meta"]["height"], r["meta"]["width"], 3)
-    feats = extract_media_features(df, fake_decode=False).collect()
+    feats = extract_media_features(df).collect()
     assert len(feats) == 36
     by_id = {f["media_id"]: f for f in feats}
     from web_template_forensics_spark.functions.flac_codec import decode_flac, is_flac
@@ -162,8 +162,6 @@ def test_decode_stub_raises_without_fake():
 
     with pytest.raises(NotImplementedError):
         decode_image(b"abc")
-    img = decode_image(b"abc", fake=True)
-    assert img.ndim == 3 and img.shape[2] == 3 and img.dtype == np.uint8
 
 
 def test_frame_sampling():
@@ -552,7 +550,7 @@ def test_sample_video_frames_flood_gif_decodes_bounded(spark):
     media = spark.createDataFrame(
         [(0, "video", bytearray(payload), meta)], MEDIA_SCHEMA
     )
-    out = sample_video_frames(media, every_ms=1000, fake_decode=False).collect()
+    out = sample_video_frames(media, every_ms=1000).collect()
     assert len(out) == 3
     for r in out:
         # real decode: canvas is (nearly) all palette-0 black -> bin 0 ~ 1.0
@@ -584,7 +582,7 @@ def test_sample_video_frames_seeks_gif_and_webp(spark):
         ],
         MEDIA_SCHEMA,
     )
-    out = sample_video_frames(media, every_ms=1000, fake_decode=False).collect()
+    out = sample_video_frames(media, every_ms=1000).collect()
     assert len(out) == 8
 
     def feat(img):

@@ -212,8 +212,7 @@ def test_features_chunk_routes_real_wav_and_mjpeg(spark):
           "duration_ms": 4000, "codec": "mjpeg"}),
     ]
     df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r.media_id: r for r in
-           extract_media_features(df, fake_decode=False).collect()}
+    out = {r.media_id: r for r in extract_media_features(df).collect()}
     feat, tm = audio_features(s[:, None] if s.ndim == 1 else s)
     got = np.array(out[0].feat)
     assert np.abs(got - feat.astype(np.float32)).max() < 1e-7
@@ -237,7 +236,7 @@ def test_sample_video_frames_real_mjpeg(spark):
              {"width": 8, "height": 8, "sample_rate": None,
               "duration_ms": 4000, "codec": "mjpeg"})]
     df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = sample_video_frames(df, every_ms=1000, fake_decode=False).collect()
+    out = sample_video_frames(df, every_ms=1000).collect()
     assert [r.frame_no for r in sorted(out, key=lambda r: r.frame_no)] == [0, 1, 2, 3]
     # each sampled frame is flat-valued -> its histogram concentrates in
     # one bin, and the bin index advances with the frame value

@@ -1,34 +1,14 @@
 from .html_udfs import (  # noqa: F401
-    extract_meta_geo_udf,
-    extract_text_clean_udf,
     extract_text_udf,
     html_class_counts_udf,
-    parse_tree_json_udf,
-    tree_signature_udf,
 )
-from .geo_udfs import (  # noqa: F401
-    cell_encode_udf,
-    cell_center_lat_udf,
-    cell_center_lon_udf,
-    haversine_udf,
-    tile_x_udf,
-    tile_y_udf,
-)
+from .geo_udfs import cell_encode_udf  # noqa: F401
 from .similarity_udfs import (  # noqa: F401
-    hybrid_jaccard_udf,
     seq_ratio_udf,
     structure_compare_udf,
-    tree_similarity_udf,
-)
-from .code_udfs import (  # noqa: F401
-    compare_css_udf,
-    compare_js_udf,
-    css_rules_udf,
 )
 from .text_udfs import (  # noqa: F401
     doc_fingerprint_udf,
-    lang_id_udf,
-    minhash_udf,
     quality_score_udf,
     simhash64_udf,
     token_count_udf,

@@ -1,114 +1,11 @@
-"""CSS/JS comparison UDFs — the reference's C7-C16 operators as Arrow
-batches over the from-scratch oracles (css_oracle / js_oracle)."""
+"""Code-analysis UDFs: the tree-sitter JSX parse (P2) and the E2
+single-pair analysis as Arrow batches over the from-scratch oracles."""
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..oracle.css_oracle import compare_css, css_rule_rows
-from ..oracle.js_oracle import compare_js
-
-_CSS_SCHEMA = T.StructType(
-    [
-        T.StructField("css_similarity", T.DoubleType()),
-        T.StructField("matching_selectors", T.IntegerType()),
-        T.StructField("different_selectors", T.IntegerType()),
-        T.StructField("missing_selectors", T.IntegerType()),
-        T.StructField("extra_selectors", T.IntegerType()),
-    ]
-)
-
-
-@F.pandas_udf(_CSS_SCHEMA)
-def compare_css_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-    rows = []
-    for x, y in zip(a, b):
-        r = compare_css(x or "", y or "")
-        rows.append(
-            (
-                r["css_similarity"],
-                r["matching_selectors"],
-                r["different_selectors"],
-                r["missing_selectors"],
-                r["extra_selectors"],
-            )
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "css_similarity",
-            "matching_selectors",
-            "different_selectors",
-            "missing_selectors",
-            "extra_selectors",
-        ],
-    )
-
-
-_RULE_ROW = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("scope", T.StringType()),
-            T.StructField("selector", T.StringType()),
-            T.StructField("prop", T.StringType()),
-            T.StructField("value", T.StringType()),
-            T.StructField("important", T.BooleanType()),
-        ]
-    )
-)
-
-
-@F.pandas_udf(_RULE_ROW)
-def css_rules_udf(css: pd.Series) -> pd.Series:
-    """stylesheet -> exploded-ready rule rows (P4 relational shape)."""
-    return css.map(lambda s: css_rule_rows(s or ""))
-
-
-_JS_SCHEMA = T.StructType(
-    [
-        T.StructField("similarity", T.DoubleType()),
-        T.StructField("function_similarity", T.DoubleType()),
-        T.StructField("import_similarity", T.DoubleType()),
-        T.StructField("class_similarity", T.DoubleType()),
-        T.StructField("control_flow_similarity", T.DoubleType()),
-        T.StructField("call_graph_similarity", T.DoubleType()),
-        T.StructField("total_functions", T.IntegerType()),
-        T.StructField("matching_functions", T.IntegerType()),
-        T.StructField("different_functions", T.IntegerType()),
-        T.StructField("missing_functions", T.IntegerType()),
-        T.StructField("extra_functions", T.IntegerType()),
-    ]
-)
-
-
-@F.pandas_udf(_JS_SCHEMA)
-def compare_js_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-    rows = []
-    for x, y in zip(a, b):
-        r = compare_js(x or "", y or "")
-        d = r["details"]
-        rows.append(
-            (
-                r["similarity"],
-                d["function_similarity"],
-                d["import_similarity"],
-                d["class_similarity"],
-                d["control_flow_similarity"],
-                d["call_graph_similarity"],
-                d["total_functions"],
-                d["matching_functions"],
-                d["different_functions"],
-                d["missing_functions"],
-                d["extra_functions"],
-            )
-        )
-    return pd.DataFrame(
-        rows,
-        columns=[f.name for f in _JS_SCHEMA.fields],
-    )
-
 
 _PARSE_JSX_SCHEMA = T.StructType(
     [

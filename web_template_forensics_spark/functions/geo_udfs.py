@@ -28,49 +28,6 @@ def cell_encode_udf(level: int):
     return _enc
 
 
-def tile_x_udf(z: int):
-    @F.pandas_udf(T.LongType())
-    def _tx(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        ix, _ = cells.tile_of(lat.to_numpy(), lon.to_numpy(), z)
-        return pd.Series(ix)
-
-    return _tx
-
-
-def tile_y_udf(z: int):
-    @F.pandas_udf(T.LongType())
-    def _ty(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        _, iy = cells.tile_of(lat.to_numpy(), lon.to_numpy(), z)
-        return pd.Series(iy)
-
-    return _ty
-
-
-def cell_center_lat_udf():
-    @F.pandas_udf(T.DoubleType())
-    def _clat(cell: pd.Series) -> pd.Series:
-        lat, _ = cells.cell_center(cell.to_numpy())
-        return pd.Series(lat)
-
-    return _clat
-
-
-def cell_center_lon_udf():
-    @F.pandas_udf(T.DoubleType())
-    def _clon(cell: pd.Series) -> pd.Series:
-        _, lon = cells.cell_center(cell.to_numpy())
-        return pd.Series(lon)
-
-    return _clon
-
-
-@F.pandas_udf(T.DoubleType())
-def haversine_udf(lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series) -> pd.Series:
-    return pd.Series(
-        cells.haversine_m(lat1.to_numpy(), lon1.to_numpy(), lat2.to_numpy(), lon2.to_numpy())
-    )
-
-
 # ---------------------------------------------------------------------------
 # Pure-SQL Column builders (Catalyst-codegen'd; DuckDB-recomputable)
 # ---------------------------------------------------------------------------

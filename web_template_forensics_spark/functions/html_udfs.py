@@ -17,12 +17,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..oracle.html_oracle import (
-    extract_text,
-    parse_html_tree,
-    tree_stats,
-    tree_to_json,
-)
+from ..oracle.html_oracle import extract_text
 
 
 def _decode(html: object) -> str:
@@ -37,39 +32,6 @@ def _decode(html: object) -> str:
 def extract_text_udf(html: pd.Series) -> pd.Series:
     """html:binary -> oracle extracted text (the byte-identical invariant)."""
     return html.map(lambda b: extract_text(_decode(b)))
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_clean_udf(html: pd.Series) -> pd.Series:
-    """Practical variant: skips script/style/comments (not the oracle)."""
-    return html.map(lambda b: extract_text(_decode(b), clean=True))
-
-
-@F.pandas_udf(T.StringType())
-def parse_tree_json_udf(html: pd.Series) -> pd.Series:
-    """html -> canonical JSON of the reference parse tree (for compare UDFs)."""
-    return html.map(lambda b: tree_to_json(parse_html_tree(_decode(b))))
-
-
-_SIG_SCHEMA = T.StructType(
-    [
-        T.StructField("n_elements", T.IntegerType()),
-        T.StructField("n_text_nodes", T.IntegerType()),
-        T.StructField("top_tags", T.ArrayType(T.StringType())),
-    ]
-)
-
-
-@F.pandas_udf(_SIG_SCHEMA)
-def tree_signature_udf(html: pd.Series) -> pd.DataFrame:
-    """Cheap join-prefilter signature (the reference's node-count guard,
-    core/file_matcher.py:131-183, generalized)."""
-    rows = []
-    for b in html:
-        n_el, n_tx, hist = tree_stats(parse_html_tree(_decode(b)))
-        top = [t for t, _ in sorted(hist.items(), key=lambda kv: (-kv[1], kv[0]))[:5]]
-        rows.append((n_el, n_tx, top))
-    return pd.DataFrame(rows, columns=["n_elements", "n_text_nodes", "top_tags"])
 
 
 # Tailwind/utility class extraction (reference core/tailwind_analyzer.py:18-55).
@@ -121,31 +83,9 @@ _GEO_POS_RE = re.compile(
     re.IGNORECASE,
 )
 
-_GEO_SCHEMA = T.StructType(
-    [
-        T.StructField("meta_lat", T.DoubleType()),
-        T.StructField("meta_lon", T.DoubleType()),
-    ]
-)
-
 
 def head_slice(s: pd.Series) -> pd.Series:
     """Markup slice for <head>-scoped extraction: everything before the
-    first '</head>' (whole document when no close tag exists). ONE spec
-    shared by the fused (plans/pipeline.py) and unfused geocode paths so
-    both geocode identically regardless of head size."""
+    first '</head>' (whole document when no close tag exists); the
+    geocoder in plans/pipeline.py reads geo <meta> tags from it."""
     return s.str.split("</head>", n=1).str[0]
-
-
-@F.pandas_udf(_GEO_SCHEMA)
-def extract_meta_geo_udf(html: pd.Series) -> pd.DataFrame:
-    """Vectorized geo-metadata extraction: pandas .str.extract on the
-    decoded markup's head slice (regex runs in C, no per-row Python)."""
-    s = head_slice(html.map(_decode))
-    ext = s.str.extract(_GEO_POS_RE)
-    return pd.DataFrame(
-        {
-            "meta_lat": pd.to_numeric(ext[0], errors="coerce"),
-            "meta_lon": pd.to_numeric(ext[1], errors="coerce"),
-        }
-    )

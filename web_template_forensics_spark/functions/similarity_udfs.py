@@ -10,18 +10,12 @@ equi-join fan-outs (SURVEY.md §4.2 "candidate pruning").
 from __future__ import annotations
 
 import json
-from collections import Counter
 
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..oracle.similarity import (
-    compare_structures,
-    hybrid_jaccard,
-    seq_ratio,
-    tree_similarity,
-)
+from ..oracle.similarity import compare_structures, seq_ratio
 
 
 @F.pandas_udf(T.DoubleType())
@@ -30,17 +24,6 @@ def seq_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(
         [seq_ratio("" if x is None else x, "" if y is None else y) for x, y in zip(a, b)]
     )
-
-
-@F.pandas_udf(T.DoubleType())
-def tree_similarity_udf(a_json: pd.Series, b_json: pd.Series) -> pd.Series:
-    """Normalized-AST similarity (core/jsx_treesitter_parser.py:95-125)."""
-    out = []
-    for a, b in zip(a_json, b_json):
-        na = json.loads(a) if a else None
-        nb = json.loads(b) if b else None
-        out.append(tree_similarity(na, nb))
-    return pd.Series(out)
 
 
 _STRUCT_SCHEMA = T.StructType(
@@ -68,16 +51,6 @@ def structure_compare_udf(a_json: pd.Series, b_json: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(
         rows, columns=["score", "matching", "different", "missing", "extra"]
     )
-
-
-@F.pandas_udf(T.DoubleType())
-def hybrid_jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Tailwind hybrid similarity over class->count maps
-    (core/tailwind_analyzer.py:71-80)."""
-    out = []
-    for x, y in zip(a, b):
-        out.append(hybrid_jaccard(Counter(x or {}), Counter(y or {})))
-    return pd.Series(out)
 
 
 def _structure_size(filetype: str, content: str) -> int:

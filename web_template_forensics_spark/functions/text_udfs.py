@@ -404,14 +404,6 @@ def doc_fingerprint(text: str) -> int:
     return h
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def minhash_udf(text: pd.Series) -> pd.Series:
-    shs = _shingle_hash_batch([(t or "") for t in text])
-    return pd.Series(
-        [_minhash_from_shingles(hv).astype(np.int64).tolist() for hv in shs]
-    )
-
-
 @F.pandas_udf(
     T.StructType(
         [
@@ -421,11 +413,13 @@ def minhash_udf(text: pd.Series) -> pd.Series:
     )
 )
 def minhash_and_shingles_udf(text: pd.Series) -> pd.DataFrame:
-    """Signature AND distinct-shingle-hash array in ONE tokenize+md5 pass
-    (round 7): minhash_lsh_pairs previously ran minhash_udf and
-    shingle_hashes_udf as separate plan branches, so the text was
-    scanned and shingled twice (and, with broadcast build sides, four
-    times). Values are bitwise those of the two separate UDFs."""
+    """Signature AND distinct word-3-gram shingle hashes (sorted int64)
+    in ONE tokenize+md5 pass, so minhash_lsh_pairs scans and shingles the
+    text once. Values are bitwise those of ``minhash_signature`` and
+    ``shingle_hashes``. Jaccard over the ``sh`` arrays == Jaccard over the
+    shingle-string sets (collision probability ~ n^2/2^64), computable
+    JVM-side via array_intersect — the verification path never
+    re-shingles text in Python per pair."""
     shs = _shingle_hash_batch([(t or "") for t in text])
     return pd.DataFrame(
         {
@@ -433,16 +427,6 @@ def minhash_and_shingles_udf(text: pd.Series) -> pd.DataFrame:
             "sh": [hv.astype(np.int64).tolist() for hv in shs],
         }
     )
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def shingle_hashes_udf(text: pd.Series) -> pd.Series:
-    """Distinct word-3-gram shingle hashes (sorted int64). Jaccard over
-    these arrays == Jaccard over the shingle-string sets (collision
-    probability ~ n^2/2^64), computable JVM-side via array_intersect —
-    the verification path never re-shingles text in Python per pair."""
-    shs = _shingle_hash_batch([(t or "") for t in text])
-    return pd.Series([hv.astype(np.int64).tolist() for hv in shs])
 
 
 @F.pandas_udf(T.LongType())
@@ -482,21 +466,6 @@ def bpe_token_count_udf(text: pd.Series) -> pd.Series:
     # Python face of BPE_TOKEN_PATTERN (parity pytest-pinned vs the
     # Column and SQL faces).
     return text.fillna("").str.count(BPE_TOKEN_PATTERN).astype("int64")
-
-
-@F.pandas_udf(T.StringType())
-def lang_id_udf(text: pd.Series) -> pd.Series:
-    langs = sorted(LANG_MARKERS)
-    padded = " " + text.fillna("") + " "
-    scores = pd.DataFrame(
-        {
-            lg: sum(padded.str.count(f" {tok} ") for tok in LANG_MARKERS[lg])
-            for lg in langs
-        }
-    )
-    best = scores.max(axis=1)
-    winner = scores.idxmax(axis=1)  # first (alphabetical) on ties
-    return winner.where(best > 0, "und")
 
 
 @F.pandas_udf(T.DoubleType())

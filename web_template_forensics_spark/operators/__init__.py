@@ -8,4 +8,4 @@ from .dedup import (  # noqa: F401
     simhash_near_dup_pairs,
 )
 from .similarity_search import cosine_topk_bruteforce, cosine_topk_lsh  # noqa: F401
-from .matching import exact_match, greedy_similarity_match  # noqa: F401
+from .matching import greedy_similarity_match  # noqa: F401

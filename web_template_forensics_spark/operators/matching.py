@@ -27,16 +27,6 @@ _log = logging.getLogger(__name__)
 _warned_banded = False
 
 
-def exact_match(
-    left: DataFrame, right: DataFrame, key: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """J1: (matches, unmatched_left, unmatched_right)."""
-    matches = left.join(right.select(key).distinct(), key, "inner")
-    un_l = left.join(right, key, "left_anti")
-    un_r = right.join(left, key, "left_anti")
-    return matches, un_l, un_r
-
-
 def greedy_similarity_match(
     scored_pairs: DataFrame,
     left_col: str = "left_key",

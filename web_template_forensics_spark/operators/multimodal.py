@@ -22,18 +22,15 @@ dependency-free across all three modalities:
     in functions/jpeg_codec.iter_jpeg_frames + per-frame JPEG decode,
     and animated GIF via the same compositor.
 
-Remaining formats (lossy-VP8 WebP, compressed audio, MP4/H.264) still
-need libraries absent from this container:
-
-  * for such payloads ``decode_image`` raises ``NotImplementedError``
-    unless ``fake=True``, in which case a deterministic fake decoder
-    (seeded from the bytes) produces a (h, w, 3) uint8 array — same
-    shapes and dtypes a real decoder would emit, so the downstream
-    operators are fully exercised; the feature path falls back to the
-    byte-histogram stand-in for codec-less audio/video payloads AND for
-    sniffed-but-malformed ones (a RIFF header over an ADPCM or
-    truncated body, an SOI prefix over a broken MJPEG stream) — one bad
-    row degrades deterministically instead of failing the Spark task.
+Remaining formats (lossy-VP8 WebP, TIFF, compressed audio, MP4/H.264)
+need libraries this package does not depend on. ``decode_image`` raises
+``NotImplementedError`` for an unrecognized image format and a
+ValueError for a corrupt or unsupported-variant one. Every per-row
+operator here follows one rule for all kinds: a payload it cannot
+decode (codec-less, or sniffed but malformed, such as a RIFF header over
+an ADPCM body or an SOI prefix over a broken MJPEG stream) degrades THAT
+row to the byte-histogram stand-in (zero thumbnail for
+``image_thumbnails``) instead of failing the Spark task.
 
 At 100 TB the design rules are: binary payloads NEVER pass through a
 shuffle (feature-extract first, shuffle the small features); metadata is a
@@ -64,14 +61,10 @@ MEDIA_SCHEMA = (
 
 class UnsupportedVariantError(ValueError):
     """A recognized image format in a variant a codec declines with
-    ``NotImplementedError``. ValueError-family ON PURPOSE: per-row
-    fallbacks degrade such rows to the byte-histogram stand-in, while
-    the bare ``NotImplementedError`` from ``decode_image(fake=False)``
-    on an unrecognized format — the honest "no codec at all" seam —
-    keeps propagating loudly. As of the full-coverage PNG decoder
-    (every legal depth + Adam7) and the baseline+progressive JPEG
-    decoder no shipped codec path raises it; the wrapper stays as the
-    contract for future codecs."""
+    ``NotImplementedError`` (e.g. lossy VP8 WebP). ValueError-family so
+    it reads as "bad payload", distinct from the bare
+    ``NotImplementedError`` ``decode_image`` raises for an unrecognized
+    format ("no codec at all"); per-row operators degrade both."""
 
 FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes long, feat array<float>, "
@@ -125,7 +118,7 @@ def _hist8_pcm_int(v: np.ndarray) -> np.ndarray:
     return np.bincount(np.minimum((v + 32768) >> 13, 7), minlength=8)
 
 
-def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
+def decode_image(payload: bytes) -> np.ndarray:
     """bytes -> (h, w, 3) uint8.
 
     PNG and baseline JPEG payloads are decoded FOR REAL (round 5) by
@@ -135,19 +128,13 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
     SOF0 baseline, sampling to 2x2, restart markers) — then normalized
     to 3 channels (grey replicated, alpha dropped: the downstream
     features are RGB statistics). GIF and WebP-lossless decode for real
-    too (gif_codec / webp_codec). Remaining formats (lossy VP8, TIFF,
-    …) still need Pillow/opencv, absent in this container, and
-    raise ``NotImplementedError`` unless ``fake=True`` selects the
-    deterministic stub decoder (seeded from the bytes — same shapes and
-    dtypes a real decoder would emit). ``fake`` is a fallback permission
-    for codec-less formats, not an override: a real PNG/JPEG payload
-    decodes for real either way."""
+    too (gif_codec / webp_codec). Any other format (TIFF, …) raises
+    ``NotImplementedError``."""
     if payload[:8] == PNG_SIGNATURE:
         # Codec-level NotImplementedError (none today — future variant
         # gaps) is a VALID payload in an unsupported variant — surface it
         # as the ValueError-family UnsupportedVariantError so per-row
-        # fallbacks degrade it, distinct from the fake=False seam below
-        # which must stay loud ("you have no codec for this format").
+        # fallbacks degrade it, distinct from the no-codec seam below.
         try:
             img = decode_png(payload)
         except NotImplementedError as exc:
@@ -179,18 +166,10 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
         if img.ndim == 2:  # single-component scan
             return np.repeat(img[:, :, None], 3, axis=2)
         return img
-    if not fake:
-        raise NotImplementedError(
-            "image codecs beyond PNG/JPEG/GIF/WebP-lossless (Pillow/"
-            "opencv) are not available in this environment; pass "
-            "fake=True for the deterministic stub decoder"
-        )
-    h = 16 + (payload[0] % 16) if payload else 16
-    w = 16 + (payload[1] % 16) if len(payload) > 1 else 16
-    rng = np.frombuffer(
-        (payload * ((h * w * 3) // max(1, len(payload)) + 1))[: h * w * 3], dtype=np.uint8
+    raise NotImplementedError(
+        "no codec for this image format: codecs beyond PNG/JPEG/GIF/"
+        "WebP-lossless need Pillow/opencv"
     )
-    return rng.reshape(h, w, 3).copy()
 
 
 def frame_sample_indices(duration_ms: int, every_ms: int = 1000) -> np.ndarray:
@@ -200,7 +179,7 @@ def frame_sample_indices(duration_ms: int, every_ms: int = 1000) -> np.ndarray:
     return np.arange(0, duration_ms, every_ms, dtype=np.int64)
 
 
-def extract_media_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """media table -> small feature rows (the shuffle-safe projection).
 
     mapInPandas with byte-bounded rebatching: each yielded pandas frame
@@ -218,7 +197,7 @@ def extract_media_features(media: DataFrame, fake_decode: bool = True) -> DataFr
                 acc += int(s)
                 if acc >= max_bytes or i == len(pdf) - 1:
                     chunk = pdf.iloc[start : i + 1]
-                    yield _features_chunk(chunk, fake_decode)
+                    yield _features_chunk(chunk)
                     start = i + 1
                     acc = 0
 
@@ -292,7 +271,7 @@ def _byte_histogram_features(payload: bytes) -> tuple[np.ndarray, np.ndarray]:
     return feat / max(1.0, feat.sum()), np.zeros(3)
 
 
-def _features_chunk(pdf: pd.DataFrame, fake_decode: bool) -> pd.DataFrame:
+def _features_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
     rows = []
     # itertuples, not iterrows: the loop is inherently per-item (codec
     # call per payload) but iterrows materializes a Series per row
@@ -300,17 +279,16 @@ def _features_chunk(pdf: pd.DataFrame, fake_decode: bool) -> pd.DataFrame:
         payload = bytes(r.payload) if r.payload is not None else b""
         if r.kind == "image":
             # Same per-row rule as audio/video: a sniffed-but-corrupt
-            # PNG/JPEG (truncated entropy, bad CRC) AND any future
-            # valid-but-unsupported variant (UnsupportedVariantError,
-            # ValueError-family) degrade
-            # to the byte histogram; only the bare NotImplementedError
-            # from the fake=False no-codec seam propagates loudly.
+            # PNG/JPEG (truncated entropy, bad CRC), a valid-but-
+            # unsupported variant (UnsupportedVariantError) and a format
+            # with no codec (NotImplementedError) all degrade to the
+            # byte histogram.
             try:
-                img = decode_image(payload, fake=fake_decode)
+                img = decode_image(payload)
                 thumb = img.reshape(-1, 3).mean(axis=0) / 255.0
                 feat = _hist8_u8(img).astype(np.float64)
                 feat = feat / max(1.0, feat.sum())
-            except ValueError:
+            except (ValueError, NotImplementedError):
                 feat, thumb = _byte_histogram_features(payload)
         elif r.kind == "audio" and (is_wav(payload) or is_flac(payload)):
             # REAL codec path: RIFF/WAVE via wav_codec (PCM, IEEE
@@ -367,7 +345,9 @@ def _features_chunk(pdf: pd.DataFrame, fake_decode: bool) -> pd.DataFrame:
 
 
 def synth_media_df(spark, n: int = 100, seed: int = 7) -> DataFrame:
-    """Deterministic fake media table for tests (seeded payload bytes)."""
+    """Deterministic synthetic media table for plumbing tests: seeded
+    noise payloads that no codec decodes, so every row takes the
+    byte-histogram fallback."""
     rng = np.random.RandomState(seed)
     kinds = ["image", "audio", "video"]
     rows = []
@@ -398,9 +378,7 @@ def resize_image(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 THUMB_SCHEMA = "media_id long, thumb_h int, thumb_w int, thumb binary"
 
 
-def image_thumbnails(
-    media: DataFrame, out_h: int = 8, out_w: int = 8, fake_decode: bool = True
-) -> DataFrame:
+def image_thumbnails(media: DataFrame, out_h: int = 8, out_w: int = 8) -> DataFrame:
     """decode -> resize -> re-emit as a SMALL binary column (the
     shuffle-safe thumbnail projection; raw payloads never leave the map
     side). Image rows only."""
@@ -412,11 +390,11 @@ def image_thumbnails(
             for r in pdf[["payload", "media_id"]].itertuples(index=False):
                 payload = bytes(r.payload) if r.payload is not None else b""
                 try:
-                    img = decode_image(payload, fake=fake_decode)
+                    img = decode_image(payload)
                     thumb = resize_image(img, out_h, out_w).tobytes()
-                except ValueError:
-                    # corrupt OR valid-but-unsupported-variant payload
-                    # (UnsupportedVariantError) -> zero thumbnail, row kept
+                except (ValueError, NotImplementedError):
+                    # corrupt, unsupported-variant or codec-less payload
+                    # -> zero thumbnail, row kept
                     thumb = bytes(out_h * out_w * 3)
                 rows.append((int(r.media_id), out_h, out_w, thumb))
             yield pd.DataFrame(rows, columns=["media_id", "thumb_h", "thumb_w", "thumb"])
@@ -455,18 +433,16 @@ def _position_keyed_frames(
     return {p: by_idx[i][:, :, :3] for p, i in idx_for.items()}
 
 
-def sample_video_frames(
-    media: DataFrame, every_ms: int = 1000, fake_decode: bool = True
-) -> DataFrame:
+def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame sampling as an exploding map: each video row yields one
     feature row per sampled position (frame_sample_indices). MJPEG
     payloads (round 5) seek FOR REAL: the structural framing walk maps
     position_ms to a frame index (constant frame spacing over
     duration_ms, the MJPEG convention) and only the sampled frames are
     decoded; animated GIF/WebP composite once and positions index the
-    frame list. Other containers use the stubbed deterministic path (a
-    real pipeline seeks via the container index); payload bytes stay
-    map-side either way."""
+    frame list. A position with no decodable frame (other containers,
+    corrupt frames) gets the byte histogram of the payload; payload
+    bytes stay map-side either way."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -487,7 +463,7 @@ def sample_video_frames(
                     # structural walk yields OFFSETS — only the sampled
                     # frames below are ever sliced; a malformed stream
                     # (SOI prefix over a truncated capture) falls back to
-                    # the stub path instead of failing the task
+                    # the byte histogram instead of failing the task
                     try:
                         spans = list(iter_jpeg_frame_spans(payload))
                     except ValueError:
@@ -521,7 +497,7 @@ def sample_video_frames(
                         try:
                             img = decode_image(payload[s:e])
                         except (ValueError, NotImplementedError):
-                            img = None  # bad frame -> stub for this position
+                            img = None  # bad frame -> fallback for this position
                     elif frames:
                         img = frames.get(int(pos))
                     if img is None:
@@ -529,12 +505,9 @@ def sample_video_frames(
                         lo = int(pos) % max(1, len(payload))
                         chunk = payload[lo:] + payload[:lo]
                         try:
-                            img = decode_image(chunk, fake=fake_decode)
-                        except ValueError:
-                            # the rotated chunk itself sniffed as PNG/JPEG
-                            # but is corrupt — histogram the raw bytes
-                            # (NotImplementedError, the honest codec seam
-                            # with fake_decode=False, still propagates)
+                            img = decode_image(chunk)
+                        except (ValueError, NotImplementedError):
+                            # corrupt or codec-less: histogram the raw bytes
                             img = None
                     if img is None:
                         feat, _ = _byte_histogram_features(chunk)

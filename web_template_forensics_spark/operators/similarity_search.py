@@ -63,7 +63,6 @@ def cosine_topk_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     exclude_self: bool = True,
-    broadcast_corpus: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k -> (probe_id, neighbor_id, rank, cosine).
 
@@ -82,10 +81,8 @@ def cosine_topk_bruteforce(
     replicates the JVM fold's float64 operation order exactly
     (``_seqfold_dot``/``_seqfold_norm``), and top-k-of-union ==
     union-of-per-batch-top-k under the total order (at most one self
-    pair per probe, hence k+1). ``broadcast_corpus`` is kept for API
-    compatibility; the corpus is never broadcast nor collected by the
-    new shape (it streams through the map side), which is strictly
-    better at every scale.
+    pair per probe, hence k+1). The corpus is never broadcast nor
+    collected: it streams through the map side.
     """
     probe_pdf = probes.select(
         F.col(id_col).alias("probe_id"), F.col(vec_col).alias("p_vec")

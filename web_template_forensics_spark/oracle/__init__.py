@@ -1,6 +1,5 @@
 from .html_oracle import (  # noqa: F401
     extract_text,
     parse_html_tree,
-    tree_stats,
     tree_to_json,
 )

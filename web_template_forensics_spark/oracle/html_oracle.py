@@ -416,23 +416,6 @@ def extract_text(html_content: str, clean: bool = False) -> str:
     return "\n".join(out)
 
 
-def tree_stats(node: dict[str, Any]) -> tuple[int, int, dict[str, int]]:
-    """(n_elements, n_text_nodes, tag histogram) — cheap join-prefilter signature."""
-    n_el = 0
-    n_tx = 0
-    hist: dict[str, int] = {}
-    stack = [node]
-    while stack:
-        cur = stack.pop()
-        if cur["type"] == "text":
-            n_tx += 1
-            continue
-        n_el += 1
-        hist[cur["tag"]] = hist.get(cur["tag"], 0) + 1
-        stack.extend(cur["children"])
-    return n_el, n_tx, hist
-
-
 def tree_to_json(node: dict[str, Any]) -> str:
     """Canonical JSON encoding (sorted keys, no whitespace) for tree columns."""
     return json.dumps(node, sort_keys=True, separators=(",", ":"), ensure_ascii=False)

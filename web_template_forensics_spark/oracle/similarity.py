@@ -12,7 +12,6 @@ Reference citations (hemrajbhakar/web-template-forensics):
   * set_jaccard         — core/tailwind_analyzer.py:63-69 (both empty -> 1.0)
   * multiset_jaccard    — core/tailwind_analyzer.py:57-61
     (freq-weighted: sum(min)/sum(max) over the union of keys)
-  * hybrid_jaccard      — core/tailwind_analyzer.py:80 (0.5 * each)
   * tree_similarity     — core/jsx_treesitter_parser.py:95-125 (leaf value
     equality 1.0 / one-side-None 0.8 / 0.0; greedy O(n^2) child match
     normalized by max(len))
@@ -71,10 +70,6 @@ def multiset_jaccard(c1: Counter, c2: Counter) -> float:
     if union_total == 0:
         return 1.0
     return sum(inter.values()) / union_total
-
-
-def hybrid_jaccard(c1: Counter, c2: Counter) -> float:
-    return 0.5 * multiset_jaccard(c1, c2) + 0.5 * set_jaccard(set(c1), set(c2))
 
 
 def tree_similarity(node1: dict | None, node2: dict | None) -> float:

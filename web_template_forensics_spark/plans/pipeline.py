@@ -13,12 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.geo_udfs import cell_encode_udf
-from ..functions.html_udfs import extract_text_udf
 from ..geo.polygons import Polygon
 from ..operators.spatial_join import pip_join
 from ..operators.tiles import tile_rollup
-from ..sources.pages import build_pages_df, geocode_pages
+from ..sources.pages import build_pages_df
 
 CELL_LEVEL = 12
 TILE_Z = 5
@@ -42,29 +40,6 @@ def world_polygons() -> list[Polygon]:
         Polygon.make(pid, "antimeridian", [[(-30.0, 170.0), (-30.0, -170.0), (0.0, -170.0), (0.0, 170.0)]])
     )
     return polys
-
-
-def pages_to_geo(
-    spark: SparkSession, pages: DataFrame, verify_text: bool = False
-) -> DataFrame:
-    """Geocoded pages with cell ids. verify_text adds a ``_text_ok`` column
-    (oracle UDF output == stored text) so the invariant is checked inside
-    the SAME pass instead of a second scan."""
-    if verify_text:
-        pages = pages.withColumn(
-            "_text_ok", (extract_text_udf("html") == F.col("text")).cast("int")
-        )
-    geo = geocode_pages(spark, pages)
-    # null-safe: cell_encode on NaN would int64-cast to INT64_MIN and
-    # clip to the lat-90/lon-180 corner cell — ungeocoded rows must keep
-    # cell_id null (the fused path guards identically with its ok mask)
-    return geo.withColumn(
-        "cell_id",
-        F.when(
-            F.col("lat").isNotNull() & F.col("lon").isNotNull(),
-            cell_encode_udf(CELL_LEVEL)(F.col("lat"), F.col("lon")),
-        ),
-    )
 
 
 _FUSED_SCHEMA = (
@@ -104,7 +79,7 @@ def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame
             else:
                 text_ok = pd.Series(np.ones(len(pdf), dtype="int32"))
             # meta geo override — geo <meta> tags live in <head>; regex only
-            # the head slice (shared spec with extract_meta_geo_udf)
+            # the head slice
             ext = head_slice(html).str.extract(_GEO_POS_RE)
             meta_lat = pd.to_numeric(ext[0], errors="coerce").to_numpy()
             meta_lon = pd.to_numeric(ext[1], errors="coerce").to_numpy()
@@ -130,7 +105,12 @@ def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame
             lat = np.where(~np.isnan(meta_lat), meta_lat, h_lat)
             lon = np.where(~np.isnan(meta_lon), meta_lon, h_lon)
             ok = ~np.isnan(lat) & ~np.isnan(lon)
-            cell = np.where(ok, cell_encode(np.nan_to_num(lat), np.nan_to_num(lon), level), -1)
+            # ungeocoded rows keep cell_id null, like lat/lon; a nullable
+            # Int64 array, since a float detour would round ids above 2**53
+            cell = pd.array(
+                cell_encode(np.nan_to_num(lat), np.nan_to_num(lon), level), dtype="Int64"
+            )
+            cell[~ok] = pd.NA
             out = pd.DataFrame(
                 {
                     "url": url,
@@ -142,7 +122,7 @@ def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame
                     "text_ok": text_ok,
                     "lat": lat,
                     "lon": lon,
-                    "cell_id": pd.array(cell, dtype="int64"),
+                    "cell_id": cell,
                 }
             )
             out.loc[~ok, ["lat", "lon"]] = None

@@ -2083,9 +2083,9 @@ def q_multimodal_features(spark, sf_dir):
     restart specs, RIFF/WAVE PCM audio across bit depths/channels, and
     MJPEG video incl. a frame-sampled stream — all encoded by the
     package's own dependency-free codecs) goes through the REAL
-    distributed path — ``extract_media_features`` with
-    ``fake_decode=False``, i.e. mapInPandas with byte-bounded rebatching
-    and genuine decode on executors — and the features come out
+    distributed path — ``extract_media_features``, i.e. mapInPandas
+    with byte-bounded rebatching and genuine decode on executors — and
+    the features come out
     micro-quantized to exact integers. The DuckDB face is a VALUES
     table computed by the Spark-free twin: PNG and WAV expectations
     derive from the ORIGINAL pre-encoding pixels/samples (lossless ⇒
@@ -2116,7 +2116,7 @@ def q_multimodal_features(spark, sf_dir):
         for r in corpus
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = extract_media_features(media, fake_decode=False)
+    feats = extract_media_features(media)
     src = media.select(
         "media_id",
         F.col("meta.codec").alias("codec"),

@@ -11,9 +11,9 @@ byte-identical payloads, which is what lets the bench cache the corpus
 to parquet and lets tests decode rows independently.
 
 This is the real-codec sibling of
-``operators.multimodal.synth_media_df`` (seeded noise bytes, for
-plumbing tests): here every payload round-trips through the package's
-own encoders, so ``extract_media_features(fake_decode=False)`` over
+``operators.multimodal.synth_media_df`` (seeded noise bytes that no
+codec decodes, for plumbing tests): here every payload round-trips
+through the package's own encoders, so ``extract_media_features`` over
 this table measures actual decode throughput with zero fallback rows.
 
 Reference parity: the reference repo has no binary-asset path at all

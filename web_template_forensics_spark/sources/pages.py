@@ -240,67 +240,6 @@ def gen_pages_pdf(
     return pd.DataFrame(rows)
 
 
-def host_geo_udf():
-    """(host_id, anchor_lat, anchor_lon) -> struct(h_lat, h_lon): the
-    vectorized TLD-anchor geocoder (numpy re-statement of geocode_host)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [T.StructField("h_lat", T.DoubleType()), T.StructField("h_lon", T.DoubleType())]
-    )
-
-    @F.pandas_udf(schema)
-    def _geo(host: pd.Series, a_lat: pd.Series, a_lon: pd.Series) -> pd.DataFrame:
-        # null host_id (foreign url) or null anchor (unknown tld) must
-        # yield null coords, not a fabricated anchor-jittered point
-        ok = host.notna().to_numpy() & a_lat.notna().to_numpy()
-        hm = splitmix64(host.fillna(0).to_numpy().astype(np.uint64))
-        lat = a_lat.fillna(0.0).to_numpy() + (
-            (hm % np.uint64(4001)).astype(np.float64) - 2000.0
-        ) / 1000.0
-        lon = a_lon.fillna(0.0).to_numpy() + (
-            ((hm // np.uint64(4096)) % np.uint64(8001)).astype(np.float64) - 4000.0
-        ) / 1000.0
-        lon = np.where(lon >= 180.0, lon - 360.0, lon)
-        lon = np.where(lon < -180.0, lon + 360.0, lon)
-        return pd.DataFrame(
-            {"h_lat": np.where(ok, lat, np.nan), "h_lon": np.where(ok, lon, np.nan)}
-        )
-
-    return _geo
-
-
-def geocode_pages(spark, pages):
-    """pages(url, html, ...) -> + (lat, lon): embedded geo-metadata wins,
-    else the TLD-anchor + host-hash geocode. Null lat/lon when neither
-    applies (counted by the pipeline metrics, excluded downstream)."""
-    from pyspark.sql import functions as F
-
-    from ..functions.html_udfs import extract_meta_geo_udf
-
-    anchors = [(tld, lat, lon) for tld, (lat, lon, _) in TLD_ANCHORS.items()]
-    anchors_df = spark.createDataFrame(anchors, "tld string, a_lat double, a_lon double")
-    # nullif: regexp_extract yields '' on non-matching urls, and under
-    # ANSI mode ''.cast(long) aborts the job — foreign urls must geocode
-    # to null (the documented contract), not crash
-    host_id = F.nullif(
-        F.regexp_extract("url", r"https://h(\d+)\.", 1), F.lit("")
-    ).cast("long")
-    tld = F.regexp_extract("url", r"\.([a-z]+)/", 1)
-    geo = (
-        pages.withColumn("_meta", extract_meta_geo_udf("html"))
-        .withColumn("_host_id", host_id)
-        .withColumn("_tld", tld)
-        .join(F.broadcast(anchors_df), F.col("_tld") == F.col("tld"), "left")
-        .withColumn("_hg", host_geo_udf()("_host_id", "a_lat", "a_lon"))
-        .withColumn("lat", F.coalesce(F.col("_meta.meta_lat"), F.col("_hg.h_lat")))
-        .withColumn("lon", F.coalesce(F.col("_meta.meta_lon"), F.col("_hg.h_lon")))
-        .drop("_meta", "_hg", "_host_id", "_tld", "tld", "a_lat", "a_lon")
-    )
-    return geo
-
-
 def build_pages_df(
     spark,
     n_rows: int,
