@@ -24,6 +24,8 @@ FAST_SUBSET = [
     "audio_fp_near_dup",      # r5: perceptual audio dedup (audio x dedup)
     "video_fp_near_dup",      # r5: perceptual video dedup — triad complete
     "simhash_pairs_stream",   # r5: STREAMING near-dup == batch oracle
+    "cell_hierarchy",         # Column parent + k-ring under the oracle
+    "knn_k5",                 # Column ring rounds of the kNN join
 ]
 
 
@@ -66,3 +68,29 @@ def test_fast_oracle_subset(spark):
         if problems:
             failures[name] = problems
     assert not failures, failures
+
+
+def test_cell_path_has_no_python_hop(spark):
+    """The WGQ cell, parent and k-ring math runs as JVM expressions: no
+    Python evaluation node in the executed plans of the cell queries, nor
+    in the (persisted) kNN result, whose plan string includes the plans of
+    the cached relations it was built from."""
+    from pyspark.sql import functions as F
+
+    from web_template_forensics_spark.operators.spatial_join import knn_join
+    from web_template_forensics_spark.plans.queries import QUERIES, doc_points
+
+    def python_nodes(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return [n for n in ("ArrowEvalPython", "BatchEvalPython") if n in plan]
+
+    for name in ("doc_cells", "cell_hierarchy"):
+        df = QUERIES[name](spark, SF)
+        df.collect()
+        assert python_nodes(df) == [], name
+    pts = doc_points(spark, SF).withColumnRenamed("doc_id", "id")
+    knn = knn_join(spark, pts.filter(F.col("id") % 10 == 0), pts, k=3, level=4)
+    try:
+        assert python_nodes(knn) == []
+    finally:
+        knn.unpersist()

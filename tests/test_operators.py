@@ -9,31 +9,112 @@ from pyspark.sql import functions as F
 from web_template_forensics_spark.geo import cells
 
 
-def test_cell_udf_matches_sql_columns(spark):
-    """Arrow UDF and pure-SQL morton column must agree exactly."""
+def _edge_points(level, rng, n_random=300):
+    """Random points plus the poles, the lon extremes and exact cell edges."""
+    cell = 2.0 ** -level
+    edge_lat = [90.0, -90.0, 0.0, 90.0 - 180.0 * cell, -90.0 + 180.0 * cell]
+    edge_lon = [-180.0, float(np.nextafter(180.0, 0.0)), 0.0, -180.0 + 360.0 * cell, 180.0 - 360.0 * cell]
+    lat = np.concatenate([rng.uniform(-90, 90, n_random), np.repeat(edge_lat, len(edge_lon))])
+    lon = np.concatenate([rng.uniform(-180, 180, n_random), np.tile(edge_lon, len(edge_lat))])
+    return lat, lon
+
+
+def test_cell_id_col_matches_spec_row_by_row(spark):
+    """The Column encoder equals ``cells.cell_encode`` on every row, edges
+    included (poles, lon -180 and just below 180, exact cell boundaries)."""
     from web_template_forensics_spark.functions.geo_udfs import (
-        cell_encode_udf,
         cell_id_col,
         tile_ix_col,
         tile_iy_col,
     )
 
     rng = np.random.RandomState(3)
-    pdf = pd.DataFrame(
-        {"lat": rng.uniform(-89, 89, 500), "lon": rng.uniform(-180, 179.9, 500)}
-    )
+    levels = (0, 1, 4, 12, 26)
+    frames = []
+    for lvl in levels:
+        lat, lon = _edge_points(lvl, rng)
+        frames.append(pd.DataFrame({"level": lvl, "lat": lat, "lon": lon}))
+    pdf = pd.concat(frames, ignore_index=True)
+    pdf.insert(0, "i", np.arange(len(pdf)))
     df = spark.createDataFrame(pdf)
-    lvl = 12
-    out = df.select(
-        cell_encode_udf(lvl)(F.col("lat"), F.col("lon")).alias("udf_cell"),
-        cell_id_col(F.col("lat"), F.col("lon"), lvl).alias("sql_cell"),
-        tile_ix_col(F.col("lon"), lvl).alias("ix"),
-        tile_iy_col(F.col("lat"), lvl).alias("iy"),
-    ).toPandas()
-    assert (out.udf_cell == out.sql_cell).all()
-    # and both agree with the numpy spec
-    spec = cells.cell_encode(pdf.lat.to_numpy(), pdf.lon.to_numpy(), lvl)
-    assert np.array_equal(np.sort(out.udf_cell.to_numpy()), np.sort(spec))
+    cols = []
+    for lvl in levels:
+        lat, lon = F.col("lat"), F.col("lon")
+        cols += [
+            cell_id_col(lat, lon, lvl).alias(f"cell_{lvl}"),
+            tile_ix_col(lon, lvl).alias(f"ix_{lvl}"),
+            tile_iy_col(lat, lvl).alias(f"iy_{lvl}"),
+        ]
+    out = df.select("i", "level", *cols).orderBy("i").toPandas()
+    assert np.array_equal(out.i.to_numpy(), pdf.i.to_numpy())
+    for lvl in levels:
+        rows = (out.level == lvl).to_numpy()
+        lat, lon = pdf.lat.to_numpy()[rows], pdf.lon.to_numpy()[rows]
+        ix, iy = cells.lonlat_to_ij(lat, lon, lvl)
+        assert np.array_equal(out[f"ix_{lvl}"].to_numpy()[rows], ix), lvl
+        assert np.array_equal(out[f"iy_{lvl}"].to_numpy()[rows], iy), lvl
+        assert np.array_equal(out[f"cell_{lvl}"].to_numpy()[rows], cells.cell_encode(lat, lon, lvl)), lvl
+
+
+def test_cell_builders_reject_out_of_range_levels(spark):
+    """Like ``cells.cell_encode``, the Column builders refuse a level outside
+    [0, 26] when the expression is built; at level 27 the Morton bits would
+    run into the level field."""
+    from web_template_forensics_spark.functions.geo_udfs import (
+        cell_from_ij_col,
+        cell_id_col,
+        k_ring_col,
+    )
+
+    for lvl in (-1, 27):
+        with pytest.raises(ValueError, match="level must be in"):
+            cells.cell_encode(0.0, 0.0, lvl)
+        with pytest.raises(ValueError, match="level must be in"):
+            cell_id_col(F.col("lat"), F.col("lon"), lvl)
+        with pytest.raises(ValueError, match="level must be in"):
+            cell_from_ij_col(F.col("ix"), F.col("iy"), lvl)
+        with pytest.raises(ValueError, match="level must be in"):
+            k_ring_col(F.col("ix"), F.col("iy"), lvl, 1)
+
+
+def test_parent_and_k_ring_cols_match_spec(spark):
+    """Column parent, k-ring and the kNN round rings equal the spec's
+    ``cell_parent``, ``k_ring`` and ``k_ring_shell`` per row, including
+    the level 0-2 disks that fold onto themselves through the lon wrap."""
+    from web_template_forensics_spark.functions.geo_udfs import (
+        cell_from_ij_col,
+        k_ring_col,
+        tile_ix_col,
+        tile_iy_col,
+    )
+    from web_template_forensics_spark.operators.spatial_join import _round_cells
+
+    rng = np.random.RandomState(8)
+    lat, lon = _edge_points(4, rng, n_random=200)
+    pdf = pd.DataFrame({"i": np.arange(len(lat)), "lat": lat, "lon": lon})
+    df = spark.createDataFrame(pdf)
+    pairs = [(0, 1), (1, 1), (1, 2), (2, 3), (3, 1), (4, 4), (4, 9), (12, 1), (26, 2)]
+    cols = []
+    for j, (lvl, k) in enumerate(pairs):
+        ix, iy = tile_ix_col(F.col("lon"), lvl), tile_iy_col(F.col("lat"), lvl)
+        shift = lvl // 2
+        cols += [
+            cell_from_ij_col(F.shiftright(ix, shift), F.shiftright(iy, shift), lvl - shift).alias(f"parent_{j}"),
+            k_ring_col(ix, iy, lvl, k).alias(f"ring_{j}"),
+            _round_cells(ix, iy, lvl, k).alias(f"round_{j}"),
+        ]
+    out = df.select("i", *cols).orderBy("i").toPandas()
+    assert np.array_equal(out.i.to_numpy(), pdf.i.to_numpy())
+    for j, (lvl, k) in enumerate(pairs):
+        cell = cells.cell_encode(lat, lon, lvl)
+        assert np.array_equal(out[f"parent_{j}"].to_numpy(), cells.cell_parent(cell, lvl - lvl // 2)), (lvl, k)
+        for row in range(len(pdf)):
+            c = int(cell[row])
+            ring = np.asarray(out[f"ring_{j}"][row], dtype=np.int64)
+            assert np.array_equal(np.sort(ring), cells.k_ring(c, k)), (lvl, k, row)
+            want = cells.k_ring(c, k) if k == 1 else cells.k_ring_shell(c, k)
+            got = np.asarray(out[f"round_{j}"][row], dtype=np.int64)
+            assert np.array_equal(np.sort(got), want), (lvl, k, row)
 
 
 def test_raster_vector_roundtrip(spark):
@@ -657,6 +738,38 @@ def test_knn_all_points_one_cell(spark):
         rows.extend((pid, j, r, dd) for r, (dd, j) in enumerate(order, 1))
     exp = pd.DataFrame(rows, columns=["probe_id", "neighbor_id", "rank", "dist2"])
     assert len(out) == len(exp)
+    assert (out.neighbor_id.to_numpy() == exp.neighbor_id.to_numpy()).all()
+    assert np.array_equal(out.dist2.to_numpy(), exp.dist2.to_numpy())
+
+
+def test_knn_level_one_folded_ring_matches_bruteforce(spark):
+    """At level 1 the k=1 disk folds onto itself (ix - 1 and ix + 1 are the
+    same column of the 2x2 grid), so every corpus cell appears twice in the
+    raw ring. The join must still find each neighbour once and equal
+    brute force exactly."""
+    from web_template_forensics_spark.operators.spatial_join import knn_join
+
+    rng = np.random.RandomState(12)
+    n = 80
+    pdf = pd.DataFrame(
+        {"id": np.arange(n), "lat": rng.uniform(-85, 85, n), "lon": rng.uniform(-180, 179, n)}
+    )
+    df = spark.createDataFrame(pdf)
+    out = (
+        knn_join(spark, df, df, k=3, level=1)
+        .toPandas()
+        .sort_values(["probe_id", "rank"])
+        .reset_index(drop=True)
+    )
+    lats, lons = pdf.lat.to_numpy(), pdf.lon.to_numpy()
+    rows = []
+    for pid in range(n):
+        d2 = (lats[pid] - lats) ** 2 + (lons[pid] - lons) ** 2
+        order = sorted((float(d2[j]), j) for j in range(n) if j != pid)[:3]
+        rows.extend((pid, j, r, dd) for r, (dd, j) in enumerate(order, 1))
+    exp = pd.DataFrame(rows, columns=["probe_id", "neighbor_id", "rank", "dist2"])
+    assert len(out) == len(exp)
+    assert (out.probe_id.to_numpy() == exp.probe_id.to_numpy()).all()
     assert (out.neighbor_id.to_numpy() == exp.neighbor_id.to_numpy()).all()
     assert np.array_equal(out.dist2.to_numpy(), exp.dist2.to_numpy())
 

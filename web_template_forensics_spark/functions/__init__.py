@@ -2,7 +2,6 @@ from .html_udfs import (  # noqa: F401
     extract_text_udf,
     html_class_counts_udf,
 )
-from .geo_udfs import cell_encode_udf  # noqa: F401
 from .similarity_udfs import (  # noqa: F401
     seq_ratio_udf,
     structure_compare_udf,

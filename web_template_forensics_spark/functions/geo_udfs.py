@@ -1,36 +1,24 @@
-"""Geo column functions: numpy-vectorized pandas UDFs over the WGQ spec
-plus pure-SQL Column builders for the oracle-checkable paths.
+"""Geo Column builders: the WGQ cell math as Spark SQL expressions.
 
-Two faces for the same math:
-  * ``*_udf``   — Arrow-batched numpy (zero per-row Python), for the
-    pipeline hot path.
-  * ``*_col``   — pure Spark SQL Column expressions (floor/bit ops only),
-    letting Catalyst codegen the whole stage JVM-side AND letting the
-    DuckDB oracle recompute identical values from the same ANSI SQL.
-Both are tested to agree exactly with :mod:`..geo.cells`.
+One face: every builder returns a pure Column expression (floor, bit ops
+and array higher-order functions), so Catalyst runs the whole stage in the
+JVM with no Python round-trip. The ``*_sql`` string twins let the DuckDB
+oracle recompute identical values from the same ANSI SQL.
+:mod:`..geo.cells` is the numpy reference spec; the builders are tested to
+agree with it exactly, row by row.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..geo import cells
 
 
-def cell_encode_udf(level: int):
-    @F.pandas_udf(T.LongType())
-    def _enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(cells.cell_encode(lat.to_numpy(), lon.to_numpy(), level))
-
-    return _enc
-
-
-# ---------------------------------------------------------------------------
-# Pure-SQL Column builders (Catalyst-codegen'd; DuckDB-recomputable)
-# ---------------------------------------------------------------------------
+def _check_level(level: int) -> None:
+    if not 0 <= level <= cells.MAX_LEVEL:
+        raise ValueError(f"level must be in [0, {cells.MAX_LEVEL}], got {level}")
 
 
 def tile_ix_col(lon: Column, z: int) -> Column:
@@ -56,10 +44,39 @@ def morton_col(ix: Column, iy: Column, level: int) -> Column:
     return expr
 
 
+def cell_from_ij_col(ix: Column, iy: Column, level: int) -> Column:
+    """``(level << 52) | morton(ix, iy)`` — the spec's ``cell_from_ij``."""
+    _check_level(level)
+    return F.lit(level << 52).cast("long") + morton_col(ix.cast("long"), iy.cast("long"), level)
+
+
 def cell_id_col(lat: Column, lon: Column, level: int) -> Column:
-    ix = tile_ix_col(lon, level)
-    iy = tile_iy_col(lat, level)
-    return (F.lit(level).cast("long") * F.lit(1 << 52).cast("long")) + morton_col(ix, iy, level)
+    _check_level(level)  # before tile_*_col, where 1 << -1 raises its own error
+    return cell_from_ij_col(tile_ix_col(lon, level), tile_iy_col(lat, level), level)
+
+
+def k_ring_col(ix: Column, iy: Column, level: int, k: int) -> Column:
+    """``array<bigint>`` of the cells within Chebyshev distance ``k`` of
+    (ix, iy) — the spec's ``k_ring``, in no particular order.
+
+    Longitude wraps and rows past the poles are dropped. ``array_distinct``
+    matters: at low levels the disk folds onto itself (at level 1, ix-1 and
+    ix+1 are the same column), and the spec's ``np.unique`` keeps one copy.
+    """
+    _check_level(level)
+    n = F.lit(1 << level).cast("long")
+    offsets = F.sequence(F.lit(-k), F.lit(k))
+    return F.array_distinct(
+        F.flatten(
+            F.transform(
+                offsets,
+                lambda dx: F.transform(
+                    F.filter(offsets, lambda dy: (iy + dy >= 0) & (iy + dy < n)),
+                    lambda dy: cell_from_ij_col(F.pmod(ix + dx, n), iy + dy, level),
+                ),
+            )
+        )
+    )
 
 
 def tile_ix_sql(lon_expr: str, z: int) -> str:
@@ -84,9 +101,3 @@ def morton_sql(ix_expr: str, iy_expr: str, level: int) -> str:
         terms.append(f"((({ix_expr}) >> {b}) % 2) * {1 << (2 * b)}")
         terms.append(f"((({iy_expr}) >> {b}) % 2) * {1 << (2 * b + 1)}")
     return "(" + " + ".join(terms) + ")"
-
-
-def cell_id_sql(lat_expr: str, lon_expr: str, level: int) -> str:
-    ix = tile_ix_sql(lon_expr, level)
-    iy = tile_iy_sql(lat_expr, level)
-    return f"({level} * {1 << 52} + {morton_sql(ix, iy, level)})"

@@ -28,8 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.geo_udfs import cell_encode_udf
-from ..geo.cells import cell_decode, cell_from_ij, k_ring_shell
+from ..functions.geo_udfs import cell_id_col, k_ring_col, tile_ix_col, tile_iy_col
 from ..geo.polygons import Polygon, build_cell_index, points_in_polygon
 
 
@@ -46,8 +45,6 @@ def pip_join(
 
     points: DataFrame with (id, lat, lon). polygons: broadcast side data.
     """
-    from ..functions.geo_udfs import cell_id_col
-
     index = build_cell_index(polygons, index_level)
     index_rows = [(c, p) for c, ps in index.items() for p in ps]
     index_df = spark.createDataFrame(index_rows, schema="cell_id long, poly_id long")
@@ -81,28 +78,18 @@ def pip_join(
     )
 
 
-_RING_SCHEMA = T.ArrayType(T.LongType())
+def _round_cells(ix, iy, level: int, r: int):
+    """Cells kNN round ``r`` searches around probe cell (ix, iy).
 
-
-def _ring_shell_udf(r: int, include_inner: bool = False):
-    """Cells at Chebyshev distance exactly r (or the whole disk <= r when
-    ``include_inner``). Cached per distinct cell within the Arrow batch."""
-
-    @F.pandas_udf(_RING_SCHEMA)
-    def _shell(cell: pd.Series) -> pd.Series:
-        from ..geo.cells import k_ring
-
-        cache: dict[int, list[int]] = {}
-        out = []
-        for c in cell:
-            c = int(c)
-            if c not in cache:
-                cells_arr = k_ring(c, r) if include_inner else k_ring_shell(c, r)
-                cache[c] = cells_arr.astype(np.int64).tolist()
-            out.append(cache[c])
-        return pd.Series(out)
-
-    return _shell
+    Round 1 takes the whole disk <= 1 (ring 0 alone can never prove
+    coverage, its guarantee radius is 0); round r > 1 takes only the shell
+    at distance r (the spec's ``k_ring_shell``, a set difference), so the
+    rounds are disjoint and no candidate pair is ever found twice.
+    """
+    disk = k_ring_col(ix, iy, level, r)
+    if r == 1:
+        return disk
+    return F.array_except(disk, k_ring_col(ix, iy, level, r - 1))
 
 
 def knn_join(
@@ -129,7 +116,7 @@ def knn_join(
         F.col("id").alias("neighbor_id"),
         F.col("lat").alias("n_lat"),
         F.col("lon").alias("n_lon"),
-        cell_encode_udf(level)(F.col("lat"), F.col("lon")).alias("cell_id"),
+        cell_id_col(F.col("lat"), F.col("lon"), level).alias("cell_id"),
     ).persist()
     corpus_c.count()
 
@@ -137,7 +124,8 @@ def knn_join(
         F.col("id").alias("probe_id"),
         F.col("lat").alias("p_lat"),
         F.col("lon").alias("p_lon"),
-        cell_encode_udf(level)(F.col("lat"), F.col("lon")).alias("p_cell"),
+        tile_ix_col(F.col("lon"), level).alias("p_ix"),
+        tile_iy_col(F.col("lat"), level).alias("p_iy"),
     ).persist()
 
     dist2 = (
@@ -145,21 +133,16 @@ def knn_join(
         + (F.col("p_lon") - F.col("n_lon")) * (F.col("p_lon") - F.col("n_lon"))
     )
 
-    # round 1 searches the whole disk <= 1 (rings 0 and 1 together — ring 0
-    # alone can never prove coverage, its guarantee radius is 0); later
-    # rounds add one disjoint shell each, so no dedup is ever needed.
     collected: DataFrame | None = None
     w = Window.partitionBy("probe_id").orderBy(F.col("dist2").asc(), F.col("neighbor_id").asc())
     for r in range(1, r_max + 1):
-        ring_udf = _ring_shell_udf(r, include_inner=(r == 1))
-        shell = pending.withColumn("probe_cells", ring_udf(F.col("p_cell")))
         cand = (
-            shell.select(
-                "probe_id", "p_lat", "p_lon", "p_cell",
-                F.explode("probe_cells").alias("cell_id"),
+            pending.select(
+                "probe_id", "p_lat", "p_lon",
+                F.explode(_round_cells(F.col("p_ix"), F.col("p_iy"), level, r)).alias("cell_id"),
             )
             .join(corpus_c, "cell_id")
-            .select("probe_id", "p_lat", "p_lon", "p_cell", "neighbor_id", "n_lat", "n_lon")
+            .select("probe_id", "p_lat", "p_lon", "neighbor_id", "n_lat", "n_lon")
         )
         if exclude_self:
             cand = cand.filter(F.col("probe_id") != F.col("neighbor_id"))
@@ -204,7 +187,7 @@ def knn_join(
         if exclude_self:
             brute = brute.filter(F.col("probe_id") != F.col("neighbor_id"))
         brute = brute.withColumn("dist2", dist2).select(
-            "probe_id", "p_lat", "p_lon", "p_cell", "neighbor_id", "n_lat", "n_lon", "dist2"
+            "probe_id", "p_lat", "p_lon", "neighbor_id", "n_lat", "n_lon", "dist2"
         )
         collected = (
             brute

@@ -31,12 +31,11 @@ import itertools
 from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.geo_udfs import cell_encode_udf, cell_id_sql, morton_sql, tile_ix_col, tile_ix_sql, tile_iy_col, tile_iy_sql
+from ..functions.geo_udfs import cell_from_ij_col, cell_id_col, k_ring_col, morton_sql, tile_ix_col, tile_ix_sql, tile_iy_col, tile_iy_sql
 from ..functions.html_udfs import extract_text_udf, html_class_counts_udf
 from ..functions.text_udfs import (
     ASCII_WS_REGEX,
@@ -393,7 +392,8 @@ _Q_MKTSEG_SQL = """
 
 
 def q_doc_cells(spark, sf_dir):
-    """Cell encoding through the Arrow UDF (checked against pure-SQL morton)."""
+    """WGQ cell encoding as a Column expression (DuckDB recomputes the
+    same morton math in SQL)."""
     pts = doc_points(spark, sf_dir)
     return pts.select(
         "doc_id",
@@ -401,7 +401,7 @@ def q_doc_cells(spark, sf_dir):
         F.round("lon", 6).alias("lon"),
         tile_ix_col(F.col("lon"), CELL_LEVEL).alias("cell_ix"),
         tile_iy_col(F.col("lat"), CELL_LEVEL).alias("cell_iy"),
-        cell_encode_udf(CELL_LEVEL)(F.col("lat"), F.col("lon")).alias("cell_id"),
+        cell_id_col(F.col("lat"), F.col("lon"), CELL_LEVEL).alias("cell_id"),
     )
 
 
@@ -1549,28 +1549,22 @@ KRING_SAMPLE_MOD = 50
 
 def q_cell_hierarchy(spark, sf_dir):
     """WGQ hierarchy + k-ring faces under the oracle: for sampled docs,
-    the level-12 cell's parent at level 6 (numpy UDF) and the k=1 ring
-    cells (exploded) — recomputed in pure SQL morton math by DuckDB."""
-    from pyspark.sql import types as T
-
-    from ..geo.cells import cell_parent, k_ring
-
-    @F.pandas_udf(T.LongType())
-    def parent_udf(cell: pd.Series) -> pd.Series:
-        return pd.Series(cell_parent(cell.to_numpy(np.int64), PARENT_LEVEL))
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def kring_udf(cell: pd.Series) -> pd.Series:
-        return cell.map(lambda c: k_ring(int(c), KRING_K).tolist())
-
+    the level-12 cell, its level-6 parent and its k=1 ring cells
+    (exploded), all Column expressions over the cell's (ix, iy) —
+    recomputed in pure SQL morton math by DuckDB."""
     pts = doc_points(spark, sf_dir).filter(F.col("doc_id") % KRING_SAMPLE_MOD == 0)
-    cells = pts.select(
-        "doc_id", cell_encode_udf(CELL_LEVEL)(F.col("lat"), F.col("lon")).alias("cell_id")
+    ij = pts.select(
+        "doc_id",
+        tile_ix_col(F.col("lon"), CELL_LEVEL).alias("ix"),
+        tile_iy_col(F.col("lat"), CELL_LEVEL).alias("iy"),
     )
-    return (
-        cells.withColumn("parent_id", parent_udf("cell_id"))
-        .withColumn("ring_cell", F.explode(kring_udf("cell_id")))
-        .select("doc_id", "cell_id", "parent_id", "ring_cell")
+    ix, iy = F.col("ix"), F.col("iy")
+    shift = CELL_LEVEL - PARENT_LEVEL
+    return ij.select(
+        "doc_id",
+        cell_from_ij_col(ix, iy, CELL_LEVEL).alias("cell_id"),
+        cell_from_ij_col(F.shiftright(ix, shift), F.shiftright(iy, shift), PARENT_LEVEL).alias("parent_id"),
+        F.explode(k_ring_col(ix, iy, CELL_LEVEL, KRING_K)).alias("ring_cell"),
     )
 
 
