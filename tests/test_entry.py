@@ -1,9 +1,12 @@
 """Driver-contract tests: entry() smoke + a fast oracle-compare subset at
 sf0.001 (the full sweep runs via tools/compare_oracle.py at sf0.01)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if _REPO not in sys.path:
+    sys.path.insert(0, _REPO)
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,7 +28,7 @@ FAST_SUBSET = [
     "video_fp_near_dup",      # r5: perceptual video dedup — triad complete
     "simhash_pairs_stream",   # r5: STREAMING near-dup == batch oracle
     "cell_hierarchy",         # Column parent + k-ring under the oracle
-    "knn_k5",                 # Column ring rounds of the kNN join
+    "knn_k5",                 # disk-1 round + brute-force fallback of the kNN join
 ]
 
 
@@ -73,8 +76,7 @@ def test_fast_oracle_subset(spark):
 def test_cell_path_has_no_python_hop(spark):
     """The WGQ cell, parent and k-ring math runs as JVM expressions: no
     Python evaluation node in the executed plans of the cell queries, nor
-    in the (persisted) kNN result, whose plan string includes the plans of
-    the cached relations it was built from."""
+    in the kNN join's."""
     from pyspark.sql import functions as F
 
     from web_template_forensics_spark.operators.spatial_join import knn_join
@@ -90,7 +92,24 @@ def test_cell_path_has_no_python_hop(spark):
         assert python_nodes(df) == [], name
     pts = doc_points(spark, SF).withColumnRenamed("doc_id", "id")
     knn = knn_join(spark, pts.filter(F.col("id") % 10 == 0), pts, k=3, level=4)
+    knn.collect()
+    assert python_nodes(knn) == []
+
+
+def test_knn_k5_runs_in_few_jobs_and_persists_nothing(spark):
+    """Building and writing the knn_k5 query submits a bounded number of
+    jobs (no per-round driver loop) and leaves no persisted RDD behind."""
+    from web_template_forensics_spark.plans.queries import QUERIES
+
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    group = "knn-k5-jobs"
+    sc.setJobGroup(group, "knn_k5 to a noop sink")
     try:
-        assert python_nodes(knn) == []
+        QUERIES["knn_k5"](spark, SF).write.format("noop").mode("overwrite").save()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
-        knn.unpersist()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 12, len(jobs)
+    assert sc._jsc.getPersistentRDDs().size() == before

@@ -78,16 +78,15 @@ def test_cell_builders_reject_out_of_range_levels(spark):
 
 
 def test_parent_and_k_ring_cols_match_spec(spark):
-    """Column parent, k-ring and the kNN round rings equal the spec's
-    ``cell_parent``, ``k_ring`` and ``k_ring_shell`` per row, including
-    the level 0-2 disks that fold onto themselves through the lon wrap."""
+    """Column parent and k-ring equal the spec's ``cell_parent`` and
+    ``k_ring`` per row, including the level 0-2 disks that fold onto
+    themselves through the lon wrap."""
     from web_template_forensics_spark.functions.geo_udfs import (
         cell_from_ij_col,
         k_ring_col,
         tile_ix_col,
         tile_iy_col,
     )
-    from web_template_forensics_spark.operators.spatial_join import _round_cells
 
     rng = np.random.RandomState(8)
     lat, lon = _edge_points(4, rng, n_random=200)
@@ -101,7 +100,6 @@ def test_parent_and_k_ring_cols_match_spec(spark):
         cols += [
             cell_from_ij_col(F.shiftright(ix, shift), F.shiftright(iy, shift), lvl - shift).alias(f"parent_{j}"),
             k_ring_col(ix, iy, lvl, k).alias(f"ring_{j}"),
-            _round_cells(ix, iy, lvl, k).alias(f"round_{j}"),
         ]
     out = df.select("i", *cols).orderBy("i").toPandas()
     assert np.array_equal(out.i.to_numpy(), pdf.i.to_numpy())
@@ -112,9 +110,6 @@ def test_parent_and_k_ring_cols_match_spec(spark):
             c = int(cell[row])
             ring = np.asarray(out[f"ring_{j}"][row], dtype=np.int64)
             assert np.array_equal(np.sort(ring), cells.k_ring(c, k)), (lvl, k, row)
-            want = cells.k_ring(c, k) if k == 1 else cells.k_ring_shell(c, k)
-            got = np.asarray(out[f"round_{j}"][row], dtype=np.int64)
-            assert np.array_equal(np.sort(got), want), (lvl, k, row)
 
 
 def test_raster_vector_roundtrip(spark):
@@ -686,9 +681,9 @@ def test_minhash_empty_docs_never_pair(spark):
     assert pairs == {(3, 4)}, out
 
 
-def test_knn_brute_only_r_max_zero(spark):
-    """r_max=0 is the legal brute-force-only parameterization (previously
-    AttributeError on the None accumulator)."""
+def test_knn_returns_k_rows_per_probe(spark):
+    """k rows for each probe id on a line of points. Every probe proves in
+    its level-3 disk; the sparse tests below cover the brute-force pass."""
     import pandas as pd
 
     from web_template_forensics_spark.operators.spatial_join import knn_join
@@ -698,7 +693,7 @@ def test_knn_brute_only_r_max_zero(spark):
     )
     df = spark.createDataFrame(pdf)
     probes = df.filter(F.col("id") % 5 == 0)
-    out = knn_join(spark, probes, df, k=2, level=3, r_max=0).toPandas()
+    out = knn_join(spark, probes, df, k=2, level=3).toPandas()
     assert len(out) == 4 * 2
     assert set(out.probe_id) == {0, 5, 10, 15}
 
@@ -774,9 +769,9 @@ def test_knn_level_one_folded_ring_matches_bruteforce(spark):
     assert np.array_equal(out.dist2.to_numpy(), exp.dist2.to_numpy())
 
 
-def test_knn_probes_in_empty_space_r_max_one(spark):
+def test_knn_probes_in_empty_space(spark):
     """Adversarial sparsity: probes sit in a region with ZERO corpus
-    points within the r_max=1 search disk, so every probe must fall
+    points within the disk-1 search, so every probe must fall
     through to the bounded brute-force pass — and still return the
     exact k nearest from the far-away corpus."""
     import pandas as pd
@@ -796,7 +791,7 @@ def test_knn_probes_in_empty_space_r_max_one(spark):
     corpus = spark.createDataFrame(corpus_pdf)
     probes = spark.createDataFrame(probe_pdf)
     out = (
-        knn_join(spark, probes, corpus, k=2, level=4, r_max=1)
+        knn_join(spark, probes, corpus, k=2, level=4)
         .toPandas()
         .sort_values(["probe_id", "rank"])
         .reset_index(drop=True)
@@ -808,6 +803,137 @@ def test_knn_probes_in_empty_space_r_max_one(spark):
     for pid in (1000, 1001, 1002):
         got = out[out.probe_id == pid].neighbor_id.tolist()
         assert got == [0, 1], got
+
+
+def _knn_bruteforce(pdf, probe_ids, k, exclude_self=True):
+    """numpy brute force under the (dist2, neighbor_id) order, with the
+    engine's dist2 arithmetic, so dist2 compares bitwise."""
+    ids, lats, lons = pdf.id.to_numpy(), pdf.lat.to_numpy(), pdf.lon.to_numpy()
+    rows = []
+    for pid in probe_ids:
+        i = int(np.flatnonzero(ids == pid)[0])
+        d2 = (lats[i] - lats) * (lats[i] - lats) + (lons[i] - lons) * (lons[i] - lons)
+        order = sorted(
+            (float(d2[j]), int(ids[j])) for j in range(len(ids)) if not (exclude_self and ids[j] == pid)
+        )[:k]
+        rows.extend((pid, j, r, dd) for r, (dd, j) in enumerate(order, 1))
+    return pd.DataFrame(rows, columns=["probe_id", "neighbor_id", "rank", "dist2"])
+
+
+def _assert_knn_equal(got_df, exp):
+    got = got_df.toPandas().sort_values(["probe_id", "rank"]).reset_index(drop=True)
+    assert list(got.columns) == ["probe_id", "neighbor_id", "rank", "dist2"]
+    assert len(got) == len(exp), (len(got), len(exp))
+    for c in ("probe_id", "neighbor_id", "rank"):
+        assert (got[c].to_numpy() == exp[c].to_numpy()).all(), c
+    assert np.array_equal(got.dist2.to_numpy(), exp.dist2.to_numpy())
+
+
+def test_knn_mixed_proven_and_brute_probes_match_bruteforce(spark):
+    """One call where a dense cluster's probes prove their k nearest in the
+    disk-1 round and isolated probes, far from everything, fall to the
+    brute-force pass; the union of both branches equals brute force."""
+    from web_template_forensics_spark.operators.spatial_join import knn_join
+
+    rng = np.random.RandomState(21)
+    n = 40
+    cluster = pd.DataFrame(
+        {"id": np.arange(n), "lat": 30.0 + rng.uniform(-1, 1, n), "lon": 40.0 + rng.uniform(-1, 1, n)}
+    )
+    isolated = pd.DataFrame(
+        {"id": [100, 101, 102, 103], "lat": [-70.0, -40.0, 75.0, 0.0], "lon": [-150.0, 100.0, -20.0, 170.0]}
+    )
+    pdf = pd.concat([cluster, isolated], ignore_index=True)
+    probe_ids = [0, 7, 13, 39, 100, 101, 102, 103]
+    k, level = 3, 4
+    exp = _knn_bruteforce(pdf, probe_ids, k)
+    kth = exp[exp["rank"] == k].set_index("probe_id").dist2
+    guarantee = (180.0 / (1 << level)) ** 2
+    # the data really splits the probes between the two branches: a kth
+    # neighbour nearer than one cell height proves, one farther cannot
+    assert (kth.loc[[0, 7, 13, 39]] < guarantee).all()
+    assert (kth.loc[[100, 101, 102, 103]] > guarantee).all()
+
+    df = spark.createDataFrame(pdf)
+    probes = df.filter(F.col("id").isin(probe_ids))
+    _assert_knn_equal(knn_join(spark, probes, df, k=k, level=level), exp)
+
+
+def test_knn_exclude_self_probe_alone_in_its_disk(spark):
+    """A probe whose disk holds only itself: excluding self leaves no
+    candidate in the ring round, yet the probe must reach the brute-force
+    pass and get its k nearest; with exclude_self=False it ranks itself
+    first at dist2 0."""
+    from web_template_forensics_spark.operators.spatial_join import knn_join
+
+    rng = np.random.RandomState(22)
+    pdf = pd.DataFrame(
+        {
+            "id": np.arange(11),
+            "lat": np.append(50.0 + rng.uniform(-2, 2, 10), -50.0),
+            "lon": np.append(50.0 + rng.uniform(-2, 2, 10), -100.0),
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    probes = df.filter(F.col("id") == 10)
+    for exclude_self in (True, False):
+        exp = _knn_bruteforce(pdf, [10], 3, exclude_self=exclude_self)
+        got = knn_join(spark, probes, df, k=3, level=4, exclude_self=exclude_self)
+        _assert_knn_equal(got, exp)
+    assert exp.neighbor_id.iloc[0] == 10 and exp.dist2.iloc[0] == 0.0
+
+
+def test_knn_k_at_least_corpus_size(spark):
+    """k >= the corpus size: each probe gets every other corpus point (and
+    itself too when exclude_self=False), fewer than k rows."""
+    from web_template_forensics_spark.operators.spatial_join import knn_join
+
+    pdf = pd.DataFrame(
+        {"id": np.arange(6), "lat": [1.0, 1.5, 2.0, -3.0, 40.0, 1.25], "lon": [1.0, 1.0, 3.0, 0.5, -60.0, 1.75]}
+    )
+    df = spark.createDataFrame(pdf)
+    for k, exclude_self in ((6, True), (10, True), (10, False)):
+        exp = _knn_bruteforce(pdf, range(6), k, exclude_self=exclude_self)
+        assert len(exp) == 6 * (5 if exclude_self else 6)
+        _assert_knn_equal(knn_join(spark, df, df, k=k, level=4, exclude_self=exclude_self), exp)
+
+
+def test_knn_null_coordinate_probe_is_kept(spark):
+    """A probe with null coordinates has no ring cells; it still reaches
+    the brute-force pass and gets k rows, all at a null dist2, in
+    neighbor_id order."""
+    from web_template_forensics_spark.operators.spatial_join import knn_join
+
+    corpus = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(5), "lat": np.linspace(0, 4, 5), "lon": np.linspace(0, 4, 5)})
+    )
+    probes = spark.createDataFrame([(9, None, None)], "id long, lat double, lon double")
+    got = knn_join(spark, probes, corpus, k=3, level=4).toPandas().sort_values("rank")
+    assert got.neighbor_id.tolist() == [0, 1, 2]
+    assert got["rank"].tolist() == [1, 2, 3]
+    assert got.dist2.isna().all()
+
+
+def test_knn_join_is_lazy(spark):
+    """Building the kNN frame submits no job and persists nothing; the
+    frame runs only when an action asks for it."""
+    from web_template_forensics_spark.operators.spatial_join import knn_join
+
+    sc = spark.sparkContext
+    pdf = pd.DataFrame({"id": np.arange(50), "lat": np.linspace(-40, 40, 50), "lon": np.linspace(-90, 90, 50)})
+    df = spark.createDataFrame(pdf)
+    probes = df.filter(F.col("id") % 7 == 0)
+    before = sc._jsc.getPersistentRDDs().size()
+    group = "knn-join-is-lazy"
+    sc.setJobGroup(group, "build the knn frame")
+    try:
+        out = knn_join(spark, probes, df, k=3, level=4)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc._jsc.getPersistentRDDs().size() == before
+    _assert_knn_equal(out, _knn_bruteforce(pdf, range(0, 50, 7), 3))
 
 
 def test_ngram_whitespace_and_simhash_exact_band(spark):

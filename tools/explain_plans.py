@@ -167,10 +167,15 @@ def main() -> None:
             "stream==batch parity is pytest-pinned."
         ),
         "knn_k5": (
-            "Iterative k-ring expansion: per-round cell equi-join against "
-            "the bucketed point index; rounds amortize at scale (the "
-            "per-round persist + isEmpty driver action dominate only at "
-            "toy scale)."
+            "One lazy plan, no driver action: a LEFT cell equi-join of each "
+            "probe's disk-1 cells against the point index, ranked per "
+            "probe; probes whose coverage proof holds go straight out, "
+            "the rest take their rank-1 row into a brute-force cross join "
+            "with the corpus. The plan below lists the round-1 Exchange "
+            "under both branches; at run time the second is a "
+            "ReusedExchange. When every probe proves, the cross join "
+            "streams no rows, but the corpus broadcast it builds on is "
+            "still one job."
         ),
         "match_cascade_many": (
             "The MANY-pairs scale shape: ONE FlatMapGroupsInPandas keyed "

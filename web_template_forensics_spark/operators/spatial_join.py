@@ -8,15 +8,14 @@ Scale design (the 100 TB story):
     Hot cells (dense TLD clusters) are immune on the broadcast side; the
     downstream per-polygon aggregation uses AQE skew splitting + optional
     salting (operators in tiles.py).
-  * kNN — iterative H3-style k-ring expansion: at round r only the probes
-    that cannot yet PROVE their k nearest are within the searched disk
-    join the corpus again, on exploded ring-shell cell ids (equi-join,
-    broadcast-able ring side). Each round shuffles only pending probes ×
-    ring cells, never the full corpus cross product. Residual probes (in
-    regions sparser than r_max rings) fall back to a bounded brute-force
-    pass. Final top-k is a ranking window per probe with a documented
-    total order (dist2, neighbor_id) so results are deterministic and
-    exactly reproducible by the DuckDB brute-force oracle.
+  * kNN — one lazy plan, no driver action: every probe joins the corpus
+    on its disk-1 cell ids (an equi-join, never the full cross product)
+    and keeps its top k. A probe whose k-th candidate lies inside the
+    disk's proven radius is done; only the rest (probes in regions too
+    sparse for their disk) take a brute-force pass over the corpus. Top-k
+    is a ranking window per probe with a documented total order
+    (dist2, neighbor_id), so results are deterministic and exactly
+    reproducible by the DuckDB brute-force oracle.
 """
 
 from __future__ import annotations
@@ -43,7 +42,7 @@ def pip_join(
 ) -> DataFrame:
     """Exact point-in-polygon join -> (id, poly_id).
 
-    points: DataFrame with (id, lat, lon). polygons: broadcast side data.
+    points: DataFrame with (id, lat, lon). polygons: small side data.
     """
     index = build_cell_index(polygons, index_level)
     index_rows = [(c, p) for c, ps in index.items() for p in ps]
@@ -58,8 +57,9 @@ def pip_join(
         F.col(lon_col).alias("lon"), "poly_id",
     )
 
+    # a few KB pickled, so it ships inside the UDF closure: no broadcast
+    # variable to release after the query
     polys_by_id = {p.poly_id: p for p in polygons}
-    bc = spark.sparkContext.broadcast(polys_by_id)
 
     @F.pandas_udf(T.BooleanType())
     def _pip(lat: pd.Series, lon: pd.Series, pid: pd.Series) -> pd.Series:
@@ -69,7 +69,7 @@ def pip_join(
         out = np.zeros(len(lats), dtype=bool)
         for p in np.unique(pids):  # vectorize per polygon within the batch
             mask = pids == p
-            out[mask] = points_in_polygon(lats[mask], lons[mask], bc.value[int(p)])
+            out[mask] = points_in_polygon(lats[mask], lons[mask], polys_by_id[int(p)])
         return pd.Series(out)
 
     return (
@@ -78,139 +78,95 @@ def pip_join(
     )
 
 
-def _round_cells(ix, iy, level: int, r: int):
-    """Cells kNN round ``r`` searches around probe cell (ix, iy).
-
-    Round 1 takes the whole disk <= 1 (ring 0 alone can never prove
-    coverage, its guarantee radius is 0); round r > 1 takes only the shell
-    at distance r (the spec's ``k_ring_shell``, a set difference), so the
-    rounds are disjoint and no candidate pair is ever found twice.
-    """
-    disk = k_ring_col(ix, iy, level, r)
-    if r == 1:
-        return disk
-    return F.array_except(disk, k_ring_col(ix, iy, level, r - 1))
-
-
 def knn_join(
     spark: SparkSession,
     probes: DataFrame,
     corpus: DataFrame,
     k: int = 5,
     level: int = 4,
-    r_max: int = 4,
     exclude_self: bool = True,
 ) -> DataFrame:
     """Deterministic planar kNN: (probe_id, neighbor_id, rank, dist2).
 
     probes/corpus: (id, lat, lon). Metric: squared planar degree distance
     (geo/cells.py planar_dist2 — exact IEEE arithmetic, oracle-matchable).
-    Correctness invariant: a probe stops expanding only when it holds >= k
-    candidates within the PROVEN covered radius r * (180 / 2^level) degrees;
-    anything outside the searched disk must be farther than the current kth
-    candidate. Probes not finished by r_max get a brute-force pass.
+    Returns one lazy frame; building it runs no job and persists nothing.
+
+    One ring round: each probe's disk-1 cells join the corpus. Coverage
+    proof: a probe is done when it holds k candidates and its kth dist2 is
+    below (180 / 2^level)^2 — every point outside the disk is at least one
+    cell height away, so it cannot be nearer. Each unproven probe (a sparse
+    region, or k beyond what its disk holds) goes to a brute-force pass
+    over the whole corpus instead.
     """
-    cell_h = 180.0 / (1 << level)  # min cell dimension in degrees
+    guarantee = (180.0 / (1 << level)) ** 2  # disk-1 covered radius, squared
+    lat, lon = F.col("lat"), F.col("lon")
 
     corpus_c = corpus.select(
         F.col("id").alias("neighbor_id"),
-        F.col("lat").alias("n_lat"),
-        F.col("lon").alias("n_lon"),
-        cell_id_col(F.col("lat"), F.col("lon"), level).alias("cell_id"),
-    ).persist()
-    corpus_c.count()
-
-    pending = probes.select(
+        lat.alias("n_lat"),
+        lon.alias("n_lon"),
+        cell_id_col(lat, lon, level).alias("n_cell"),
+    )
+    probes_c = probes.select(
         F.col("id").alias("probe_id"),
-        F.col("lat").alias("p_lat"),
-        F.col("lon").alias("p_lon"),
-        tile_ix_col(F.col("lon"), level).alias("p_ix"),
-        tile_iy_col(F.col("lat"), level).alias("p_iy"),
-    ).persist()
+        lat.alias("p_lat"),
+        lon.alias("p_lon"),
+        tile_ix_col(lon, level).alias("p_ix"),
+        tile_iy_col(lat, level).alias("p_iy"),
+    )
+    # explode_outer keeps a probe with null coordinates (its ring is
+    # empty), so it reaches the brute-force pass like any unproven probe
+    disk = probes_c.select(
+        "probe_id", "p_lat", "p_lon",
+        F.explode_outer(k_ring_col(F.col("p_ix"), F.col("p_iy"), level, 1)).alias("cell_id"),
+    )
+    # the self-exclusion sits inside the LEFT join's condition, so a probe
+    # alone in its disk keeps one null row instead of vanishing
+    on = F.col("cell_id") == F.col("n_cell")
+    if exclude_self:
+        on = on & (F.col("probe_id") != F.col("neighbor_id"))
 
     dist2 = (
         (F.col("p_lat") - F.col("n_lat")) * (F.col("p_lat") - F.col("n_lat"))
         + (F.col("p_lon") - F.col("n_lon")) * (F.col("p_lon") - F.col("n_lon"))
     )
-
-    collected: DataFrame | None = None
-    w = Window.partitionBy("probe_id").orderBy(F.col("dist2").asc(), F.col("neighbor_id").asc())
-    for r in range(1, r_max + 1):
-        cand = (
-            pending.select(
-                "probe_id", "p_lat", "p_lon",
-                F.explode(_round_cells(F.col("p_ix"), F.col("p_iy"), level, r)).alias("cell_id"),
-            )
-            .join(corpus_c, "cell_id")
-            .select("probe_id", "p_lat", "p_lon", "neighbor_id", "n_lat", "n_lon")
-        )
-        if exclude_self:
-            cand = cand.filter(F.col("probe_id") != F.col("neighbor_id"))
-        cand = cand.withColumn("dist2", dist2)
-        prev = collected
-        collected = (cand if collected is None else collected.unionByName(cand)).persist()
-
-        guarantee = (r * cell_h) ** 2
-        # rank only the still-pending probes' candidates: finished probes
-        # dominate `collected` in later rounds and their re-ranking is
-        # pure redundant work
-        active = collected.join(pending.select("probe_id"), "probe_id", "left_semi")
-        stats = (
-            active.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .groupBy("probe_id")
-            .agg(F.count("*").alias("n"), F.max("dist2").alias("kth_d2"))
-            .filter((F.col("n") >= k) & (F.col("kth_d2") < F.lit(guarantee)))
-            .select("probe_id")
-        )
-        prev_pending = pending
-        pending = pending.join(stats, "probe_id", "left_anti").persist()
-        # ONE driver action per round: count() both answers "is anyone
-        # still pending?" and FULLY materializes the persisted frame
-        # (isEmpty's limit-1 scan left the cache partial, so later
-        # rounds re-derived the anti-join chain past partition 0).
-        n_pending = pending.count()
-        prev_pending.unpersist()
-        if prev is not None:
-            prev.unpersist()
-        if n_pending == 0:
-            pending = None
-            break
-
-    if pending is not None:
-        # non-None ==> the last round counted >0 pending rows (or r_max
-        # == 0 skipped the loop) — no second emptiness action needed
-        # sparse-region fallback: bounded brute force for the residual
-        # probes (with r_max=0 this is the whole probe set — a legal
-        # brute-force-only parameterization)
-        brute = pending.crossJoin(corpus_c.drop("cell_id"))
-        if exclude_self:
-            brute = brute.filter(F.col("probe_id") != F.col("neighbor_id"))
-        brute = brute.withColumn("dist2", dist2).select(
-            "probe_id", "p_lat", "p_lon", "neighbor_id", "n_lat", "n_lon", "dist2"
-        )
-        collected = (
-            brute
-            if collected is None
-            else collected.unionByName(brute).dropDuplicates(["probe_id", "neighbor_id"])
-        )
-
-    result = (
-        collected.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "rank", "dist2")
-        .persist()
+    # a probe is its id AND its point: with the coordinates among the
+    # partition keys both branches below need the same round-1 columns, so
+    # Spark runs the round-1 shuffle once (ReusedExchange) instead of
+    # letting the proven branch prune p_lat/p_lon into a second one
+    probe = ("probe_id", "p_lat", "p_lon")
+    by_dist = Window.partitionBy(*probe).orderBy(
+        F.col("dist2").asc_nulls_last(), F.col("neighbor_id").asc_nulls_last()
     )
-    # materialize the (small, <= k x probes) result, then release the
-    # iteration caches — previously corpus_c + the final collected/pending
-    # stayed persisted for the session's lifetime
-    result.count()
-    corpus_c.unpersist()
-    if pending is not None:
-        pending.unpersist()
-    for df in (collected,):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    return result
+    by_probe = Window.partitionBy(*probe)
+    out_cols = ("probe_id", "neighbor_id", "rank", "dist2")
+
+    ranked = (
+        disk.join(corpus_c, on, "left")
+        .withColumn("dist2", dist2)
+        .withColumn("rank", F.row_number().over(by_dist))
+        .filter(F.col("rank") <= k)
+        .withColumn(
+            "proven",
+            (F.count("neighbor_id").over(by_probe) >= k)
+            & (F.max("dist2").over(by_probe) < F.lit(guarantee)),
+        )
+    )
+    proven = ranked.filter(F.col("proven")).select(*out_cols)
+
+    # one row per unproven probe: its rank-1 row carries the probe columns
+    brute = (
+        ranked.filter(~F.col("proven") & (F.col("rank") == 1))
+        .select(*probe)
+        .crossJoin(corpus_c.drop("n_cell"))
+    )
+    if exclude_self:
+        brute = brute.filter(F.col("probe_id") != F.col("neighbor_id"))
+    brute = (
+        brute.withColumn("dist2", dist2)
+        .withColumn("rank", F.row_number().over(by_dist))
+        .filter(F.col("rank") <= k)
+        .select(*out_cols)
+    )
+    return proven.unionByName(brute)

@@ -527,7 +527,7 @@ def _q_pip_sql():
 
 
 def q_knn(spark, sf_dir):
-    """kNN via iterative k-ring expansion (J9) vs brute-force oracle."""
+    """kNN via a disk-1 cell join with a brute-force fallback (J9) vs brute-force oracle."""
     pts = doc_points(spark, sf_dir).withColumnRenamed("doc_id", "id")
     probes = pts.filter(F.col("id") % PROBE_MOD == 0)
     return knn_join(spark, probes, pts, k=KNN_K, level=KNN_LEVEL).select(
