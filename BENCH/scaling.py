@@ -153,8 +153,8 @@ def main() -> None:
             pages.groupBy(F.spark_partition_id().alias("p")).count()
         )
         pts = pages_to_geo_fused(pages).select(
-            tile_ix_col(F.col("lon"), TILE_Z).alias("tile_x"),
-            tile_iy_col(F.col("lat"), TILE_Z).alias("tile_y"),
+            tile_ix_col("lon", TILE_Z).alias("tile_x"),
+            tile_iy_col("lat", TILE_Z).alias("tile_y"),
             F.pmod(F.spark_partition_id(), F.lit(16)).alias("_salt"),
         )
         # 2. tile-rollup reducer keys WITHOUT salting: the hot .de tile

@@ -74,26 +74,85 @@ def test_fast_oracle_subset(spark):
 
 
 def test_cell_path_has_no_python_hop(spark):
-    """The WGQ cell, parent and k-ring math runs as JVM expressions: no
-    Python evaluation node in the executed plans of the cell queries, nor
-    in the kNN join's."""
+    """The WGQ cell, parent and k-ring math and the PIP ray cast run as JVM
+    expressions: no Python evaluation node in the executed plans of the
+    cell queries, the kNN join, pip_rectangles or a bare pip_join, and no
+    side table scanned from pickled rows (ExistingRDD)."""
     from pyspark.sql import functions as F
 
-    from web_template_forensics_spark.operators.spatial_join import knn_join
+    from web_template_forensics_spark.geo.polygons import Polygon
+    from web_template_forensics_spark.operators.spatial_join import knn_join, pip_join
     from web_template_forensics_spark.plans.queries import QUERIES, doc_points
 
-    def python_nodes(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return [n for n in ("ArrowEvalPython", "BatchEvalPython") if n in plan]
-
-    for name in ("doc_cells", "cell_hierarchy"):
-        df = QUERIES[name](spark, SF)
+    def python_hops(df):
         df.collect()
-        assert python_nodes(df) == [], name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return [n for n in ("ArrowEvalPython", "BatchEvalPython", "ExistingRDD") if n in plan]
+
+    for name in ("doc_cells", "cell_hierarchy", "pip_rectangles"):
+        assert python_hops(QUERIES[name](spark, SF)) == [], name
     pts = doc_points(spark, SF).withColumnRenamed("doc_id", "id")
     knn = knn_join(spark, pts.filter(F.col("id") % 10 == 0), pts, k=3, level=4)
-    knn.collect()
-    assert python_nodes(knn) == []
+    assert python_hops(knn) == []
+    polys = [
+        Polygon.make(1, "box", [[(-40.0, -60.0), (-40.0, 60.0), (40.0, 60.0), (40.0, -60.0)]]),
+        Polygon.make(2, "antimeridian", [[(-30.0, 170.0), (-30.0, -170.0), (0.0, -170.0), (0.0, 170.0)]]),
+    ]
+    assert python_hops(pip_join(spark, pts, polys, index_level=6)) == []
+
+
+def test_spatial_queries_build_without_jobs(spark):
+    """Building (not running) doc_cells, tile_rollup_z6, pip_rectangles and
+    knn_k5 submits no Spark job once their table's schema is known: a table
+    read infers its schema once, not per call, and the PIP side tables are
+    local relations."""
+    from web_template_forensics_spark.plans.queries import QUERIES
+
+    names = ("doc_cells", "tile_rollup_z6", "pip_rectangles", "knn_k5")
+    for name in names:
+        QUERIES[name](spark, SF)  # the first read of a table infers its schema
+    sc = spark.sparkContext
+    group = "spatial-build-jobs"
+    sc.setJobGroup(group, "build the spatial queries")
+    try:
+        for name in names:
+            QUERIES[name](spark, SF)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+
+
+def test_table_cache_sees_a_table_rewritten_in_place(spark, tmp_path):
+    """``_t`` keeps one schema and row-group count per table version:
+    rewriting a table at the same path with another schema and another
+    row-group count is read with the new ones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from web_template_forensics_spark.plans.queries import _t
+
+    def repartitioned(df):
+        return "Repartition" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": pa.array([1, 2, 3], pa.int32())}), path)
+    first = _t(spark, str(tmp_path), "t")
+    assert first.schema.simpleString() == "struct<a:int>"
+    assert sorted(r.a for r in first.collect()) == [1, 2, 3]
+    assert repartitioned(first)  # one row group < the session's parallelism
+
+    n = 4 * spark.sparkContext.defaultParallelism
+    pq.write_table(
+        pa.table({"a": pa.array(range(n), pa.int64()), "b": [str(i) for i in range(n)]}),
+        path,
+        row_group_size=1,
+    )
+    second = _t(spark, str(tmp_path), "t")
+    assert second.schema.simpleString() == "struct<a:bigint,b:string>"
+    assert sorted(r.a for r in second.collect()) == list(range(n))
+    assert not repartitioned(second)
 
 
 def test_knn_k5_runs_in_few_jobs_and_persists_nothing(spark):

@@ -1,10 +1,13 @@
 """Operator-level Spark tests: UDF==oracle parity, round-trips, greedy
 matching fidelity, dedup signatures."""
 
+import json
+
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from web_template_forensics_spark.geo import cells
 
@@ -39,7 +42,7 @@ def test_cell_id_col_matches_spec_row_by_row(spark):
     df = spark.createDataFrame(pdf)
     cols = []
     for lvl in levels:
-        lat, lon = F.col("lat"), F.col("lon")
+        lat, lon = "lat", "lon"
         cols += [
             cell_id_col(lat, lon, lvl).alias(f"cell_{lvl}"),
             tile_ix_col(lon, lvl).alias(f"ix_{lvl}"),
@@ -70,11 +73,11 @@ def test_cell_builders_reject_out_of_range_levels(spark):
         with pytest.raises(ValueError, match="level must be in"):
             cells.cell_encode(0.0, 0.0, lvl)
         with pytest.raises(ValueError, match="level must be in"):
-            cell_id_col(F.col("lat"), F.col("lon"), lvl)
+            cell_id_col("lat", "lon", lvl)
         with pytest.raises(ValueError, match="level must be in"):
-            cell_from_ij_col(F.col("ix"), F.col("iy"), lvl)
+            cell_from_ij_col("ix", "iy", lvl)
         with pytest.raises(ValueError, match="level must be in"):
-            k_ring_col(F.col("ix"), F.col("iy"), lvl, 1)
+            k_ring_col("ix", "iy", lvl, 1)
 
 
 def test_parent_and_k_ring_cols_match_spec(spark):
@@ -84,8 +87,8 @@ def test_parent_and_k_ring_cols_match_spec(spark):
     from web_template_forensics_spark.functions.geo_udfs import (
         cell_from_ij_col,
         k_ring_col,
-        tile_ix_col,
-        tile_iy_col,
+        tile_ix_sql,
+        tile_iy_sql,
     )
 
     rng = np.random.RandomState(8)
@@ -95,10 +98,10 @@ def test_parent_and_k_ring_cols_match_spec(spark):
     pairs = [(0, 1), (1, 1), (1, 2), (2, 3), (3, 1), (4, 4), (4, 9), (12, 1), (26, 2)]
     cols = []
     for j, (lvl, k) in enumerate(pairs):
-        ix, iy = tile_ix_col(F.col("lon"), lvl), tile_iy_col(F.col("lat"), lvl)
+        ix, iy = tile_ix_sql("lon", lvl), tile_iy_sql("lat", lvl)
         shift = lvl // 2
         cols += [
-            cell_from_ij_col(F.shiftright(ix, shift), F.shiftright(iy, shift), lvl - shift).alias(f"parent_{j}"),
+            cell_from_ij_col(f"({ix}) >> {shift}", f"({iy}) >> {shift}", lvl - shift).alias(f"parent_{j}"),
             k_ring_col(ix, iy, lvl, k).alias(f"ring_{j}"),
         ]
     out = df.select("i", *cols).orderBy("i").toPandas()
@@ -110,6 +113,98 @@ def test_parent_and_k_ring_cols_match_spec(spark):
             c = int(cell[row])
             ring = np.asarray(out[f"ring_{j}"][row], dtype=np.int64)
             assert np.array_equal(np.sort(ring), cells.k_ring(c, k)), (lvl, k, row)
+
+
+def test_cell_builders_are_bigint_at_levels_0_1_26(spark):
+    """Every builder types as bigint at the extreme levels, and the cell SQL
+    text runs unchanged in DuckDB with the same values as the spec. At
+    level 0 the Morton sum is the literal 0: it used to be ``()``, invalid
+    SQL in both engines."""
+    import duckdb
+
+    from web_template_forensics_spark.functions.geo_udfs import (
+        cell_from_ij_col,
+        cell_from_ij_sql,
+        cell_id_col,
+        k_ring_col,
+        morton_sql,
+        tile_ix_col,
+        tile_ix_sql,
+        tile_iy_col,
+        tile_iy_sql,
+    )
+
+    assert morton_sql("ix", "iy", 0) == "0"
+    rng = np.random.RandomState(11)
+    lat, lon = _edge_points(26, rng, n_random=100)
+    pdf = pd.DataFrame({"i": np.arange(len(lat)), "lat": lat, "lon": lon})
+    df = spark.createDataFrame(pdf)
+    con = duckdb.connect()
+    con.register("pts", pdf)
+    for lvl in (0, 1, 26):
+        ix, iy = tile_ix_sql("lon", lvl), tile_iy_sql("lat", lvl)
+        out = df.select(
+            "i",
+            tile_ix_col("lon", lvl).alias("ix"),
+            tile_iy_col("lat", lvl).alias("iy"),
+            cell_id_col("lat", "lon", lvl).alias("cell"),
+            cell_from_ij_col(ix, iy, lvl).alias("cell_ij"),
+            k_ring_col(ix, iy, lvl, 1).alias("ring"),
+        )
+        types = dict(out.dtypes)
+        assert [types[c] for c in ("ix", "iy", "cell", "cell_ij", "ring")] == [
+            "bigint", "bigint", "bigint", "bigint", "array<bigint>"
+        ], lvl
+        got = out.orderBy("i").toPandas()
+        want = cells.cell_encode(lat, lon, lvl)
+        assert np.array_equal(got.cell.to_numpy(), want), lvl
+        assert np.array_equal(got.cell_ij.to_numpy(), want), lvl
+        duck = con.sql(
+            f"SELECT {cell_from_ij_sql(ix, iy, lvl)} AS cell FROM pts ORDER BY i"
+        ).df()
+        assert np.array_equal(duck.cell.to_numpy(), want), lvl
+
+
+def test_pip_join_matches_points_in_polygon_row_by_row(spark):
+    """The JVM ray cast keeps exactly the (point, polygon) pairs that
+    ``points_in_polygon`` accepts, at index levels 4 and 6: concave, holed,
+    antimeridian, triangle and off-grid polygons; points on vertices, on
+    integer grid lines that run along horizontal edges, and null
+    coordinates."""
+    from web_template_forensics_spark.geo.polygons import Polygon, points_in_polygon
+    from web_template_forensics_spark.operators.spatial_join import pip_join
+
+    polys = [
+        Polygon.make(1, "concave", [[(0, 0), (0, 12), (4, 12), (4, 4), (8, 4), (8, 12), (12, 12), (12, 0)]]),
+        Polygon.make(2, "holed", [
+            [(20, 20), (20, 40), (40, 40), (40, 20)],
+            [(25, 25), (25, 35), (35, 35), (35, 25)],
+        ]),
+        Polygon.make(3, "antimeridian", [[(-10, 170), (-10, -170), (10, -170), (10, 170)]]),
+        Polygon.make(4, "triangle", [[(-30, -30), (-30, -10), (-10, -20)]]),
+        Polygon.make(5, "off-grid", [[(45.5, 100.25), (50.1, 110.3), (45.7, 120.9), (41.3, 110.1)]]),
+    ]
+    rng = np.random.RandomState(5)
+    grid_lat, grid_lon = np.meshgrid(np.arange(-35.0, 52.0), np.arange(-180.0, 180.0))
+    vertices = np.concatenate([r for p in polys for r in p.rings])
+    lat = np.concatenate([grid_lat.ravel(), vertices[:, 0], rng.uniform(-35, 52, 4000)])
+    lon = np.concatenate([grid_lon.ravel(), (vertices[:, 1] + 180.0) % 360.0 - 180.0,
+                          rng.uniform(-180, 180, 4000)])
+    rows = [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lat, lon))]
+    n = len(rows)
+    rows += [(n, None, 5.0), (n + 1, 5.0, None), (n + 2, None, None)]
+    points = spark.createDataFrame(rows, "id long, lat double, lon double")
+
+    want = {
+        (i, p.poly_id)
+        for p in polys
+        for i in np.flatnonzero(points_in_polygon(lat, lon, p)).tolist()
+    }
+    assert {1, 2, 3, 4, 5} == {pid for _, pid in want}
+    for level in (4, 6):
+        got = [(r.id, r.poly_id) for r in pip_join(spark, points, polys, index_level=level).collect()]
+        assert len(got) == len(set(got)), level
+        assert set(got) == want, level
 
 
 def test_raster_vector_roundtrip(spark):
@@ -314,14 +409,32 @@ def test_cosine_topk_exact_and_lsh_recall(spark):
 
 
 def test_structure_compare_udf_matches_oracle(spark):
-    from web_template_forensics_spark.functions.similarity_udfs import (
-        structure_compare_udf,
-    )
+    """The comparator as an Arrow UDF (test scaffolding: defined here, so
+    it is pickled by value) equals the reference on every pair."""
     from web_template_forensics_spark.oracle.html_oracle import (
         parse_html_tree,
         tree_to_json,
     )
     from web_template_forensics_spark.oracle.similarity import compare_structures
+
+    fields = ["score", "matching", "different", "missing", "extra"]
+    schema = T.StructType(
+        [T.StructField("score", T.DoubleType())]
+        + [T.StructField(f, T.IntegerType()) for f in fields[1:]]
+    )
+
+    @F.pandas_udf(schema)
+    def structure_compare_udf(a_json: pd.Series, b_json: pd.Series) -> pd.DataFrame:
+        """Reference compare_structures (core/structure_comparator.py:430-477)."""
+        rows = []
+        for a, b in zip(a_json, b_json):
+            res = compare_structures(
+                json.loads(a) if a else None, json.loads(b) if b else None
+            )
+            rows.append(
+                (res.similarity_score, res.matching, res.different, res.missing, res.extra)
+            )
+        return pd.DataFrame(rows, columns=fields)
 
     pairs = [
         ("<div><span>Hello</span></div>", "<div><span>Hello</span></div>"),

@@ -44,8 +44,8 @@ def test_hot_frac_draw_table():
 def test_corpus_is_actually_skewed(skewed_pts):
     tiles = (
         skewed_pts.groupBy(
-            tile_ix_col(F.col("lon"), TILE_Z).alias("tx"),
-            tile_iy_col(F.col("lat"), TILE_Z).alias("ty"),
+            tile_ix_col("lon", TILE_Z).alias("tx"),
+            tile_iy_col("lat", TILE_Z).alias("ty"),
         )
         .count()
         .collect()
@@ -65,8 +65,8 @@ def test_salting_bounds_max_reducer_group(skewed_pts):
     """THE M5 assertion: the phase-1 salted group a reducer receives is
     a small fraction of the unsalted hot key group."""
     keyed = skewed_pts.select(
-        tile_ix_col(F.col("lon"), TILE_Z).alias("tx"),
-        tile_iy_col(F.col("lat"), TILE_Z).alias("ty"),
+        tile_ix_col("lon", TILE_Z).alias("tx"),
+        tile_iy_col("lat", TILE_Z).alias("ty"),
         F.pmod(F.spark_partition_id(), F.lit(16)).alias("salt"),
     )
     unsalted_max = keyed.groupBy("tx", "ty").count().agg(F.max("count")).first()[0]

@@ -5,6 +5,29 @@ import pytest
 from pyspark.sql import functions as F
 
 
+def synth_media_df(spark, n: int = 100, seed: int = 7):
+    """Deterministic synthetic media table for plumbing tests: seeded
+    noise payloads that no codec decodes, so every row takes the
+    byte-histogram fallback."""
+    from web_template_forensics_spark.operators.multimodal import MEDIA_SCHEMA
+
+    rng = np.random.RandomState(seed)
+    kinds = ["image", "audio", "video"]
+    rows = []
+    for i in range(n):
+        kind = kinds[i % 3]
+        payload = rng.bytes(200 + (i % 50) * 10)
+        meta = {
+            "width": 16 + i % 16 if kind == "image" else None,
+            "height": 16 + (i + 1) % 16 if kind == "image" else None,
+            "sample_rate": 16000 if kind == "audio" else None,
+            "duration_ms": 1000 * (i % 30) if kind != "image" else None,
+            "codec": {"image": "fakepng", "audio": "fakepcm", "video": "fakeh264"}[kind],
+        }
+        rows.append((i, kind, payload, meta))
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+
+
 def _events_stream(spark, tmp_path):
     import shutil
 
@@ -93,7 +116,6 @@ def test_latest_state_stream_merge_sink(spark, tmp_path):
 def test_multimodal_feature_extraction(spark):
     from web_template_forensics_spark.operators.multimodal import (
         extract_media_features,
-        synth_media_df,
     )
 
     media = synth_media_df(spark, n=60)
@@ -178,7 +200,6 @@ def test_thumbnails_and_frame_sampling(spark):
         image_thumbnails,
         resize_image,
         sample_video_frames,
-        synth_media_df,
     )
 
     media = synth_media_df(spark, n=60)

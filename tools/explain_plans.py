@@ -22,6 +22,7 @@ PLAN_QUERIES = [
     "top_suppliers_per_nation",
     "parts_never_returned",
     "doc_cells",
+    "cell_hierarchy",
     "tile_rollup_z6",
     "pip_rectangles",
     "extract_text",
@@ -165,6 +166,15 @@ def main() -> None:
             "windows (lag gap-break, running-sum session number) AND the "
             "final per-session aggregate — no second shuffle; "
             "stream==batch parity is pytest-pinned."
+        ),
+        "pip_rectangles": (
+            "No Python worker: the points' level-5 cell keys probe the "
+            "broadcast cell index, the candidates join the broadcast "
+            "one-row-per-polygon edge table, and the exact even-odd ray "
+            "cast is an `aggregate` over the edge array, run as that "
+            "join's condition. "
+            "Both side tables are LocalTableScans (built from pandas over "
+            "Arrow), so broadcasting them runs no job."
         ),
         "knn_k5": (
             "One lazy plan, no driver action: a LEFT cell equi-join of each "

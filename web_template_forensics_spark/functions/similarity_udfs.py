@@ -9,13 +9,11 @@ equi-join fan-outs (SURVEY.md §4.2 "candidate pruning").
 
 from __future__ import annotations
 
-import json
-
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..oracle.similarity import compare_structures, seq_ratio
+from ..oracle.similarity import seq_ratio
 
 
 @F.pandas_udf(T.DoubleType())
@@ -23,33 +21,6 @@ def seq_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """difflib ratio (reference core/structure_comparator.py:327-329)."""
     return pd.Series(
         [seq_ratio("" if x is None else x, "" if y is None else y) for x, y in zip(a, b)]
-    )
-
-
-_STRUCT_SCHEMA = T.StructType(
-    [
-        T.StructField("score", T.DoubleType()),
-        T.StructField("matching", T.IntegerType()),
-        T.StructField("different", T.IntegerType()),
-        T.StructField("missing", T.IntegerType()),
-        T.StructField("extra", T.IntegerType()),
-    ]
-)
-
-
-@F.pandas_udf(_STRUCT_SCHEMA)
-def structure_compare_udf(a_json: pd.Series, b_json: pd.Series) -> pd.DataFrame:
-    """Reference compare_structures (core/structure_comparator.py:430-477)."""
-    rows = []
-    for a, b in zip(a_json, b_json):
-        res = compare_structures(
-            json.loads(a) if a else None, json.loads(b) if b else None
-        )
-        rows.append(
-            (res.similarity_score, res.matching, res.different, res.missing, res.extra)
-        )
-    return pd.DataFrame(
-        rows, columns=["score", "matching", "different", "missing", "extra"]
     )
 
 

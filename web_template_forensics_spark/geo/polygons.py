@@ -4,10 +4,12 @@ Polygons are plain Python structs (they are broadcast side data: the north
 rule's "broadcast polygon R-tree"), points are numpy arrays. The spatial
 index is a cell-bucket grid ("R-tree-lite"): each polygon is expanded to
 the WGQ cells its bbox covers at an index level; the join probes by cell
-equi-join, then runs the exact even-odd ray cast on the candidates inside
-a vectorized pandas UDF. At 100 TB this keeps the polygon side O(cells)
-in the broadcast and makes the candidate pairing a plain hash join on
-int64 keys (AQE-splittable if a cell is hot).
+equi-join, then runs the exact even-odd ray cast on the candidates as a
+JVM SQL expression over the polygon's edge array (``operators.spatial_join``;
+:func:`points_in_polygon` here is its numpy reference). At 100 TB this
+keeps the polygon side O(cells + edges) in the broadcast and makes the
+candidate pairing a plain hash join on int64 keys (AQE-splittable if a
+cell is hot).
 
 Tie rule (documented, deterministic): membership uses the standard
 crossing-number test with half-open edge intervals — a point exactly on a

@@ -344,27 +344,6 @@ def _features_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def synth_media_df(spark, n: int = 100, seed: int = 7) -> DataFrame:
-    """Deterministic synthetic media table for plumbing tests: seeded
-    noise payloads that no codec decodes, so every row takes the
-    byte-histogram fallback."""
-    rng = np.random.RandomState(seed)
-    kinds = ["image", "audio", "video"]
-    rows = []
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = rng.bytes(200 + (i % 50) * 10)
-        meta = {
-            "width": 16 + i % 16 if kind == "image" else None,
-            "height": 16 + (i + 1) % 16 if kind == "image" else None,
-            "sample_rate": 16000 if kind == "audio" else None,
-            "duration_ms": 1000 * (i % 30) if kind != "image" else None,
-            "codec": {"image": "fakepng", "audio": "fakepcm", "video": "fakeh264"}[kind],
-        }
-        rows.append((i, kind, payload, meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 def resize_image(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     """Nearest-neighbor resize (pure numpy index math — deterministic,
     codec-free; a real pipeline swaps in Pillow/opencv behind the same

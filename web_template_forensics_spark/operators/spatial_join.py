@@ -4,10 +4,11 @@ Scale design (the 100 TB story):
   * PIP — polygons are small side data; the cell-bucket index (cell_id ->
     poly_ids) is broadcast, so the candidate pairing is a broadcast hash
     join on int64 cell keys with NO shuffle of the page table. The exact
-    even-odd ray cast runs on candidates only, inside a numpy pandas UDF.
-    Hot cells (dense TLD clusters) are immune on the broadcast side; the
-    downstream per-polygon aggregation uses AQE skew splitting + optional
-    salting (operators in tiles.py).
+    even-odd ray cast runs on candidates only, as a JVM ``aggregate`` over
+    the polygon's edge array (a broadcast one-row-per-polygon table), so
+    no candidate crosses into Python. Hot cells (dense TLD clusters) are
+    immune on the broadcast side; the downstream per-polygon aggregation
+    uses AQE skew splitting + optional salting (operators in tiles.py).
   * kNN — one lazy plan, no driver action: every probe joins the corpus
     on its disk-1 cell ids (an equi-join, never the full cross product)
     and keeps its top k. A probe whose k-th candidate lies inside the
@@ -24,11 +25,39 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions.geo_udfs import cell_id_col, k_ring_col, tile_ix_col, tile_iy_col
-from ..geo.polygons import Polygon, build_cell_index, points_in_polygon
+from ..geo.polygons import Polygon, build_cell_index
+
+_EDGE_SCHEMA = (
+    "poly_id long, anti boolean, "
+    "edges array<struct<y1: double, x1: double, y2: double, x2: double>>"
+)
+
+# ``geo.polygons.points_in_polygon`` in SQL: the even-odd crossing count
+# over every ring's edges at once (all rings share one parity), with the
+# half-open straddle and ``_crossings``' operation order kept, so the
+# verdict is bitwise the numpy one. Lat is y, lon is x; an antimeridian
+# polygon's rings are already in the +360 frame, so negative probe lons
+# shift into it too. Horizontal edges never straddle and are left out of
+# the table, so no division by zero is ever built.
+_RAY_CAST = """
+  aggregate(edges, 0, (acc, e) -> acc + IF(
+    (e.y1 > lat) != (e.y2 > lat)
+      AND x < e.x1 + (lat - e.y1) * (e.x2 - e.x1) / (e.y2 - e.y1), 1, 0)) % 2 = 1
+"""
+
+
+def _edge_table(polygons: list[Polygon]) -> pd.DataFrame:
+    rows = []
+    for p in polygons:
+        # (y1, x1, y2, x2) per edge, every ring closed by its first vertex
+        e = np.concatenate([np.hstack([r, np.roll(r, -1, axis=0)]) for r in p.rings])
+        e = e[e[:, 0] != e[:, 2]]  # horizontal edges never straddle
+        edges = [dict(zip(("y1", "x1", "y2", "x2"), v)) for v in e.tolist()]
+        rows.append((p.poly_id, p.crosses_antimeridian, edges))
+    return pd.DataFrame(rows, columns=["poly_id", "anti", "edges"])
 
 
 def pip_join(
@@ -43,37 +72,25 @@ def pip_join(
     """Exact point-in-polygon join -> (id, poly_id).
 
     points: DataFrame with (id, lat, lon). polygons: small side data.
+    Both side tables are built from pandas over Arrow, so they plan as
+    local relations: broadcasting them runs no job and no Python worker.
     """
     index = build_cell_index(polygons, index_level)
-    index_rows = [(c, p) for c, ps in index.items() for p in ps]
-    index_df = spark.createDataFrame(index_rows, schema="cell_id long, poly_id long")
+    index_pdf = pd.DataFrame(
+        [(c, p) for c, ps in index.items() for p in ps], columns=["cell_id", "poly_id"]
+    ).astype("int64")
+    index_df = spark.createDataFrame(index_pdf, schema="cell_id long, poly_id long")
+    edges_df = spark.createDataFrame(_edge_table(polygons), schema=_EDGE_SCHEMA)
 
-    # cell key via the pure-SQL morton column: whole-stage-codegen JVM math,
-    # no Python round-trip just for the join key (exact same values as the
-    # numpy spec — parity-tested in tests/test_operators.py)
-    pts = points.withColumn("cell_id", cell_id_col(F.col(lat_col), F.col(lon_col), index_level))
-    cand = pts.join(F.broadcast(index_df), "cell_id").select(
-        F.col(id_col).alias("id"), F.col(lat_col).alias("lat"),
-        F.col(lon_col).alias("lon"), "poly_id",
+    pts = points.select(
+        F.col(id_col).alias("id"), F.col(lat_col).alias("lat"), F.col(lon_col).alias("lon"),
+        cell_id_col(lat_col, lon_col, index_level).alias("cell_id"),
     )
-
-    # a few KB pickled, so it ships inside the UDF closure: no broadcast
-    # variable to release after the query
-    polys_by_id = {p.poly_id: p for p in polygons}
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(lat: pd.Series, lon: pd.Series, pid: pd.Series) -> pd.Series:
-        lats = lat.to_numpy()
-        lons = lon.to_numpy()
-        pids = pid.to_numpy()
-        out = np.zeros(len(lats), dtype=bool)
-        for p in np.unique(pids):  # vectorize per polygon within the batch
-            mask = pids == p
-            out[mask] = points_in_polygon(lats[mask], lons[mask], polys_by_id[int(p)])
-        return pd.Series(out)
-
     return (
-        cand.filter(_pip("lat", "lon", "poly_id"))
+        pts.join(F.broadcast(index_df), "cell_id")
+        .join(F.broadcast(edges_df), "poly_id")
+        .withColumn("x", F.expr("IF(anti AND lon < 0, lon + 360.0D, lon)"))
+        .filter(F.expr(_RAY_CAST))
         .select("id", "poly_id")
     )
 
@@ -106,20 +123,20 @@ def knn_join(
         F.col("id").alias("neighbor_id"),
         lat.alias("n_lat"),
         lon.alias("n_lon"),
-        cell_id_col(lat, lon, level).alias("n_cell"),
+        cell_id_col("lat", "lon", level).alias("n_cell"),
     )
     probes_c = probes.select(
         F.col("id").alias("probe_id"),
         lat.alias("p_lat"),
         lon.alias("p_lon"),
-        tile_ix_col(lon, level).alias("p_ix"),
-        tile_iy_col(lat, level).alias("p_iy"),
+        tile_ix_col("lon", level).alias("p_ix"),
+        tile_iy_col("lat", level).alias("p_iy"),
     )
     # explode_outer keeps a probe with null coordinates (its ring is
     # empty), so it reaches the brute-force pass like any unproven probe
     disk = probes_c.select(
         "probe_id", "p_lat", "p_lon",
-        F.explode_outer(k_ring_col(F.col("p_ix"), F.col("p_iy"), level, 1)).alias("cell_id"),
+        F.explode_outer(k_ring_col("p_ix", "p_iy", level, 1)).alias("cell_id"),
     )
     # the self-exclusion sits inside the LEFT join's condition, so a probe
     # alone in its disk keeps one null row instead of vanishing

@@ -37,8 +37,8 @@ def tile_rollup(
         weights = [(weight_col, "byte_count")]
     else:
         weights = [(c, f"{c}_sum") for c in (weight_col or [])]
-    df = points.withColumn("tile_x", tile_ix_col(F.col(lon_col), z)).withColumn(
-        "tile_y", tile_iy_col(F.col(lat_col), z)
+    df = points.withColumn("tile_x", tile_ix_col(lon_col, z)).withColumn(
+        "tile_y", tile_iy_col(lat_col, z)
     )
     aggs = [F.count(F.lit(1)).alias("page_count")] + [
         F.sum(c).alias(n) for c, n in weights
@@ -81,8 +81,8 @@ def rasterize_tiles(
     z_fine = z_base + depth
     side = 1 << depth
     df = (
-        points.withColumn("fx", tile_ix_col(F.col(lon_col), z_fine))
-        .withColumn("fy", tile_iy_col(F.col(lat_col), z_fine))
+        points.withColumn("fx", tile_ix_col(lon_col, z_fine))
+        .withColumn("fy", tile_iy_col(lat_col, z_fine))
         .select(
             (F.col("fx") / side).cast("long").alias("tile_x"),
             (F.col("fy") / side).cast("long").alias("tile_y"),

@@ -27,12 +27,15 @@ PIP rectangles and the kNN fixtures.
 
 from __future__ import annotations
 
+import glob
 import itertools
+import os
 from collections.abc import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..functions.geo_udfs import cell_from_ij_col, cell_id_col, k_ring_col, morton_sql, tile_ix_col, tile_ix_sql, tile_iy_col, tile_iy_sql
@@ -78,24 +81,24 @@ PROBE_MOD = 25
 NGRAM_THRESHOLD = 0.004
 
 
-_LAYOUT_CACHE: dict[str, int] = {}
+# (path, (file, mtime_ns, size) per file) -> (Spark schema, row-group
+# count): one schema-inference job per table version instead of one per read
+_TABLE_CACHE: dict[tuple, tuple[StructType, int]] = {}
 
 
-def _parquet_row_groups(path: str) -> int:
-    """Total row-group count across a local parquet file/directory (driver-
-    side footer reads, O(files)). Returns a large number on any failure so
-    callers treat the table as already-splittable."""
-    import glob as _glob
-    import os as _os
+def _parquet_files(path: str) -> list[str]:
+    if os.path.isfile(path):
+        return [path]
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
 
+
+def _parquet_row_groups(files: list[str]) -> int:
+    """Total row-group count across local parquet files (driver-side footer
+    reads, O(files)). Returns a large number on any failure so callers
+    treat the table as already-splittable."""
     try:
         import pyarrow.parquet as _pq
 
-        files = (
-            [path]
-            if _os.path.isfile(path)
-            else sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-        )
         if not files:
             return 1 << 30
         return sum(_pq.ParquetFile(f).metadata.num_row_groups for f in files)
@@ -106,6 +109,10 @@ def _parquet_row_groups(path: str) -> int:
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a catalog table, guarding scan parallelism against coarse local
     layouts.
+
+    The Spark schema and the row-group count are taken once per table and
+    kept under the path and each file's mtime and size, so later reads skip
+    the schema-inference job and a table rewritten in place is read afresh.
 
     Parquet scans parallelize at ROW-GROUP granularity: Spark still makes
     byte-range splits, but a split that contains no row-group start returns
@@ -118,11 +125,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     vastly outnumber cores and this is a provable no-op.
     """
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if path not in _LAYOUT_CACHE:
-        _LAYOUT_CACHE[path] = _parquet_row_groups(path)
+    files = _parquet_files(path)
+    stats = ((f, os.stat(f)) for f in (path, *files))
+    key = (path, tuple((f, st.st_mtime_ns, st.st_size) for f, st in stats))
+    if key not in _TABLE_CACHE:
+        _TABLE_CACHE[key] = (spark.read.parquet(path).schema, _parquet_row_groups(files))
+    schema, row_groups = _TABLE_CACHE[key]
+    df = spark.read.schema(schema).parquet(path)
     parallelism = spark.sparkContext.defaultParallelism
-    if _LAYOUT_CACHE[path] < parallelism:
+    if row_groups < parallelism:
         df = df.repartition(parallelism)
     return df
 
@@ -136,17 +147,13 @@ def _epoch_us(col_name: str):
 
 
 def doc_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    h = (F.col("doc_id") * F.lit(H_MULT)) % F.lit(H_MOD)
-    lat = (h % F.lit(160001)).cast("double") / F.lit(1000.0) - F.lit(80.0)
-    lon = (
-        ((h.cast("long") / F.lit(1024)).cast("long") % F.lit(359001)).cast("double")
-        / F.lit(1000.0)
-        - F.lit(179.5)
-    )
-    return d.select(
-        F.col("doc_id"), F.col("lang"), F.col("n_chars"),
-        lat.alias("lat"), lon.alias("lon"),
+    # one parse for the whole projection; the D suffix makes the literals
+    # doubles (Spark reads a bare 1000.0 as a decimal)
+    h = f"((doc_id * {H_MULT}) % {H_MOD})"
+    return _t(spark, sf_dir, "documents").selectExpr(
+        "doc_id", "lang", "n_chars",
+        f"CAST({h} % 160001 AS DOUBLE) / 1000.0D - 80.0D AS lat",
+        f"CAST(({h} div 1024) % 359001 AS DOUBLE) / 1000.0D - 179.5D AS lon",
     )
 
 
@@ -399,9 +406,9 @@ def q_doc_cells(spark, sf_dir):
         "doc_id",
         F.round("lat", 6).alias("lat"),
         F.round("lon", 6).alias("lon"),
-        tile_ix_col(F.col("lon"), CELL_LEVEL).alias("cell_ix"),
-        tile_iy_col(F.col("lat"), CELL_LEVEL).alias("cell_iy"),
-        cell_id_col(F.col("lat"), F.col("lon"), CELL_LEVEL).alias("cell_id"),
+        tile_ix_col("lon", CELL_LEVEL).alias("cell_ix"),
+        tile_iy_col("lat", CELL_LEVEL).alias("cell_iy"),
+        cell_id_col("lat", "lon", CELL_LEVEL).alias("cell_id"),
     )
 
 
@@ -1555,16 +1562,15 @@ def q_cell_hierarchy(spark, sf_dir):
     pts = doc_points(spark, sf_dir).filter(F.col("doc_id") % KRING_SAMPLE_MOD == 0)
     ij = pts.select(
         "doc_id",
-        tile_ix_col(F.col("lon"), CELL_LEVEL).alias("ix"),
-        tile_iy_col(F.col("lat"), CELL_LEVEL).alias("iy"),
+        tile_ix_col("lon", CELL_LEVEL).alias("ix"),
+        tile_iy_col("lat", CELL_LEVEL).alias("iy"),
     )
-    ix, iy = F.col("ix"), F.col("iy")
     shift = CELL_LEVEL - PARENT_LEVEL
     return ij.select(
         "doc_id",
-        cell_from_ij_col(ix, iy, CELL_LEVEL).alias("cell_id"),
-        cell_from_ij_col(F.shiftright(ix, shift), F.shiftright(iy, shift), PARENT_LEVEL).alias("parent_id"),
-        F.explode(k_ring_col(ix, iy, CELL_LEVEL, KRING_K)).alias("ring_cell"),
+        cell_from_ij_col("ix", "iy", CELL_LEVEL).alias("cell_id"),
+        cell_from_ij_col(f"ix >> {shift}", f"iy >> {shift}", PARENT_LEVEL).alias("parent_id"),
+        F.explode(k_ring_col("ix", "iy", CELL_LEVEL, KRING_K)).alias("ring_cell"),
     )
 
 

@@ -10,11 +10,9 @@ pure function of (seed, media_id): regenerating any partition yields
 byte-identical payloads, which is what lets the bench cache the corpus
 to parquet and lets tests decode rows independently.
 
-This is the real-codec sibling of
-``operators.multimodal.synth_media_df`` (seeded noise bytes that no
-codec decodes, for plumbing tests): here every payload round-trips
-through the package's own encoders, so ``extract_media_features`` over
-this table measures actual decode throughput with zero fallback rows.
+Every payload round-trips through the package's own encoders, so
+``extract_media_features`` over this table measures actual decode
+throughput with zero fallback rows.
 
 Reference parity: the reference repo has no binary-asset path at all
 (SURVEY.md §2 multimodal graft) — this source exists for the
