@@ -1,20 +1,21 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on the
-executor-JVM substrate (default: local-cluster with 8 one-core executor
-JVMs — the SAME substrate the N-vs-4N scaling protocol measures on, so
-headline and scaling numbers are comparable by construction). Prints ONE
-JSON line:
+executor-JVM substrate (``local-cluster``: 8 one-core executor JVMs by
+default). Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 ``value``/``queries`` are min-over-passes wall times (contract continuity
 with earlier rounds); ``value_cold``/``queries_cold`` is the first pass
 (plan compile + codegen + broadcast included) and ``value_warm`` the min
 of later passes — reported separately so round-over-round comparisons
-are not confounded by warmup. Throughput fields for the scaling protocol
-(BENCH/BASELINE.md) are under "pages_per_sec" (+ "_cold").
+are not confounded by warmup. Throughput legs (BENCH/BASELINE.md) are
+under "pages_per_sec", "cascade_pairs_per_sec" and "media_items_per_sec"
+(+ "_cold").
 
 Usage: python bench.py                              # sf0.1, 8 executor JVMs
        SPARK_GRAFT_CPUS=16 python bench.py          # more executor JVMs
-       SPARK_GRAFT_BENCH_MODE=threads python bench.py  # legacy local[N]
+
+The same-host performance gate is perfbench/ (see README.md), not this
+script.
 """
 
 from __future__ import annotations
@@ -24,60 +25,61 @@ import os
 import sys
 import time
 
-
-def _healthy_core_count(get_spark, requested: int) -> tuple[int, bool]:
-    """Guard against the sandbox's single-JVM thread-scaling pathology
-    (BENCH/jvm_probe.py): some hosts collapse above ~8-12 task threads in
-    ONE JVM while raw processes scale fine. Measure a pure-JVM codegen
-    loop at the requested level vs local[8]; if per-core throughput at
-    the requested level is < 60% of local[8]'s, run the bench at 8 and
-    report the fallback in the output JSON. On a multi-executor cluster
-    (<= 8-16 cores per executor JVM) this never fires."""
-    from pyspark.sql import functions as F
-
-    def per_core(cores: int) -> float:
-        spark = get_spark(f"probe-{cores}", cores=cores, shuffle_partitions=cores)
-        spark.range(10).count()
-        n = 4_000_000 * cores
-        t0 = time.perf_counter()
-        (
-            spark.range(0, n, 1, cores * 2)
-            .select(F.count(F.when(F.xxhash64(F.sha2(F.col("id").cast("string"), 256)) % 2 == 0, 1)))
-            .collect()
-        )
-        wall = time.perf_counter() - t0
-        spark.stop()
-        return n / cores / wall
-
-    base = per_core(8)
-    req = per_core(requested)
-    if req < 0.6 * base:
-        print(
-            f"# JVM thread-scaling pathology: per-core throughput at "
-            f"local[{requested}] is {req / base:.2f}x of local[8]'s — "
-            f"running the bench at local[8] (see BENCH/jvm_probe.py)",
-            file=sys.stderr,
-        )
-        return 8, True
-    return requested, False
+REPO = os.path.dirname(os.path.abspath(__file__))
 
 
-def _healthy_cluster_count(get_spark, cluster_conf, requested: int) -> tuple[int, bool]:
-    """The cluster-mode twin of _healthy_core_count (r5 verdict ask #4:
-    bench.py trusted SPARK_GRAFT_CPUS verbatim in cluster mode, so the
-    driver's 32-JVM artifact inherited the documented >8-JVM host wall
-    and per-query numbers stopped being comparable round-over-round).
-    Measures per-core codegen throughput on N one-core executor JVMs vs
-    8; if the requested level runs below 60% of 8's per-core rate, the
-    bench runs at 8 and reports the fallback in the JSON."""
+def _cluster_spark(app_name: str, executors: int, shuffle_partitions: int):
+    """``executors`` separate one-core executor JVMs over real
+    BlockManager/RPC (``local-cluster``), each with its own Python worker
+    and a 3 GiB budget — the sandbox proxy for N executors."""
+    from web_template_forensics_spark.session import get_spark
+
+    spark = get_spark(
+        app_name, cores=executors, shuffle_partitions=shuffle_partitions,
+        extra_conf={
+            "spark.master": f"local-cluster[{executors},1,3072]",
+            "spark.executorEnv.PYTHONPATH": REPO,
+            "spark.driver.memory": "8g",
+        },
+    )
+    _silence_deploy_loggers(spark)
+    return spark
+
+
+def _silence_deploy_loggers(spark) -> None:
+    """In ``local-cluster`` mode the standalone Master/Worker run inside
+    the DRIVER JVM and log at WARN; at teardown of a long run the Master
+    emits thousands of ``Got status update for unknown executor`` lines,
+    which drowned this script's one-JSON-line output in round 4
+    (BENCH_r04.json ``parsed: null``). Drop the whole deploy subsystem to
+    ERROR — its WARNs are executor-churn bookkeeping, never actionable
+    here. Best-effort: a driver without log4j2 (or a future Spark that
+    renames it) just keeps the default levels."""
+    try:
+        jvm = spark.sparkContext._jvm
+        configurator = jvm.org.apache.logging.log4j.core.config.Configurator
+        level = jvm.org.apache.logging.log4j.Level.ERROR
+        for logger in (
+            "org.apache.spark.deploy",  # Master, Worker, client
+            "org.apache.spark.scheduler.cluster",  # executor add/remove churn
+        ):
+            configurator.setLevel(logger, level)
+    except Exception:
+        pass
+
+
+def _healthy_cluster_count(requested: int) -> tuple[int, bool]:
+    """Guard against the host's own parallel-JVM wall (r5 verdict ask #4:
+    bench.py trusted SPARK_GRAFT_CPUS verbatim, so the driver's 32-JVM
+    artifact inherited the documented >8-JVM host wall and per-query
+    numbers stopped being comparable round-over-round). Measures per-core
+    codegen throughput on N one-core executor JVMs vs 8; if the requested
+    level runs below 60% of 8's per-core rate, the bench runs at 8 and
+    reports the fallback in the JSON."""
     from pyspark.sql import functions as F
 
     def per_core(n: int) -> float:
-        master, extra = cluster_conf(n)
-        spark = get_spark(
-            f"cprobe-{n}", cores=n, shuffle_partitions=n,
-            master=master, extra_conf=extra,
-        )
+        spark = _cluster_spark(f"cprobe-{n}", n, n)
         spark.range(10).count()
         rows = 2_000_000 * n
         t0 = time.perf_counter()
@@ -96,7 +98,7 @@ def _healthy_cluster_count(get_spark, cluster_conf, requested: int) -> tuple[int
         print(
             f"# executor-JVM host wall: per-core throughput at {requested} "
             f"one-core JVMs is {req / base:.2f}x of 8's — running the bench "
-            f"at 8 executors (see BENCH/jvm_probe.py)",
+            f"at 8 executors (see BENCH/BASELINE.md)",
             file=sys.stderr,
         )
         return 8, True
@@ -131,50 +133,26 @@ def _host_probe(procs: int = 8) -> float:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     pages_rows = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "200000"))
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, REPO)
 
-    from web_template_forensics_spark.session import get_spark
     from web_template_forensics_spark.plans.queries import QUERIES
 
-    # Round-4 default substrate: the EXECUTOR-JVM cluster (the same
-    # local-cluster recipe the scaling protocol measures on), so the
-    # headline numbers and the N-vs-4N efficiency numbers come off one
-    # substrate and are comparable by construction. 8 one-core executor
-    # JVMs is the measured healthy range on this host: separate JVMs
-    # sidestep the single-JVM thread collapse, but the host ALSO
-    # collapses under ~32 parallel JVMs (623 -> 38 krows/s/core measured
-    # on the jvm_probe codegen loop at 8 vs 32 executors), so 8 is the
-    # default in cluster mode; SPARK_GRAFT_CPUS overrides explicitly.
-    mode = os.environ.get("SPARK_GRAFT_BENCH_MODE", "cluster")
+    # 8 one-core executor JVMs is the measured healthy range on the
+    # round-4 host: separate JVMs sidestep the single-JVM thread collapse,
+    # but that host ALSO collapsed under ~32 parallel JVMs (623 -> 38
+    # krows/s/core on a codegen loop at 8 vs 32 executors), so 8 is the
+    # default; SPARK_GRAFT_CPUS overrides explicitly.
     cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    cpus = int(cpus_env) if cpus_env else (8 if mode == "cluster" else 32)
+    cpus = int(cpus_env) if cpus_env else 8
 
     host_probe_pre = _host_probe()
 
     cpus_requested = cpus
     jvm_pathology = False
-    if mode == "cluster":
-        # N separate one-core executor JVMs (the scaling protocol's
-        # substrate, BENCH/scaling.py) — immune to the single-JVM
-        # thread-scaling pathology, but NOT to the host's own >8-JVM
-        # parallel wall (BENCH/jvm_probe.py), so probe that too.
-        from web_template_forensics_spark.session import cluster_conf
-
-        if cpus > 8 and os.environ.get("SPARK_GRAFT_SKIP_PROBE") != "1":
-            cpus, jvm_pathology = _healthy_cluster_count(
-                get_spark, cluster_conf, cpus
-            )
-        master, extra = cluster_conf(cpus)
-        substrate = f"{master} ({cpus} one-core executor JVMs)"
-        spark = get_spark(
-            "bench", cores=cpus, shuffle_partitions=max(cpus, 8),
-            master=master, extra_conf=extra,
-        )
-    else:
-        if cpus > 8 and os.environ.get("SPARK_GRAFT_SKIP_PROBE") != "1":
-            cpus, jvm_pathology = _healthy_core_count(get_spark, cpus)
-        substrate = f"local[{cpus}] (single JVM, {cpus} task threads)"
-        spark = get_spark("bench", cores=cpus, shuffle_partitions=max(cpus, 8))
+    if cpus > 8 and os.environ.get("SPARK_GRAFT_SKIP_PROBE") != "1":
+        cpus, jvm_pathology = _healthy_cluster_count(cpus)
+    substrate = f"local-cluster[{cpus},1,3072] ({cpus} one-core executor JVMs)"
+    spark = _cluster_spark("bench", cpus, max(cpus, 8))
 
     # Warm the Python worker pool (parallel cold imports of pandas/numpy in
     # every worker dominate the first Arrow-UDF action; the measurement
@@ -244,13 +222,12 @@ def main() -> None:
     from web_template_forensics_spark.sources.pages import build_pages_df
 
     rich = int(os.environ.get("SPARK_GRAFT_PAGE_RICH", "8"))
-    repo = os.path.dirname(os.path.abspath(__file__))
-    # Fine-grained layout (shared cache with BENCH/scaling.py): parquet
-    # scans parallelize at row-group granularity, and the r1/r2 bench
-    # inputs (a couple of giant row groups) silently serialized the parse
-    # stage onto 1-8 tasks regardless of core count.
+    # Fine-grained layout: parquet scans parallelize at row-group
+    # granularity, and the r1/r2 bench inputs (a couple of giant row
+    # groups) silently serialized the parse stage onto 1-8 tasks
+    # regardless of core count.
     n_files = max(32, pages_rows // 10_000)
-    pages_path = os.path.join(repo, ".bench_data", f"pages_{pages_rows}_r{rich}_f{n_files}")
+    pages_path = os.path.join(REPO, ".bench_data", f"pages_{pages_rows}_r{rich}_f{n_files}")
     if not os.path.isdir(pages_path):
         print(f"# generating {pages_rows} pages to {pages_path}", file=sys.stderr)
         build_pages_df(spark, pages_rows, seed=42, rich=rich).repartition(
@@ -293,7 +270,7 @@ def main() -> None:
     from web_template_forensics_spark.sources.pairs import build_pair_files_df
 
     cascade_pairs = int(os.environ.get("SPARK_GRAFT_BENCH_CASCADE_PAIRS", "10000"))
-    pairs_path = os.path.join(repo, ".bench_data", f"pairs_{cascade_pairs}")
+    pairs_path = os.path.join(REPO, ".bench_data", f"pairs_{cascade_pairs}")
     # _SUCCESS, not isdir: an interrupted prior generation leaves a
     # partial directory that would silently benchmark a smaller corpus
     # (cascade_pairs_per_sec computed against the intended count)
@@ -338,7 +315,7 @@ def main() -> None:
     media_rows = int(os.environ.get("SPARK_GRAFT_BENCH_MEDIA", "6000"))
     # v3: corpus covers all seven codecs (v2 added GIF/WebP, v3 FLAC) —
     # versioned cache so a stale parquet never serves an old generator
-    media_path = os.path.join(repo, ".bench_data", f"media_v3_{media_rows}")
+    media_path = os.path.join(REPO, ".bench_data", f"media_v3_{media_rows}")
     if not os.path.exists(os.path.join(media_path, "_SUCCESS")):
         print(f"# generating {media_rows} media rows to {media_path}", file=sys.stderr)
         build_media_df(spark, media_rows, seed=42).write.mode("overwrite").parquet(
@@ -418,7 +395,7 @@ def main() -> None:
             "cpus": cpus,
             "cpus_requested": cpus_requested,
             "jvm_thread_pathology": jvm_pathology,
-            "mode": mode,
+            "mode": "cluster",
             "substrate": substrate,
             "repeats": repeats,
             # concurrent host-capacity readings bracketing the measured
@@ -430,10 +407,10 @@ def main() -> None:
     # Artifact durability (round-4 failure: BENCH_r04.json parsed:null —
     # the JSON line was pushed out of the captured output tail by
     # thousands of standalone-Master teardown WARNs). Three defenses:
-    # the deploy loggers are at ERROR (session._silence_deploy_loggers),
+    # the deploy loggers are at ERROR (_silence_deploy_loggers),
     # the result is persisted to a file the tail can never drown, and
     # Spark is stopped BEFORE the line is printed so nothing logs after.
-    with open(os.path.join(repo, "BENCH", "last_run.json"), "w") as fh:
+    with open(os.path.join(REPO, "BENCH", "last_run.json"), "w") as fh:
         fh.write(result + "\n")
     spark.stop()
     sys.stderr.flush()

@@ -1,5 +1,5 @@
 """Driver-contract tests: entry() smoke + a fast oracle-compare subset at
-sf0.001 (the full sweep runs via tools/compare_oracle.py at sf0.01)."""
+sf0.001 (the full sweep is tests/test_oracle_full.py at sf0.01)."""
 
 import os
 import sys

@@ -3,7 +3,7 @@ cross-doc span dedup, PII accounting — Column face vs the pure-Python
 twin, plus envelope assertions that every rule branch actually fires.
 
 The DuckDB faces are pinned by the correctness gate
-(tools/compare_oracle.py — doc_quality_rules, doc_repetition_stats,
+(tests/test_oracle_full.py — doc_quality_rules, doc_repetition_stats,
 window_span_dedup, pii_stats); these tests pin the SPEC itself on
 crafted strings the synthetic corpus cannot produce.
 """

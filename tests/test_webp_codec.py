@@ -10,6 +10,7 @@ import struct
 import numpy as np
 import pytest
 
+from web_template_forensics_spark.functions import webp_codec as wc
 from web_template_forensics_spark.functions.webp_codec import (
     WebpFormatError,
     decode_webp,
@@ -364,16 +365,112 @@ def test_two_symbol_green_with_length_code_uses_normal_form():
     _check(np.full((30, 50, 3), 7, dtype=np.uint8), use_lz77=True)
 
 
+def _lz77_value(code: int, br) -> int:
+    """Length/distance prefix value: code -> value (spec 'LZ77 prefix
+    coding')."""
+    if code < 4:
+        return code + 1
+    extra = (code - 2) >> 1
+    offset = (2 + (code & 1)) << extra
+    return offset + br.read(extra) + 1
+
+
+def _decode_argb_image_ref(
+    br, width: int, height: int, allow_meta: bool
+) -> np.ndarray:
+    """Reference twin of ``webp_codec._decode_argb_image``: the readable
+    per-pixel form of the same decode, for the bitwise parity pin below."""
+    cache_bits = 0
+    if br.read(1):
+        cache_bits = br.read(4)
+        if not 1 <= cache_bits <= 11:
+            raise WebpFormatError(f"invalid color cache bits {cache_bits}")
+    meta_codes = None
+    meta_bits = 0
+    n_groups = 1
+    if allow_meta and br.read(1):
+        meta_bits = br.read(3) + 2
+        mw = wc._subsample_size(width, meta_bits)
+        mh = wc._subsample_size(height, meta_bits)
+        meta_img = _decode_argb_image_ref(br, mw, mh, allow_meta=False)
+        # meta prefix ids live in (red << 8 | green)
+        meta_codes = (
+            meta_img[:, 1].astype(np.int64) << 8 | meta_img[:, 2].astype(np.int64)
+        ).reshape(mh, mw)
+        n_groups = int(meta_codes.max()) + 1
+    green_size = 256 + 24 + (1 << cache_bits if cache_bits else 0)
+    groups = []
+    for _ in range(n_groups):
+        groups.append(
+            (
+                wc._read_prefix_code(br, green_size),
+                wc._read_prefix_code(br, 256),  # red
+                wc._read_prefix_code(br, 256),  # blue
+                wc._read_prefix_code(br, 256),  # alpha
+                wc._read_prefix_code(br, 40),  # distance
+            )
+        )
+    cache = [0] * (1 << cache_bits) if cache_bits else None
+    out = np.zeros((height * width, 4), dtype=np.uint8)  # a, r, g, b
+    pos = 0
+    total = height * width
+    g_green, g_red, g_blue, g_alpha, g_dist = groups[0]
+    while pos < total:
+        if meta_codes is not None:
+            x = pos % width
+            y = pos // width
+            gid = int(meta_codes[y >> meta_bits, x >> meta_bits])
+            if gid >= n_groups:
+                raise WebpFormatError("meta prefix id out of range")
+            g_green, g_red, g_blue, g_alpha, g_dist = groups[gid]
+        sym = g_green.decode(br)
+        if sym < 256:  # literal
+            r = g_red.decode(br)
+            b = g_blue.decode(br)
+            a = g_alpha.decode(br)
+            out[pos, 0] = a
+            out[pos, 1] = r
+            out[pos, 2] = sym
+            out[pos, 3] = b
+            if cache is not None:
+                argb = (a << 24) | (r << 16) | (sym << 8) | b
+                cache[((argb * 0x1E35A7BD) & 0xFFFFFFFF) >> (32 - cache_bits)] = argb
+            pos += 1
+        elif sym < 280:  # backward reference
+            length = _lz77_value(sym - 256, br)
+            dist_code = _lz77_value(g_dist.decode(br), br)
+            dist = wc._plane_distance(dist_code, width)
+            if dist > pos or pos + length > total:
+                raise WebpFormatError("LZ77 reference out of bounds")
+            for k in range(length):
+                out[pos + k] = out[pos + k - dist]
+                if cache is not None:
+                    a, r, g, b = out[pos + k]
+                    argb = (int(a) << 24) | (int(r) << 16) | (int(g) << 8) | int(b)
+                    cache[((argb * 0x1E35A7BD) & 0xFFFFFFFF) >> (32 - cache_bits)] = argb
+            pos += length
+        else:  # color cache hit
+            if cache is None:
+                raise WebpFormatError("cache symbol without color cache")
+            idx = sym - 280
+            if idx >= len(cache):
+                raise WebpFormatError("color cache index out of range")
+            argb = cache[idx]
+            out[pos, 0] = (argb >> 24) & 0xFF
+            out[pos, 1] = (argb >> 16) & 0xFF
+            out[pos, 2] = (argb >> 8) & 0xFF
+            out[pos, 3] = argb & 0xFF
+            pos += 1
+    return out
+
+
 def test_fast_argb_decode_matches_reference_bitwise(monkeypatch):
     """r7: _decode_argb_image inlines the bit reader and packs pixels as
     ints; pin it bitwise against _decode_argb_image_ref at EVERY internal
     call site (main image, entropy images, palettes, meta images,
     animation frames) by pairing the two on cloned readers mid-stream."""
-    from web_template_forensics_spark.functions import webp_codec as wc
     from web_template_forensics_spark.functions.webp_codec import (
-        decode_webp,
         decode_webp_frames,
-        encode_webp,
         encode_webp_animation,
     )
 
@@ -385,7 +482,7 @@ def test_fast_argb_decode_matches_reference_bitwise(monkeypatch):
         clone.w32, clone.pos, clone.n = br.w32, br.pos, br.n
         # ref runs UNPATCHED (self-recursive) so each outer call compares
         # whole subtrees; fast recursion is itself re-paired per call
-        ref_out = wc._decode_argb_image_ref(clone, w, h, allow_meta)
+        ref_out = _decode_argb_image_ref(clone, w, h, allow_meta)
         out = fast(br, w, h, allow_meta)
         assert out.dtype == ref_out.dtype and out.shape == ref_out.shape
         assert (out == ref_out).all()

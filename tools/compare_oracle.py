@@ -1,16 +1,15 @@
-"""Local replica of the driver's correctness gate.
+"""Spark-vs-DuckDB result comparison for the oracle gate.
 
-Runs every ``queries()`` entry on Spark and, where an ``oracle_sql()``
-entry exists, the same query in DuckDB over the identical parquet files,
-then compares row count, column-name set and exact cell values
-(order-insensitive). Usage:
+``duck_con`` opens DuckDB views over an sf directory's parquet tables;
+``compare`` checks a Spark result against the DuckDB result of its
+``oracle_sql()`` entry: row count, column-name set and exact cell values
+(order-insensitive, via ``canon``). The gate itself is
+tests/test_oracle_full.py:
 
-    python tools/compare_oracle.py [sf_dir] [query ...]
+    SPARK_GRAFT_ORACLE_FULL=1 python -m pytest tests/test_oracle_full.py -q [-k name]
 """
 
 from __future__ import annotations
-
-import sys
 
 import duckdb
 import numpy as np
@@ -71,53 +70,3 @@ def compare(name: str, sdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
                 )
     return problems
 
-
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    sys.path.insert(0, ".")
-    import __spark_entry__ as entrymod
-    from web_template_forensics_spark.session import get_spark
-
-    unknown = only - set(entrymod.queries())
-    if unknown:
-        print(f"unknown query name(s): {sorted(unknown)}", file=sys.stderr)
-        return 2
-
-    spark = get_spark("compare-oracle", cores=8, shuffle_partitions=8)
-    con = duck_con(sf_dir)
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    failures = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"[FAIL] {name}: spark error {type(e).__name__}: {str(e)[:300]}")
-            failures += 1
-            continue
-        if name not in oracles:
-            print(f"[rows-only] {name}: {len(sdf)} rows, cols {list(sdf.columns)}")
-            continue
-        try:
-            ddf = con.sql(oracles[name]).df()
-        except Exception as e:  # noqa: BLE001
-            print(f"[FAIL] {name}: duckdb error {type(e).__name__}: {str(e)[:300]}")
-            failures += 1
-            continue
-        problems = compare(name, sdf, ddf)
-        if problems:
-            failures += 1
-            print(f"[FAIL] {name} ({len(sdf)} rows):")
-            for p in problems:
-                print(f"       {p}")
-        else:
-            print(f"[OK]   {name}: {len(sdf)} rows match exactly")
-    print(f"\n{failures} failures")
-    return 1 if failures else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

@@ -265,14 +265,6 @@ def _utf8_write(bw: _BitWriter, v: int) -> None:
         bw.write(0x80 | ((v >> (6 * k)) & 0x3F), 8)
 
 
-_FIXED_COEFS = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
-
 _BLOCKSIZES = {
     1: 192, 2: 576, 3: 1152, 4: 2304, 5: 4608,
     8: 256, 9: 512, 10: 1024, 11: 2048, 12: 4096,

@@ -237,16 +237,6 @@ def _read_prefix_code(br: _BitReader, alphabet_size: int) -> _PrefixCode:
 # -------------------------------------------------------- LZ77 plumbing
 
 
-def _lz77_value(code: int, br: _BitReader) -> int:
-    """Length/distance prefix value: code -> value (spec 'LZ77 prefix
-    coding')."""
-    if code < 4:
-        return code + 1
-    extra = (code - 2) >> 1
-    offset = (2 + (code & 1)) << extra
-    return offset + br.read(extra) + 1
-
-
 # normative table (spec section 'Decoding the distance'): the fixed
 # 120-entry (dx, dy) neighbor map for distance codes 1..120
 _DIST_MAP = [
@@ -284,105 +274,15 @@ def _subsample_size(size: int, bits: int) -> int:
     return (size + (1 << bits) - 1) >> bits
 
 
-def _decode_argb_image_ref(
-    br: _BitReader, width: int, height: int, allow_meta: bool
-) -> np.ndarray:
-    """Reference twin of :func:`_decode_argb_image` (the readable
-    per-pixel form, kept for the bitwise parity pin in
-    tests/test_webp_codec.py). Spatially-coded ARGB image ->
-    (height*width, 4) uint8 [a, r, g, b]. Implements color cache, meta
-    prefix codes (when ``allow_meta``) and LZ77 — the shared machinery
-    for the main image, entropy images and palettes."""
-    cache_bits = 0
-    if br.read(1):
-        cache_bits = br.read(4)
-        if not 1 <= cache_bits <= 11:
-            raise WebpFormatError(f"invalid color cache bits {cache_bits}")
-    meta_codes = None
-    meta_bits = 0
-    n_groups = 1
-    if allow_meta and br.read(1):
-        meta_bits = br.read(3) + 2
-        mw = _subsample_size(width, meta_bits)
-        mh = _subsample_size(height, meta_bits)
-        meta_img = _decode_argb_image_ref(br, mw, mh, allow_meta=False)
-        # meta prefix ids live in (red << 8 | green)
-        meta_codes = (
-            meta_img[:, 1].astype(np.int64) << 8 | meta_img[:, 2].astype(np.int64)
-        ).reshape(mh, mw)
-        n_groups = int(meta_codes.max()) + 1
-    green_size = 256 + 24 + (1 << cache_bits if cache_bits else 0)
-    groups = []
-    for _ in range(n_groups):
-        groups.append(
-            (
-                _read_prefix_code(br, green_size),
-                _read_prefix_code(br, 256),  # red
-                _read_prefix_code(br, 256),  # blue
-                _read_prefix_code(br, 256),  # alpha
-                _read_prefix_code(br, 40),  # distance
-            )
-        )
-    cache = [0] * (1 << cache_bits) if cache_bits else None
-    out = np.zeros((height * width, 4), dtype=np.uint8)  # a, r, g, b
-    pos = 0
-    total = height * width
-    g_green, g_red, g_blue, g_alpha, g_dist = groups[0]
-    while pos < total:
-        if meta_codes is not None:
-            x = pos % width
-            y = pos // width
-            gid = int(meta_codes[y >> meta_bits, x >> meta_bits])
-            if gid >= n_groups:
-                raise WebpFormatError("meta prefix id out of range")
-            g_green, g_red, g_blue, g_alpha, g_dist = groups[gid]
-        sym = g_green.decode(br)
-        if sym < 256:  # literal
-            r = g_red.decode(br)
-            b = g_blue.decode(br)
-            a = g_alpha.decode(br)
-            out[pos, 0] = a
-            out[pos, 1] = r
-            out[pos, 2] = sym
-            out[pos, 3] = b
-            if cache is not None:
-                argb = (a << 24) | (r << 16) | (sym << 8) | b
-                cache[((argb * 0x1E35A7BD) & 0xFFFFFFFF) >> (32 - cache_bits)] = argb
-            pos += 1
-        elif sym < 280:  # backward reference
-            length = _lz77_value(sym - 256, br)
-            dist_code = _lz77_value(g_dist.decode(br), br)
-            dist = _plane_distance(dist_code, width)
-            if dist > pos or pos + length > total:
-                raise WebpFormatError("LZ77 reference out of bounds")
-            for k in range(length):
-                out[pos + k] = out[pos + k - dist]
-                if cache is not None:
-                    a, r, g, b = out[pos + k]
-                    argb = (int(a) << 24) | (int(r) << 16) | (int(g) << 8) | int(b)
-                    cache[((argb * 0x1E35A7BD) & 0xFFFFFFFF) >> (32 - cache_bits)] = argb
-            pos += length
-        else:  # color cache hit
-            if cache is None:
-                raise WebpFormatError("cache symbol without color cache")
-            idx = sym - 280
-            if idx >= len(cache):
-                raise WebpFormatError("color cache index out of range")
-            argb = cache[idx]
-            out[pos, 0] = (argb >> 24) & 0xFF
-            out[pos, 1] = (argb >> 16) & 0xFF
-            out[pos, 2] = (argb >> 8) & 0xFF
-            out[pos, 3] = argb & 0xFF
-            pos += 1
-    return out
-
-
 def _decode_argb_image(
     br: _BitReader, width: int, height: int, allow_meta: bool
 ) -> np.ndarray:
-    """Fast form of :func:`_decode_argb_image_ref` (same bitstream, same
-    errors, bitwise-identical output — pinned in tests/test_webp_codec.py):
-    the per-pixel prefix decodes are inlined over the reader's 32-bit
+    """Spatially-coded ARGB image -> (height*width, 4) uint8 [a, r, g, b].
+    Implements color cache, meta prefix codes (when ``allow_meta``) and
+    LZ77 — the shared machinery for the main image, entropy images and
+    palettes. Bitwise-identical to the readable per-pixel reference twin
+    in tests/test_webp_codec.py (same bitstream, same errors): the
+    per-pixel prefix decodes are inlined over the reader's 32-bit
     window (one list index + shift per symbol instead of two method calls),
     pixels accumulate as packed ARGB ints in a plain list (numpy scalar
     stores were ~40% of the loop), and LZ77 copies run chunk-wise with the
@@ -598,9 +498,6 @@ def _inv_color_indexing(
         # libwebp; be strict instead (hostile input)
         raise WebpFormatError("palette index out of range")
     return palette[full.reshape(-1)]
-
-
-_PRED_MODES = 14
 
 
 def _inv_predictor(

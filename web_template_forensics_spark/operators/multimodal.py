@@ -465,6 +465,9 @@ def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
                         )
                     except (ValueError, NotImplementedError):
                         frames = None
+                # a rotation has the payload's byte multiset, so every
+                # fallback position shares the payload's histogram
+                fallback = None
                 for fno, pos in enumerate(positions):
                     img = None
                     if spans:
@@ -489,7 +492,9 @@ def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
                             # corrupt or codec-less: histogram the raw bytes
                             img = None
                     if img is None:
-                        feat, _ = _byte_histogram_features(chunk)
+                        if fallback is None:
+                            fallback, _ = _byte_histogram_features(payload)
+                        feat = fallback
                     else:
                         feat = _hist8_u8(img).astype(np.float64)
                         feat = feat / max(1.0, feat.sum())

@@ -203,11 +203,6 @@ def _rects_values_sql() -> str:
     return f"(VALUES {rows}) AS r(poly_id, lat0, lon0, lat1, lon1)"
 
 
-_ESCAPED_TEXT_SQL = (
-    "replace(replace(replace(text, '&', '&amp;'), '<', '&lt;'), '>', '&gt;')"
-)
-
-
 def _escaped_text_col():
     e = F.regexp_replace(F.col("text"), F.lit("&"), F.lit("&amp;"))
     e = F.regexp_replace(e, F.lit("<"), F.lit("&lt;"))

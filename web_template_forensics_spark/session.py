@@ -3,7 +3,8 @@
 Local mode is the sandbox proxy for a multi-executor cluster: partitioning,
 broadcast and skew decisions are made as if each of the N threads were an
 executor. The same builder config ships unchanged in the ``spark-submit
---py-files`` job (`jobs/run_pipeline.py`).
+--py-files`` job (`jobs/run_pipeline.py`); bench.py runs it on its
+``local-cluster`` substrate by passing ``spark.master`` in ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    master: str | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
@@ -26,10 +26,9 @@ def get_spark(
     on a real cluster this is overridden to ~2-3x total executor cores; AQE
     coalesces downward at runtime either way.
 
-    ``master`` overrides the master URL entirely (e.g.
-    ``local-cluster[N,1,mem]`` for the multi-JVM scaling protocol, where
-    each executor is a separate JVM — the sandbox proxy for N executors);
-    ``cores`` then only sizes the shuffle-partition default.
+    ``extra_conf`` is applied last, so it overrides any pinned setting,
+    the master URL included (``{"spark.master": ...}``); ``cores`` then
+    only sizes the shuffle-partition default.
     """
     cores_s = "*" if cores is None else str(cores)
     effective_cores = cores if cores is not None else (os.cpu_count() or 8)
@@ -37,11 +36,9 @@ def get_spark(
     # spark-submit compatibility: builder options override spark-submit's
     # --master, so forcing local[] here would silently run a cluster job
     # single-node on the driver. Only pin a master when the caller asked
-    # for one (master/cores) or none is configured at all.
+    # for one (cores) or none is configured at all.
     builder = SparkSession.builder.appName(app_name)
-    if master is not None:
-        builder = builder.master(master)
-    elif cores is not None:
+    if cores is not None:
         builder = builder.master(f"local[{cores_s}]")
     else:
         from pyspark import SparkConf
@@ -78,46 +75,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _silence_deploy_loggers(spark)
     return spark
-
-
-def _silence_deploy_loggers(spark: SparkSession) -> None:
-    """In ``local-cluster`` mode the standalone Master/Worker run inside
-    the DRIVER JVM and log at WARN; at teardown of a long run the Master
-    emits thousands of ``Got status update for unknown executor`` lines,
-    which drowned bench.py's one-JSON-line output in round 4
-    (BENCH_r04.json ``parsed: null``). Drop the whole deploy subsystem to
-    ERROR — its WARNs are executor-churn bookkeeping, never actionable
-    here. Best-effort: a driver without log4j2 (or a future Spark that
-    renames it) just keeps the default levels."""
-    try:
-        jvm = spark.sparkContext._jvm
-        configurator = jvm.org.apache.logging.log4j.core.config.Configurator
-        level = jvm.org.apache.logging.log4j.Level.ERROR
-        for logger in (
-            "org.apache.spark.deploy",  # Master, Worker, client
-            "org.apache.spark.scheduler.cluster",  # executor add/remove churn
-        ):
-            configurator.setLevel(logger, level)
-    except Exception:
-        pass
-
-
-def cluster_conf(
-    cores: int, executor_mem_mb: int = 3072
-) -> tuple[str, dict[str, str]]:
-    """THE multi-JVM executor-substrate recipe (shared by bench.py and
-    BENCH/scaling.py so the two protocols can never silently diverge):
-    ``cores`` separate one-core executor JVMs over real BlockManager/RPC,
-    each with its own Python worker and a fixed memory budget — the
-    sandbox proxy for N executors. Returns (master, extra_conf) for
-    get_spark."""
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return (
-        f"local-cluster[{cores},1,{executor_mem_mb}]",
-        {
-            "spark.executorEnv.PYTHONPATH": repo_root,
-            "spark.driver.memory": "8g",
-        },
-    )
