@@ -410,7 +410,10 @@ def main() -> None:
     # the deploy loggers are at ERROR (_silence_deploy_loggers),
     # the result is persisted to a file the tail can never drown, and
     # Spark is stopped BEFORE the line is printed so nothing logs after.
-    with open(os.path.join(REPO, "BENCH", "last_run.json"), "w") as fh:
+    # The tee goes to the git-ignored data dir, so a local run leaves the
+    # committed BENCH/ records untouched.
+    os.makedirs(os.path.join(REPO, ".bench_data"), exist_ok=True)
+    with open(os.path.join(REPO, ".bench_data", "last_run.json"), "w") as fh:
         fh.write(result + "\n")
     spark.stop()
     sys.stderr.flush()

@@ -1,7 +1,6 @@
 """E1 cascade + aggregation layer: distributed dataflow == pure replay,
 plus pins for the reference quirks Q9-Q14 the cascade must preserve."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -176,105 +175,6 @@ def test_cascade_oracle_sql_roundtrip():
     assert con.execute(sqls["cascade_overall_similarity"]).df().shape == (1, 3)
 
 
-def test_capable_structure_match_and_jsx_normalize(spark):
-    """Engine extensions: the quirk-free J3 guard + the JSX->HTML
-    attribute/style normalization tables (structure_comparator.py:115-226,
-    dead code in the reference — pinned here as usable operators)."""
-    from web_template_forensics_spark.operators.matching import (
-        greedy_similarity_match,
-        structure_match_scores,
-    )
-    from web_template_forensics_spark.oracle.cascade_oracle import (
-        count_meaningful_nodes_capable,
-        guarded_structure_score,
-    )
-    from web_template_forensics_spark.oracle.html_oracle import parse_html_tree
-    from web_template_forensics_spark.oracle.jsx_normalize import (
-        camel_to_kebab,
-        normalize_jsx_node,
-        normalize_style_object,
-    )
-    from web_template_forensics_spark.oracle.similarity import compare_structures
-
-    # guard: single-node vs multi-node -> 0; 1-vs-1 -> strict compare
-    multi = "<body><div>a</div><p>b</p></body>"
-    single = "<body><div>a</div></body>"
-    assert guarded_structure_score("html", multi, single) == 0.0
-    assert guarded_structure_score("html", single, single) == 1.0
-    t = parse_html_tree(multi)
-    assert count_meaningful_nodes_capable(t, "html") == 2
-
-    # the distributed operator agrees with the pure scorer + greedy
-    l = spark.createDataFrame([("a.html", multi), ("b.html", single)], "path string, content string")
-    r = spark.createDataFrame([("c.html", multi), ("d.html", single)], "path string, content string")
-    got = {
-        (m.left_key, m.right_key): m.score
-        for m in greedy_similarity_match(
-            structure_match_scores(l, r, "html"), threshold=0.5
-        ).collect()
-    }
-    assert got == {("a.html", "c.html"): 1.0, ("b.html", "d.html"): 1.0}
-
-    # banded prefilter (the default): same greedy output as the full
-    # cross product, and the plan has NO cartesian product — the
-    # candidate join is a size-band equi-join
-    big = "<body>" + "".join(f"<div><p>s{i}</p></div>" for i in range(12)) + "</body>"
-    l2 = spark.createDataFrame(
-        [("a.html", multi), ("b.html", single), ("e.html", big)],
-        "path string, content string",
-    )
-    r2 = spark.createDataFrame(
-        [("c.html", multi), ("d.html", single), ("f.html", big + "<p>x</p>")],
-        "path string, content string",
-    )
-    banded = structure_match_scores(l2, r2, "html", prefilter="banded")
-    plan = banded._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-    greedy_banded = {
-        (m.left_key, m.right_key): m.score
-        for m in greedy_similarity_match(banded, threshold=0.5).collect()
-    }
-    greedy_all = {
-        (m.left_key, m.right_key): m.score
-        for m in greedy_similarity_match(
-            structure_match_scores(l2, r2, "html", prefilter="all_pairs"), threshold=0.5
-        ).collect()
-    }
-    assert greedy_banded == greedy_all and ("e.html", "f.html") in greedy_banded
-
-    # attribute renames + camelCase->kebab style mapping
-    assert camel_to_kebab("backgroundColor") == "background-color"
-    assert camel_to_kebab("gridTemplateColumns") == "grid-template-columns"
-    assert normalize_style_object({"backgroundColor": "red", "zIndex": "2"}) == (
-        "background-color: red; z-index: 2"
-    )
-    babel = {
-        "type": "jsx_element",
-        "openingElement": {
-            "name": {"name": "label"},
-            "attributes": [
-                {"type": "jsx_attribute", "name": {"name": "className"},
-                 "value": {"type": "string_literal", "value": "btn big"}},
-                {"type": "jsx_attribute", "name": {"name": "htmlFor"},
-                 "value": {"type": "string_literal", "value": "field"}},
-                {"type": "jsx_attribute", "name": {"name": "onClick"},
-                 "value": {"type": "jsx_expression", "expression": {"type": "call"}}},
-            ],
-        },
-        "children": [{"type": "jsx_text", "value": " Click me "}],
-    }
-    norm = normalize_jsx_node(babel)
-    assert norm["tag"] == "label"
-    assert norm["attrs"] == {"class": "btn big", "for": "field", "onclick": "[dynamic]"}
-    assert norm["children"] == [{"type": "text", "content": "Click me"}]
-    # normalized JSX node vs the equivalent HTML parse tree -> C1 match
-    html_tree = parse_html_tree(
-        '<body><label class="big btn" for="field" onclick="[dynamic]">Click me</label></body>'
-    )
-    res = compare_structures(html_tree["children"][0], norm)
-    assert res.similarity_score == 1.0 and res.matching >= 1
-
-
 def test_cascade_reports_per_pair_many_pairs(spark):
     """The many-pairs scale path: grouped-map per pair_id == per-pair
     replay, across three differently-seeded project pairs."""
@@ -321,47 +221,3 @@ def test_build_pair_files_df_distributed_matches_driver(spark):
         exp = replay_cascade(project_pair_rows(seed=77 + pid))
         assert rep[pid].overall_similarity == exp["overall_similarity"]
         assert rep[pid].prediction == exp["overall_prediction"]
-
-
-def test_structure_match_banded_many_pairs(spark):
-    """Round-4 composition proof: the capable-J3 banded prefilter runs
-    over MANY project pairs in ONE plan (group_cols adds pair_id to the
-    equi-join key). Pins: (a) no CartesianProduct in the physical plan,
-    (b) candidates never cross pair boundaries, (c) per-pair >= 0.5
-    survivors equal the all_pairs fidelity mode's on this fixture."""
-    from web_template_forensics_spark.operators.matching import structure_match_scores
-
-    n_pairs = 6
-    rows = []
-    for pid, seed in enumerate(range(42, 42 + n_pairs)):
-        rows += [(pid, *r) for r in project_pair_rows(seed=seed)]
-    files = spark.createDataFrame(rows, "pair_id long, " + SCHEMA).filter(
-        "filetype = 'html'"
-    )
-    l = files.filter("side = 'original'")
-    r = files.filter("side = 'modified'")
-
-    banded = structure_match_scores(l, r, "html", group_cols=("pair_id",))
-    plan = banded._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-    got = banded.collect()
-    # (b) join keyed on pair_id -> every candidate's two files belong to
-    # the same pair by construction; verify against the source inventory
-    by_pair = {}
-    for row in rows:
-        by_pair.setdefault(row[0], set()).add(row[2])
-    for c in got:
-        assert c.left_key in by_pair[c.pair_id] and c.right_key in by_pair[c.pair_id]
-
-    exact = structure_match_scores(
-        l, r, "html", prefilter="all_pairs", group_cols=("pair_id",)
-    )
-    def survivors(df):
-        return {
-            (c.pair_id, c.left_key, c.right_key, round(c.score, 9))
-            for c in df.collect()
-            if c.score >= 0.5
-        }
-    assert survivors(banded) == survivors(exact)

@@ -67,7 +67,7 @@ def test_fast_oracle_subset(spark):
     for name in FAST_SUBSET:
         sdf = qs[name](spark, SF).toPandas()
         ddf = con.sql(oracles[name]).df()
-        problems = compare(name, sdf, ddf)
+        problems = compare(sdf, ddf)
         if problems:
             failures[name] = problems
     assert not failures, failures

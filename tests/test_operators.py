@@ -275,10 +275,10 @@ def test_greedy_match_replays_reference_semantics(spark):
     (core/file_matcher.py:61-82) run on sorted inputs."""
     import difflib
 
-    from web_template_forensics_spark.operators.matching import (
-        fuzzy_filename_scores,
-        greedy_similarity_match,
-    )
+    from pyspark.sql import functions as F
+
+    from web_template_forensics_spark.functions.similarity_udfs import seq_ratio_udf
+    from web_template_forensics_spark.operators.matching import greedy_similarity_match
 
     files1 = sorted(
         ["src/index.html", "src/about.html", "css/main.css", "js/app.js", "js/util.js"]
@@ -288,7 +288,13 @@ def test_greedy_match_replays_reference_semantics(spark):
     )
     l = spark.createDataFrame([(p,) for p in files1], "path string")
     r = spark.createDataFrame([(p,) for p in files2], "path string")
-    scored = fuzzy_filename_scores(l, r)
+    # the cascade's J2 candidates: basename cross join scored by difflib
+    base = lambda c: F.element_at(F.split(c, "/"), -1)  # noqa: E731
+    scored = (
+        l.select(F.col("path").alias("left_key"), base(F.col("path")).alias("_lb"))
+        .crossJoin(r.select(F.col("path").alias("right_key"), base(F.col("path")).alias("_rb")))
+        .select("left_key", "right_key", seq_ratio_udf("_lb", "_rb").alias("score"))
+    )
     got = {
         (row.left_key, row.right_key): row.score
         for row in greedy_similarity_match(scored, threshold=0.75).collect()
@@ -503,19 +509,6 @@ def test_contextual_match_replays_reference(spark):
     assert got, "expected at least one contextual match"
 
 
-def test_aggregate_match_scores(spark):
-    from web_template_forensics_spark.operators.matching import aggregate_match_scores
-
-    matched = spark.createDataFrame(
-        [("a", "a2", 0.9), ("b", "b2", 0.8)], "left_key string, right_key string, score double"
-    )
-    # 4 left + 3 right files, 2 matched -> denom = 4 + 3 - 2 = 5
-    row = aggregate_match_scores(matched, 4, 3).first()
-    assert row.files_matched == 2
-    assert row.aggregate_score == round((0.9 + 0.8) / 5, 3)
-    assert row.prediction.startswith("Low")
-
-
 def test_simhash_banding_sound_at_large_radius(spark):
     """A pair at hamming 4..12 is invisible to the radius-3 banding but
     MUST be found when max_hamming=12 (13 bands, pigeonhole-sound)."""
@@ -569,20 +562,22 @@ def test_minhash_jvm_jaccard_matches_python_sets(spark):
 def test_contextual_root_level_paths_match_reference(spark):
     """Root-level files (no '/') must use parent '' — the reference then
     counts EVERY prior matched pair as a sibling (file_matcher.py:346-351).
-    Exercised unblocked at a low threshold where the sibling term decides."""
+    Exercised at a low threshold where the sibling term decides; each
+    root-level name appears on both sides, so the first-segment blocking
+    keeps the pairs the reference loop picks."""
     from web_template_forensics_spark.operators.matching import (
         contextual_match_scores,
         greedy_similarity_match,
     )
 
     files1 = sorted(["index.html", "about.html", "app/x.html"])
-    files2 = sorted(["home.html", "info.html", "app/y.html"])
-    prior = [("app/x.html", "app/y.html"), ("app/z.html", "app/w.html")]
+    files2 = sorted(["index.html", "about.html", "app/y.html"])
+    prior = [("lib/a.js", "lib/b.js"), ("lib/c.js", "lib/d.js")]
 
     l = spark.createDataFrame([(p,) for p in files1], "path string")
     r = spark.createDataFrame([(p,) for p in files2], "path string")
     mp = spark.createDataFrame(prior, "left_key string, right_key string")
-    scored = contextual_match_scores(l, r, mp, blocked=False)
+    scored = contextual_match_scores(l, r, mp)
     got = {
         (row.left_key, row.right_key): round(row.score, 9)
         for row in greedy_similarity_match(scored, threshold=0.15).collect()

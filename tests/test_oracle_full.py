@@ -69,5 +69,5 @@ def test_query_matches_oracle(name: str, spark, gate) -> None:
         assert len(sdf) >= 0
         return
     ddf = gate["con"].sql(sql).df()
-    problems = compare(name, sdf, ddf)
+    problems = compare(sdf, ddf)
     assert not problems, f"{name}: " + "; ".join(problems)

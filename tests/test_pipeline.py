@@ -3,7 +3,6 @@ kill/resume via the lineage catalog."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -28,11 +27,10 @@ def test_pipeline_invariant_and_geocode(spark):
 
 def test_fused_geocode_nulls_ungeocodable_pages(spark):
     """A page with neither a geo <meta> tag nor a known host/TLD gets
-    null lat, lon AND cell_id; a meta tag alone geocodes any url."""
+    null lat and lon; a meta tag alone geocodes any url."""
     from datetime import datetime
 
-    from web_template_forensics_spark.geo.cells import cell_encode
-    from web_template_forensics_spark.plans.pipeline import CELL_LEVEL, pages_to_geo_fused
+    from web_template_forensics_spark.plans.pipeline import pages_to_geo_fused
     from web_template_forensics_spark.sources.pages import PAGES_SCHEMA
 
     meta = '<html><head><meta name="geo.position" content="12.5;-45.25"></head><body>x</body></html>'
@@ -46,35 +44,55 @@ def test_fused_geocode_nulls_ungeocodable_pages(spark):
     pages = spark.createDataFrame(rows, PAGES_SCHEMA)
     got = {
         r.url: r
-        for r in pages_to_geo_fused(pages).select("url", "lat", "lon", "cell_id").collect()
+        for r in pages_to_geo_fused(pages).select("url", "lat", "lon").collect()
     }
     for url in ("https://foreign.org/x", "https://h12.example.zz/p/1"):
-        assert (got[url].lat, got[url].lon, got[url].cell_id) == (None, None, None), url
+        assert (got[url].lat, got[url].lon) == (None, None), url
     m = got["https://foreign.org/meta"]
     assert (m.lat, m.lon) == (12.5, -45.25)
-    assert m.cell_id == int(cell_encode(12.5, -45.25, CELL_LEVEL))
 
 
 def test_checkpointed_write_resume(spark, tmp_path):
+    """A run killed between the data write and the marker commit resumes:
+    committed buckets are skipped, every pending bucket is rewritten
+    (half-written leftovers included), and each marker's fingerprint
+    matches the data on disk."""
+    import shutil
+
     from web_template_forensics_spark.sources.catalog import (
+        bucket_fingerprints,
         checkpointed_write,
         done_buckets,
+        lineage_rows,
         read_table,
     )
 
     df = spark.range(0, 1000).withColumn("payload", F.concat(F.lit("v"), F.col("id")))
     path = str(tmp_path / "tbl")
+    checkpointed_write(spark, df, path, key_col="id", n_buckets=16, fingerprint=True)
 
-    # kill after 5 of 16 buckets
-    with pytest.raises(RuntimeError, match="injected failure"):
-        checkpointed_write(spark, df, path, key_col="id", n_buckets=16, fail_after=5, fingerprint=True)
-    assert len(done_buckets(path)) == 5
+    # simulate the kill: only 5 of 16 markers made it, no snapshot, and
+    # one uncommitted bucket holds a stray file (a committed bucket's
+    # rows, so a resume that keeps it would duplicate them)
+    committed = list(range(5))
+    for b in range(5, 16):
+        os.remove(os.path.join(path, "_lineage", f"bucket-{b}.json"))
+    shutil.rmtree(os.path.join(path, "_snapshots"))
+    assert sorted(done_buckets(path)) == committed
 
-    # record mtimes of committed bucket data — resume must not rewrite them
-    committed = sorted(done_buckets(path))
-    def bucket_mtime(b):
+    def bucket_files(b):
         d = os.path.join(path, "data", f"bucket={b}")
-        return max(os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d))
+        return [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
+
+    shutil.copy(
+        bucket_files(0)[0],
+        os.path.join(path, "data", "bucket=9", "part-99999-leftover.c000.snappy.parquet"),
+    )
+    assert read_table(spark, path).count() > 1000
+
+    def bucket_mtime(b):
+        return max(os.path.getmtime(f) for f in bucket_files(b))
+
     mtimes_before = {b: bucket_mtime(b) for b in committed}
 
     snap = checkpointed_write(spark, df, path, key_col="id", n_buckets=16, fingerprint=True)
@@ -83,22 +101,14 @@ def test_checkpointed_write_resume(spark, tmp_path):
     for b in committed:
         assert bucket_mtime(b) == mtimes_before[b], f"bucket {b} was recomputed"
 
-    # final table identical to the input
+    # final table identical to the input: the leftover was replaced
     back = read_table(spark, path)
     assert back.count() == 1000
     assert back.agg(F.sum("id")).first()[0] == 499500
 
-    # lineage fingerprints (round 4): markers from BOTH legs (pre-kill
-    # sequential + post-resume batch) must match a fresh recompute from
-    # the written data — the resume path cannot commit a different
-    # fingerprint shape than the normal path
-    from web_template_forensics_spark.sources.catalog import (
-        bucket_fingerprints,
-        lineage_rows,
-    )
-
+    # markers from BOTH runs match a fresh recompute from the written data
     marks = {m["bucket"]: m for m in lineage_rows(path)}
-    assert len(marks) == 16 and all("fingerprint" in m for m in marks.values())
+    assert sorted(marks) == list(range(16))
     fresh = bucket_fingerprints(spark, path, "id", list(range(16)))
     for b, m in marks.items():
         assert m["fingerprint"] == fresh[b], f"bucket {b} fingerprint drift"

@@ -40,7 +40,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
-def compare(name: str, sdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
+def compare(sdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
     problems = []
     if sorted(sdf.columns) != sorted(ddf.columns):
         problems.append(f"columns spark={sorted(sdf.columns)} duck={sorted(ddf.columns)}")

@@ -58,8 +58,6 @@ PLAN_QUERIES = [
     "weighted_sample",
     "match_cascade",
     "match_cascade_many",
-    "structure_match_banded",
-    "structure_match_banded_many",
 ]
 
 
@@ -69,43 +67,6 @@ def main() -> None:
     from web_template_forensics_spark.plans.queries import QUERIES as _Q
 
     QUERIES = {**_Q, **CASCADE_QUERIES}
-
-    def _structure_match_banded(spark, _sf):
-        # not a registered query (operator-level API) — planned here to
-        # prove the banded prefilter replaces the cross product
-        from web_template_forensics_spark.operators.matching import (
-            structure_match_scores,
-        )
-
-        pairs = [(f"p{i}.html", f"<body><div><p>x{i}</p></div></body>") for i in range(4)]
-        l = spark.createDataFrame(pairs, "path string, content string")
-        r = spark.createDataFrame(pairs, "path string, content string")
-        return structure_match_scores(l, r, "html")
-
-    QUERIES["structure_match_banded"] = _structure_match_banded
-
-    def _structure_match_banded_many(spark, _sf):
-        # the MANY-project-pairs capable-J3 (round 4): group_cols turns
-        # pair_id into an extra equi-join key, so one plan scores every
-        # project pair with candidates confined to (pair_id, _band)
-        from web_template_forensics_spark.fixtures.project_pairs import (
-            project_pair_rows,
-        )
-        from web_template_forensics_spark.operators.matching import (
-            structure_match_scores,
-        )
-
-        rows = []
-        for pid, seed in enumerate(range(42, 46)):
-            rows += [(pid, *r) for r in project_pair_rows(seed=seed)]
-        files = spark.createDataFrame(
-            rows, "pair_id long, side string, path string, filetype string, content string"
-        ).filter("filetype = 'html'")
-        l = files.filter("side = 'original'")
-        r = files.filter("side = 'modified'")
-        return structure_match_scores(l, r, "html", group_cols=("pair_id",))
-
-    QUERIES["structure_match_banded_many"] = _structure_match_banded_many
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("explain", cores=2, shuffle_partitions=4)
@@ -193,24 +154,6 @@ def main() -> None:
             "single hash-partition Exchange on pair_id, then zero "
             "cross-pair communication: linear in pairs, the "
             "embarrassingly-parallel claim in plan form."
-        ),
-        "structure_match_banded_many": (
-            "Capable-J3 over MANY project pairs (round 4): group_cols adds "
-            "pair_id to the banded equi-join key, so ONE plan scores every "
-            "project pair at once — the join is SortMergeJoin/"
-            "ShuffledHashJoin on (pair_id, _band), candidates never cross "
-            "pair boundaries, and no CartesianProduct appears anywhere. "
-            "This is the composed scale path: the same fixture that feeds "
-            "match_cascade_many (20 pairs in the gate) runs through the "
-            "capable prefilter with per-pair isolation enforced by the "
-            "join key, not by scheduling."
-        ),
-        "structure_match_banded": (
-            "Capable-J3 candidate generation (r3 fix): size-band equi-join "
-            "(SortMergeJoin/ShuffledHashJoin on _band, left side explodes "
-            "to band±1) replaces the raw CartesianProduct the r2 operator "
-            "shipped; the scoring UDF runs on candidates only. "
-            "prefilter='all_pairs' remains the oracle-fidelity mode."
         ),
         "match_cascade": (
             "The composed E1 cascade: per-filetype exact equi-joins, anti-"

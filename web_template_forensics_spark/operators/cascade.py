@@ -13,9 +13,7 @@ aggregates. This module re-expresses each stage as DataFrame ops:
 Quirk fidelity (Q9-Q14, documented in oracle/cascade_oracle.py): the
 reference's html/jsx/js structure stages can never match, jsx pairwise
 similarity is constant 1.0, next-env.d.ts is dropped from js unmatched
-lists only. The capable (non-quirk) structure matching remains available
-as the generic operators in operators/matching.py + the signature
-prefilters in functions/html_udfs.py.
+lists only.
 
 Rounding fidelity: everywhere the reference applies Python ``round``
 (half-even) the plan calls a tiny pandas round UDF instead of ``F.round``
@@ -243,9 +241,7 @@ def match_cascade(files: DataFrame) -> DataFrame:
 
         # J2 fuzzy (basename difflib >= 0.75, greedy). Deliberately the
         # reference's full remainder cross product (file_matcher.py:61-82)
-        # — remainders are per-project-small by construction here; the
-        # guarded/blocked variant for arbitrary inputs is
-        # matching.fuzzy_filename_scores.
+        # — remainders are per-project-small by construction here.
         base = lambda c: F.element_at(F.split(c, "/"), -1)  # noqa: E731
         fz_scored = (
             rem1.select(F.col("path").alias("left_key"), base(F.col("path")).alias("_lb"))

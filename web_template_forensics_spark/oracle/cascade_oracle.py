@@ -511,88 +511,3 @@ def app_overall(html_sim: float, jsx_sim: float, css_sim: float) -> float:
 def jsx_combined(structure_sim: float, callgraph_sim: float, body_sim: float) -> float:
     """A8 (forensic_analyzer.py:116): 0.6/0.2/0.2."""
     return structure_sim * 0.6 + callgraph_sim * 0.2 + body_sim * 0.2
-
-
-# --------------------------------------------------------------------------
-# Capable (non-quirk) J3 structure matching — ENGINE EXTENSION
-# --------------------------------------------------------------------------
-
-# The node-count guard as the reference INTENDED it (file_matcher.py:
-# 131-183): count meaningful top-level nodes; if either side has < 2,
-# only a 1-vs-1 pair is compared strictly, anything else scores 0. The
-# reference's own guard never fires correctly for html/jsx/js (quirks
-# Q9-Q11 above); these variants fix the type names so the guard works,
-# and back the `structure_match_scores` operator in operators/matching.py.
-
-_MEANINGFUL_TYPES = (
-    # file_matcher.py:151-159 / :168-176 (jsx + js lists, union)
-    "function_declaration", "function_expression", "arrow_function",
-    "class_declaration", "variable_declaration",
-    "export_statement", "export_default_declaration",
-    "jsx_element", "jsx_fragment", "import_declaration", "import_statement",
-)
-
-
-def count_meaningful_nodes_capable(tree: dict | None, filetype: str) -> int:
-    if not tree:
-        return 0
-    if filetype == "html":
-        # corrected html semantics: element children of the parse root
-        return sum(
-            1 for c in tree.get("children", []) if c.get("type") == "element"
-        )
-    root = tree.get("ast", tree)
-    return sum(
-        1 for c in root.get("children", []) if c.get("type") in _MEANINGFUL_TYPES
-    )
-
-
-def guarded_structure_score(filetype: str, c1: str, c2: str) -> float:
-    """Capable J3 pair score: parse, guard on meaningful-node counts,
-    then the filetype's structure comparator. Quirk-free counterpart of
-    the cascade's css-only structure stage."""
-    # guard BEFORE comparing: parsing is needed for the node counts, but
-    # the (much more expensive) full structure comparison is skipped for
-    # guard-rejected candidates — this function scores O(candidates) pairs
-    # inside structure_match_scores, where most candidates fail the guard
-    if filetype == "html":
-        t1, t2 = parse_html_tree(c1), parse_html_tree(c2)
-        n1 = count_meaningful_nodes_capable(t1, "html")
-        n2 = count_meaningful_nodes_capable(t2, "html")
-        if n1 < 2 or n2 < 2:
-            return (
-                compare_structures(t1, t2).similarity_score
-                if n1 == 1 and n2 == 1
-                else 0.0
-            )
-        return compare_structures(t1, t2).similarity_score
-    if filetype == "jsx":
-        from .jsx_treesitter import parse_jsx_or_fallback
-
-        p1, p2 = parse_jsx_or_fallback(c1), parse_jsx_or_fallback(c2)
-        n1 = count_meaningful_nodes_capable(p1, "jsx")
-        n2 = count_meaningful_nodes_capable(p2, "jsx")
-        if n1 < 2 or n2 < 2:
-            return (
-                compare_structures(p1["ast"], p2["ast"]).similarity_score
-                if n1 == 1 and n2 == 1
-                else 0.0
-            )
-        return compare_structures(p1["ast"], p2["ast"]).similarity_score
-    if filetype == "css":
-        n1, n2 = c1.count("{"), c2.count("{")
-        if n1 < 2 or n2 < 2:
-            return (
-                compare_css(c1, c2)["css_similarity"]
-                if n1 == 1 and n2 == 1
-                else 0.0
-            )
-        return compare_css(c1, c2)["css_similarity"]
-    from .js_oracle import _tree_similarity, parse_js
-
-    p1, p2 = parse_js(c1), parse_js(c2)
-    n1 = count_meaningful_nodes_capable(p1, "js")
-    n2 = count_meaningful_nodes_capable(p2, "js")
-    if n1 < 2 or n2 < 2:
-        return _tree_similarity(p1["ast"], p2["ast"]) if n1 == 1 and n2 == 1 else 0.0
-    return compare_js(c1, c2)["similarity"]

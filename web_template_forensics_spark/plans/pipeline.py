@@ -1,7 +1,7 @@
 """The end-to-end pages pipeline (the spark-submit job body).
 
 pages -> extract_text (oracle-verified) -> geocode (meta > TLD anchor) ->
-WGQ cell encode -> broadcast PIP join -> salted tile rollup -> sinks.
+broadcast PIP join (WGQ cell-keyed) -> salted tile rollup -> sinks.
 This is the E1-analog lifecycle of SURVEY.md §3 re-expressed as one
 DataFrame lineage; `jobs/run_pipeline.py` wraps it for spark-submit, and
 `checkpointed_write` gives the per-partition lineage + resume the north
@@ -18,7 +18,6 @@ from ..operators.spatial_join import pip_join
 from ..operators.tiles import tile_rollup
 from ..sources.pages import build_pages_df
 
-CELL_LEVEL = 12
 TILE_Z = 5
 
 
@@ -44,13 +43,13 @@ def world_polygons() -> list[Polygon]:
 
 _FUSED_SCHEMA = (
     "url string, warc_ts timestamp, lang string, n_bytes long, "
-    "text_ok int, lat double, lon double, cell_id long"
+    "text_ok int, lat double, lon double"
 )
 
 
 def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame:
-    """The pipeline's hot path: extract-verify + geocode + cell encode as
-    ONE mapInPandas pass.
+    """The pipeline's hot path: extract-verify + geocode as ONE
+    mapInPandas pass.
 
     Chaining separate pandas UDFs costs a Python round-trip per node and —
     worse — projection collapse inlines struct-field references so the
@@ -64,12 +63,10 @@ def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame
     import pandas as pd
 
     from ..functions.html_udfs import _GEO_POS_RE, _decode, head_slice
-    from ..geo.cells import cell_encode
     from ..oracle.html_oracle import extract_text
     from ..sources.pages import TLD_ANCHORS, splitmix64
 
     anchors = {tld: (lat, lon) for tld, (lat, lon, _) in TLD_ANCHORS.items()}
-    level = CELL_LEVEL
 
     def fused(batches):
         for pdf in batches:
@@ -105,12 +102,6 @@ def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame
             lat = np.where(~np.isnan(meta_lat), meta_lat, h_lat)
             lon = np.where(~np.isnan(meta_lon), meta_lon, h_lon)
             ok = ~np.isnan(lat) & ~np.isnan(lon)
-            # ungeocoded rows keep cell_id null, like lat/lon; a nullable
-            # Int64 array, since a float detour would round ids above 2**53
-            cell = pd.array(
-                cell_encode(np.nan_to_num(lat), np.nan_to_num(lon), level), dtype="Int64"
-            )
-            cell[~ok] = pd.NA
             out = pd.DataFrame(
                 {
                     "url": url,
@@ -122,7 +113,6 @@ def pages_to_geo_fused(pages: DataFrame, verify_text: bool = False) -> DataFrame
                     "text_ok": text_ok,
                     "lat": lat,
                     "lon": lon,
-                    "cell_id": cell,
                 }
             )
             out.loc[~ok, ["lat", "lon"]] = None

@@ -31,6 +31,7 @@ import glob
 import itertools
 import os
 from collections.abc import Callable
+from functools import lru_cache
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -1321,63 +1322,36 @@ ORACLE_SQL: dict[str, str] = {
     "pages_pipeline_tiles": _q_pages_tiles_sql(),
 }
 
-_IVF_ORACLE_CACHE: list[str | None] = []
-_MULTIMODAL_ORACLE_CACHE: list[str] = []
-_PHASH_ORACLE_CACHE: list[str] = []
-_AUDIO_FP_ORACLE_CACHE: list[str] = []
-_VIDEO_FP_ORACLE_CACHE: list[str] = []
+@lru_cache(maxsize=1)
+def _lazy_oracle_sql() -> dict[str, str]:
+    """The oracle entries too costly to build at import (ADVICE r4: the r4
+    module-import-time build read every testdata embeddings parquet and
+    trained 16-means per corpus on every ``import plans.queries`` —
+    including imports that never touch an oracle, e.g. bench.py):
+    ann_ivf_topk's injected trained centroids and the multimodal
+    fixtures' VALUES (encoding + driver-side decode of each corpus).
+    Built on first call, once per process."""
+    from . import multimodal_fixture as mm
+
+    builders: dict[str, Callable[[], str | None]] = {
+        "ann_ivf_topk": _q_ann_ivf_sql,
+        "multimodal_features": mm.fixture_oracle_values_sql,
+        "phash_near_dup": mm.phash_oracle_sql,
+        "audio_fp_near_dup": mm.audio_fp_oracle_sql,
+        "video_fp_near_dup": mm.video_fp_oracle_sql,
+        "media_near_dup_all": mm.media_near_dup_oracle_sql,
+        "av_near_dup": mm.av_near_dup_oracle_sql,
+        "audio_fp_near_dup_compressed": mm.audio_fp_compressed_oracle_sql,
+    }
+    built = {name: build() for name, build in builders.items()}
+    # no corpus to train IVF centroids on: ann_ivf_topk stays rows-only
+    return {name: sql for name, sql in built.items() if sql is not None}
 
 
 def oracle_sql_all() -> dict[str, str]:
-    """ORACLE_SQL plus the two entries built LAZILY on first call and
-    memoized (ADVICE r4: the r4 module-import-time build read every
-    testdata embeddings parquet and trained 16-means per corpus on
-    every ``import plans.queries`` — including imports that never touch
-    an oracle, e.g. bench.py): ann_ivf_topk's injected trained centroids
-    and multimodal_features' fixture VALUES (encoding + driver-side JPEG
-    decode of the fixture corpus). All other entries are cheap string
-    constants and stay eagerly importable as ORACLE_SQL."""
-    if not _IVF_ORACLE_CACHE:
-        _IVF_ORACLE_CACHE.append(_q_ann_ivf_sql())
-    if not _MULTIMODAL_ORACLE_CACHE:
-        from .multimodal_fixture import fixture_oracle_values_sql
-
-        _MULTIMODAL_ORACLE_CACHE.append(fixture_oracle_values_sql())
-    if not _PHASH_ORACLE_CACHE:
-        from .multimodal_fixture import phash_oracle_sql
-
-        _PHASH_ORACLE_CACHE.append(phash_oracle_sql())
-    if not _AUDIO_FP_ORACLE_CACHE:
-        from .multimodal_fixture import audio_fp_oracle_sql
-
-        _AUDIO_FP_ORACLE_CACHE.append(audio_fp_oracle_sql())
-    if not _VIDEO_FP_ORACLE_CACHE:
-        from .multimodal_fixture import video_fp_oracle_sql
-
-        _VIDEO_FP_ORACLE_CACHE.append(video_fp_oracle_sql())
-    if not _MEDIA_ND_ORACLE_CACHE:
-        from .multimodal_fixture import media_near_dup_oracle_sql
-
-        _MEDIA_ND_ORACLE_CACHE.append(media_near_dup_oracle_sql())
-    if not _AV_ND_ORACLE_CACHE:
-        from .multimodal_fixture import av_near_dup_oracle_sql
-
-        _AV_ND_ORACLE_CACHE.append(av_near_dup_oracle_sql())
-    if not _AUDIO_FP_COMPRESSED_ORACLE_CACHE:
-        from .multimodal_fixture import audio_fp_compressed_oracle_sql
-
-        _AUDIO_FP_COMPRESSED_ORACLE_CACHE.append(audio_fp_compressed_oracle_sql())
-    out = dict(ORACLE_SQL)
-    if _IVF_ORACLE_CACHE[0] is not None:
-        out["ann_ivf_topk"] = _IVF_ORACLE_CACHE[0]
-    out["multimodal_features"] = _MULTIMODAL_ORACLE_CACHE[0]
-    out["phash_near_dup"] = _PHASH_ORACLE_CACHE[0]
-    out["audio_fp_near_dup"] = _AUDIO_FP_ORACLE_CACHE[0]
-    out["video_fp_near_dup"] = _VIDEO_FP_ORACLE_CACHE[0]
-    out["media_near_dup_all"] = _MEDIA_ND_ORACLE_CACHE[0]
-    out["av_near_dup"] = _AV_ND_ORACLE_CACHE[0]
-    out["audio_fp_near_dup_compressed"] = _AUDIO_FP_COMPRESSED_ORACLE_CACHE[0]
-    return out
+    """ORACLE_SQL plus the lazily built entries; all other entries are
+    cheap string constants and stay eagerly importable as ORACLE_SQL."""
+    return {**ORACLE_SQL, **_lazy_oracle_sql()}
 
 
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:
@@ -2482,7 +2456,6 @@ def q_media_near_dup_all(spark, sf_dir):
 
 
 QUERIES["media_near_dup_all"] = q_media_near_dup_all
-_MEDIA_ND_ORACLE_CACHE: list[str] = []
 
 
 def q_av_near_dup(spark, sf_dir):
@@ -2511,7 +2484,6 @@ def q_av_near_dup(spark, sf_dir):
 
 
 QUERIES["av_near_dup"] = q_av_near_dup
-_AV_ND_ORACLE_CACHE: list[str] = []
 
 
 def q_audio_fp_near_dup_compressed(spark, sf_dir):
@@ -2543,7 +2515,6 @@ def q_audio_fp_near_dup_compressed(spark, sf_dir):
 
 
 QUERIES["audio_fp_near_dup_compressed"] = q_audio_fp_near_dup_compressed
-_AUDIO_FP_COMPRESSED_ORACLE_CACHE: list[str] = []
 
 
 # ---------------------------------------------------------------------------

@@ -140,19 +140,17 @@ def checkpointed_write(
     path: str,
     key_col: str,
     n_buckets: int = 32,
-    fail_after: int | None = None,
     bucket_col: str | None = None,
     fingerprint: bool = False,
 ) -> dict:
     """Resumable bucketed write with per-partition lineage + metrics.
 
     Computes only the buckets without done markers. At 100 TB each bucket
-    is an Iceberg partition: the normal path writes ALL pending buckets in
-    ONE Spark job (``partitionBy`` + dynamic partition overwrite — only the
-    pending buckets' directories are touched, committed ones are never in
-    the frame), then commits one lineage marker per bucket. ``fail_after``
-    switches to a sequential per-bucket loop and kills the job after N
-    buckets — the kill/resume test path.
+    is an Iceberg partition: ALL pending buckets are written in ONE Spark
+    job (``partitionBy`` + dynamic partition overwrite — only the pending
+    buckets' directories are touched, committed ones are never in the
+    frame, and whatever a killed run left in a pending bucket is
+    replaced), then one lineage marker per bucket is committed.
 
     ``bucket_col`` overrides the default ``pmod(xxhash64(key), n)``
     bucketing with a caller-provided column (values must be in
@@ -181,49 +179,25 @@ def checkpointed_write(
     bdf = df.withColumn("bucket", bucket_expr)
     if len(todo) < n_buckets:
         bdf = bdf.filter(F.col("bucket").isin(todo))
-    if fail_after is None:
-        t0 = time.perf_counter()
-        (
-            # co-locate each bucket into one task -> one file per bucket
-            # (instead of n_tasks x n_buckets small files)
-            bdf.repartition(len(todo), F.col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(_data_dir(path))
-        )
-        wall = time.perf_counter() - t0
-        per = round(wall / max(1, len(todo)), 4)
-        # row/byte metrics from the written parquet footers (driver-side
-        # metadata read) — one Spark job total instead of a separate
-        # groupBy-sizes job + a persist of the whole frame
-        fps = bucket_fingerprints(spark, path, key_col, todo) if fingerprint else {}
-        for b in todo:
-            rows, nbytes = _bucket_stats(os.path.join(_data_dir(path), f"bucket={b}"))
-            write_bucket_marker(path, BucketStatus(b, rows, nbytes, per, fps.get(b, 0)))
-    else:
-        bdf = bdf.persist()  # per-bucket loop re-reads the frame
-        written = 0
-        for b in todo:
-            t0 = time.perf_counter()
-            part = bdf.filter(F.col("bucket") == b).drop("bucket")
-            out = os.path.join(_data_dir(path), f"bucket={b}")
-            part.write.mode("overwrite").parquet(out)
-            rows, nbytes = _bucket_stats(out)
-            fp = (
-                bucket_fingerprints(spark, path, key_col, [b]).get(b, 0)
-                if fingerprint
-                else 0
-            )
-            write_bucket_marker(
-                path,
-                BucketStatus(b, rows, nbytes, round(time.perf_counter() - t0, 3), fp),
-            )
-            written += 1
-            if written >= fail_after:
-                bdf.unpersist()
-                raise RuntimeError(f"injected failure after {written} buckets")
-        bdf.unpersist()
+    t0 = time.perf_counter()
+    (
+        # co-locate each bucket into one task -> one file per bucket
+        # (instead of n_tasks x n_buckets small files)
+        bdf.repartition(len(todo), F.col("bucket"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(_data_dir(path))
+    )
+    wall = time.perf_counter() - t0
+    per = round(wall / max(1, len(todo)), 4)
+    # row/byte metrics from the written parquet footers (driver-side
+    # metadata read) — one Spark job total instead of a separate
+    # groupBy-sizes job + a persist of the whole frame
+    fps = bucket_fingerprints(spark, path, key_col, todo) if fingerprint else {}
+    for b in todo:
+        rows, nbytes = _bucket_stats(os.path.join(_data_dir(path), f"bucket={b}"))
+        write_bucket_marker(path, BucketStatus(b, rows, nbytes, per, fps.get(b, 0)))
     return write_snapshot(path, n_buckets)
 
 
