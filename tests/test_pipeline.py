@@ -114,6 +114,62 @@ def test_checkpointed_write_resume(spark, tmp_path):
         assert m["fingerprint"] == fresh[b], f"bucket {b} fingerprint drift"
 
 
+def test_checkpointed_write_runs_one_task_per_core(spark, tmp_path):
+    """16 pending buckets are written by at most one task per core, and
+    each non-empty bucket still gets exactly one parquet file."""
+    from web_template_forensics_spark.sources.catalog import checkpointed_write, lineage_rows
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    # buckets 13-15 get no rows
+    df = spark.range(0, 1000, 1, cores).withColumn("b", F.col("id") % 13)
+    path = str(tmp_path / "tbl")
+    group = "checkpointed-write-tasks"
+    sc.setJobGroup(group, "checkpointed_write of 16 buckets")
+    try:
+        checkpointed_write(spark, df, path, key_col="id", n_buckets=16, bucket_col="b")
+        tracker = sc.statusTracker()
+        stages = [
+            tracker.getStageInfo(s)
+            for j in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tasks = [s.numTasks for s in stages if s is not None]
+    assert tasks and max(tasks) <= cores, tasks
+
+    data = os.path.join(path, "data")
+    dirs = sorted(d for d in os.listdir(data) if d.startswith("bucket="))
+    assert dirs == sorted(f"bucket={b}" for b in range(13))
+    for d in dirs:
+        files = [f for f in os.listdir(os.path.join(data, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    assert [m["rows"] for m in lineage_rows(path)] == [77] * 12 + [76] + [0] * 3
+
+
+def test_pipeline_text_mismatch_commits_no_sink(spark, tmp_path):
+    """One page whose stored text differs from extract_text(html) fails
+    the verified pipeline before either sink commits a lineage marker."""
+    import pytest
+
+    from web_template_forensics_spark.plans.pipeline import run_pages_pipeline
+    from web_template_forensics_spark.sources.pages import build_pages_df
+
+    pages = build_pages_df(spark, 40, seed=42)
+    url = pages.first()["url"]
+    bad = pages.withColumn(
+        "text",
+        F.when(F.col("url") == url, F.concat("text", F.lit("x"))).otherwise(F.col("text")),
+    )
+    out = tmp_path / "out"
+    with pytest.raises(AssertionError, match="text-extraction invariant"):
+        run_pages_pipeline(spark, pages=bad, out_dir=str(out), verify_text=True)
+    for sink in ("pip", "tiles"):
+        assert not (out / sink / "_lineage").exists(), sink
+
+
 def test_full_pipeline_stats(spark, tmp_path):
     from web_template_forensics_spark.plans.pipeline import run_pages_pipeline
 

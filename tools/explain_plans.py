@@ -135,7 +135,8 @@ def main() -> None:
             "cast is an `aggregate` over the edge array, run as that "
             "join's condition. "
             "Both side tables are LocalTableScans (built from pandas over "
-            "Arrow), so broadcasting them runs no job."
+            "Arrow), so no Python worker runs; each BroadcastExchange still "
+            "collects its table in one job of min(rows, cores) tasks."
         ),
         "knn_k5": (
             "One lazy plan, no driver action: a LEFT cell equi-join of each "

@@ -24,36 +24,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def greedy_similarity_match(
-    scored_pairs: DataFrame,
-    left_col: str = "left_key",
-    right_col: str = "right_key",
-    score_col: str = "score",
-    block_col: str | None = None,
-    threshold: float = 0.75,
-) -> DataFrame:
+def greedy_similarity_match(scored_pairs: DataFrame, threshold: float = 0.75) -> DataFrame:
     """Greedy 1:1 assignment over pre-scored candidate pairs.
 
     Replays the reference loop (core/file_matcher.py:61-82): iterate left
     keys in order; each takes the best not-yet-used right key with
     strictly-greater score (first-seen wins ties); keep if >= threshold.
 
-    ``scored_pairs`` must already be blocked/pruned (the distributed part).
-    Returns (block?, left_key, right_key, score).
+    ``scored_pairs`` (left_key, right_key, score) must already be
+    blocked/pruned (the distributed part); all of it is one comparison
+    group. Returns (left_key, right_key, score).
     """
-    blk = block_col or "_blk"
-    df = scored_pairs
-    if block_col is None:
-        df = df.withColumn(blk, F.lit(0))
+    cols = ["left_key", "right_key", "score"]
 
     def assign(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([left_col, right_col], kind="mergesort").reset_index(drop=True)
+        pdf = pdf.sort_values(["left_key", "right_key"], kind="mergesort").reset_index(drop=True)
         used: set = set()
         out = []
-        for lk, grp in pdf.groupby(left_col, sort=True):
+        for lk, grp in pdf.groupby("left_key", sort=True):
             best_score = 0.0
             best_rk = None
-            for rk, sc in zip(grp[right_col], grp[score_col]):
+            for rk, sc in zip(grp["right_key"], grp["score"]):
                 if rk in used:
                     continue
                 if sc > best_score:
@@ -61,24 +52,18 @@ def greedy_similarity_match(
                     best_rk = rk
             if best_score >= threshold and best_rk is not None:
                 used.add(best_rk)
-                out.append((grp[blk].iloc[0], lk, best_rk, float(best_score)))
-        return pd.DataFrame(out, columns=[blk, left_col, right_col, score_col])
+                out.append((lk, best_rk, float(best_score)))
+        return pd.DataFrame(out, columns=cols)
 
-    schema_fields = []
-    for name in (blk, left_col, right_col, score_col):
-        dtype = dict(df.dtypes)[name]
-        schema_fields.append(f"{name} {dtype}")
-    result = df.groupBy(blk).applyInPandas(assign, schema=", ".join(schema_fields))
-    if block_col is None:
-        result = result.drop(blk)
-    return result
+    dtypes = dict(scored_pairs.dtypes)
+    schema = ", ".join(f"{c} {dtypes[c]}" for c in cols)
+    return scored_pairs.groupBy().applyInPandas(assign, schema=schema)
 
 
 def contextual_match_scores(
     left: DataFrame,
     right: DataFrame,
     matched_pairs: DataFrame,
-    path_col: str = "path",
 ) -> DataFrame:
     """J4 candidate scoring (core/file_matcher.py:325-360): iterative —
     depends on prior matches, so prior pairs are broadcast (2-pass shape).
@@ -86,7 +71,8 @@ def contextual_match_scores(
     score = 0.7 * (shared folder-prefix depth / max path depth)
           + 0.3 * (sibling matched-pair fraction)
     Feed into greedy_similarity_match(threshold=0.5) after left-anti
-    filtering rights already used by ``matched_pairs``.
+    filtering rights already used by ``matched_pairs``. ``left`` and
+    ``right`` hold the file paths in a ``path`` column.
 
     Candidates equi-join on the FIRST path segment instead of a cross
     join. Lossless for any downstream threshold > 0.3: the folder term is
@@ -116,18 +102,18 @@ def contextual_match_scores(
     )
     first_seg = lambda c: F.split(c, "/").getItem(0)  # noqa: E731
     l = left.select(
-        F.col(path_col).alias("left_key"),
-        F.split(F.col(path_col), "/").alias("_lparts"),
-        parent(F.col(path_col)).alias("_lparent"),
-        first_seg(F.col(path_col)).alias("_lseg0"),
+        F.col("path").alias("left_key"),
+        F.split(F.col("path"), "/").alias("_lparts"),
+        parent(F.col("path")).alias("_lparent"),
+        first_seg(F.col("path")).alias("_lseg0"),
     )
     r = right.join(
-        matched_pairs.select(F.col("right_key").alias(path_col)), path_col, "left_anti"
+        matched_pairs.select(F.col("right_key").alias("path")), "path", "left_anti"
     ).select(
-        F.col(path_col).alias("right_key"),
-        F.split(F.col(path_col), "/").alias("_rparts"),
-        parent(F.col(path_col)).alias("_rparent"),
-        first_seg(F.col(path_col)).alias("_rseg0"),
+        F.col("path").alias("right_key"),
+        F.split(F.col("path"), "/").alias("_rparts"),
+        parent(F.col("path")).alias("_rparent"),
+        first_seg(F.col("path")).alias("_rseg0"),
     )
     cand = l.join(r, l["_lseg0"] == r["_rseg0"]).drop("_lseg0", "_rseg0")
     # matching parent-folder prefix length (stop at first mismatch)

@@ -73,7 +73,9 @@ def pip_join(
 
     points: DataFrame with (id, lat, lon). polygons: small side data.
     Both side tables are built from pandas over Arrow, so they plan as
-    local relations: broadcasting them runs no job and no Python worker.
+    local relations and no Python worker runs. Broadcasting each one is
+    still a job: its BroadcastExchange collects the relation through
+    min(rows, cores) tasks.
     """
     index = build_cell_index(polygons, index_level)
     index_pdf = pd.DataFrame(

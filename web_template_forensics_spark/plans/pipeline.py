@@ -1,7 +1,7 @@
 """The end-to-end pages pipeline (the spark-submit job body).
 
 pages -> extract_text (oracle-verified) -> geocode (meta > TLD anchor) ->
-broadcast PIP join (WGQ cell-keyed) -> salted tile rollup -> sinks.
+broadcast PIP join (WGQ cell-keyed) -> tile rollup -> sinks.
 This is the E1-analog lifecycle of SURVEY.md §3 re-expressed as one
 DataFrame lineage; `jobs/run_pipeline.py` wraps it for spark-submit, and
 `checkpointed_write` gives the per-partition lineage + resume the north
@@ -10,12 +10,15 @@ rule requires.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..geo.polygons import Polygon
 from ..operators.spatial_join import pip_join
 from ..operators.tiles import tile_rollup
+from ..sources.catalog import checkpointed_write
 from ..sources.pages import build_pages_df
 
 TILE_Z = 5
@@ -133,9 +136,11 @@ def run_pages_pipeline(
     writes tiles + pip sinks via the checkpointed catalog.
 
     Action plan (kept deliberately small — each action is a full job):
-      1 persist+agg over geo (counts + optional text invariant),
+      1 persist+agg over geo (counts + optional text invariant), run on a
+        worker thread while the driver builds the pip and tile plans,
       2 pip count / checkpointed write,
-      3 tiles count / checkpointed write.
+      3 tiles count / checkpointed write (2 and 3 run concurrently).
+    The text invariant is checked before either sink is written.
     """
     pages = pages if pages is not None else build_pages_df(spark, n_pages, seed)
     # Parquet packing can hand us far fewer input splits than cores (small
@@ -145,58 +150,60 @@ def run_pages_pipeline(
     if pages.rdd.getNumPartitions() < parallelism:
         pages = pages.repartition(parallelism * 2)
     geo = pages_to_geo_fused(pages, verify_text=verify_text).persist()
-
-    head = geo.agg(
-        F.count(F.lit(1)).alias("n_total"),
-        F.sum(F.col("lat").isNotNull().cast("int")).alias("n_geo"),
-        F.sum("text_ok").alias("n_text_ok"),
-    ).first()
-    n_text_ok = head["n_text_ok"] or 0  # sum over zero rows is null
-    if verify_text and n_text_ok != head["n_total"]:
-        raise AssertionError(
-            f"text-extraction invariant violated on {head['n_total'] - n_text_ok} rows"
-        )
-
-    geocoded = geo.filter(F.col("lat").isNotNull())
-    pts = geocoded.select(F.col("url").alias("id"), "lat", "lon", "n_bytes")
-
-    pip = pip_join(spark, pts, world_polygons(), index_level=6)
-    tiles = tile_rollup(pts, TILE_Z, weight_col="n_bytes", salted=True)
-
-    stats = {
-        "pages": head["n_total"],
-        "geocoded": head["n_geo"],
-        "ungeocoded": head["n_total"] - head["n_geo"],
-    }
-    if out_dir:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from ..sources.catalog import checkpointed_write
-
-        # the two sinks are independent reads of the cached geo frame —
-        # submit them as concurrent Spark jobs so the latency-bound small
-        # writes overlap instead of serializing
+    try:
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_pip = pool.submit(
-                checkpointed_write, spark, pip, f"{out_dir}/pip", key_col="id", n_buckets=16
+            # the head job runs the Python stage and fills the geo cache;
+            # the sink plans are driver work, so build them while it runs
+            f_head = pool.submit(
+                lambda: geo.agg(
+                    F.count(F.lit(1)).alias("n_total"),
+                    F.sum(F.col("lat").isNotNull().cast("int")).alias("n_geo"),
+                    F.sum("text_ok").alias("n_text_ok"),
+                ).first()
             )
-            f_tiles = pool.submit(
-                checkpointed_write,
-                spark,
-                tiles.withColumn(
-                    "tile_key", F.concat_ws("/", "tile_z", "tile_x", "tile_y")
-                ),
-                f"{out_dir}/tiles",
-                key_col="tile_key",
-                n_buckets=16,
-            )
-            pip_snap = f_pip.result()
-            tile_snap = f_tiles.result()
-        stats["pip_assignments"] = pip_snap["total_rows"]
-        stats["tiles"] = tile_snap["total_rows"]
-        stats["tiles_snapshot"] = tile_snap["committed_buckets"]
-    else:
-        stats["pip_assignments"] = pip.count()
-        stats["tiles"] = tiles.count()
-    geo.unpersist()
+            geocoded = geo.filter(F.col("lat").isNotNull())
+            pts = geocoded.select(F.col("url").alias("id"), "lat", "lon", "n_bytes")
+            pip = pip_join(spark, pts, world_polygons(), index_level=6)
+            # count and sum already combine map-side: salting would only
+            # add an exchange and a job
+            tiles = tile_rollup(pts, TILE_Z, weight_col="n_bytes")
+
+            head = f_head.result()
+            n_text_ok = head["n_text_ok"] or 0  # sum over zero rows is null
+            if verify_text and n_text_ok != head["n_total"]:
+                raise AssertionError(
+                    f"text-extraction invariant violated on {head['n_total'] - n_text_ok} rows"
+                )
+            stats = {
+                "pages": head["n_total"],
+                "geocoded": head["n_geo"],
+                "ungeocoded": head["n_total"] - head["n_geo"],
+            }
+            if out_dir:
+                # the two sinks are independent reads of the cached geo
+                # frame — submit them as concurrent Spark jobs so the
+                # latency-bound small writes overlap instead of serializing
+                f_pip = pool.submit(
+                    checkpointed_write, spark, pip, f"{out_dir}/pip", key_col="id", n_buckets=16
+                )
+                f_tiles = pool.submit(
+                    checkpointed_write,
+                    spark,
+                    tiles.withColumn(
+                        "tile_key", F.concat_ws("/", "tile_z", "tile_x", "tile_y")
+                    ),
+                    f"{out_dir}/tiles",
+                    key_col="tile_key",
+                    n_buckets=16,
+                )
+                pip_snap = f_pip.result()
+                tile_snap = f_tiles.result()
+                stats["pip_assignments"] = pip_snap["total_rows"]
+                stats["tiles"] = tile_snap["total_rows"]
+                stats["tiles_snapshot"] = tile_snap["committed_buckets"]
+            else:
+                stats["pip_assignments"] = pip.count()
+                stats["tiles"] = tiles.count()
+    finally:
+        geo.unpersist()
     return stats

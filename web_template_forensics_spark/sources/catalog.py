@@ -152,6 +152,10 @@ def checkpointed_write(
     frame, and whatever a killed run left in a pending bucket is
     replaced), then one lineage marker per bucket is committed.
 
+    Write tasks = min(pending buckets, cores), and a task writes one file
+    for each of its buckets: the shuffle hashes every bucket into exactly
+    one task, so each bucket directory still gets exactly one file.
+
     ``bucket_col`` overrides the default ``pmod(xxhash64(key), n)``
     bucketing with a caller-provided column (values must be in
     [0, n_buckets)) — used by the oracle-gated lineage query, whose
@@ -179,11 +183,14 @@ def checkpointed_write(
     bdf = df.withColumn("bucket", bucket_expr)
     if len(todo) < n_buckets:
         bdf = bdf.filter(F.col("bucket").isin(todo))
+    # a write task costs more than the few files it writes, so cap the
+    # tasks at the cores instead of one task per bucket
+    n_tasks = min(len(todo), spark.sparkContext.defaultParallelism)
     t0 = time.perf_counter()
     (
         # co-locate each bucket into one task -> one file per bucket
-        # (instead of n_tasks x n_buckets small files)
-        bdf.repartition(len(todo), F.col("bucket"))
+        # (instead of input tasks x n_buckets small files)
+        bdf.repartition(n_tasks, F.col("bucket"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
