@@ -3,7 +3,6 @@ plus engine-specific additions (vars, keyframes, supports, nesting)."""
 
 from web_template_forensics_spark.oracle.css_oracle import (
     compare_css,
-    css_rule_rows,
     normalize_css_value,
     normalize_value,
     parse_css,
@@ -106,12 +105,3 @@ def test_important_flag():
     rules, *_ = parse_css(".a { color: red !important; }")
     assert rules[".a"]["color"] == ("red", True)
 
-
-def test_rule_rows_explode():
-    rows = css_rule_rows(
-        ".a { x: 1; } @media (max-width: 100px) { .b { y: 2 !important; } } "
-        "@keyframes k { 50% { opacity: 0.5; } }"
-    )
-    assert ("top", ".a", "x", "1", False) in rows
-    assert ("media:(max-width: 100px)", ".b", "y", "2", True) in rows
-    assert ("keyframes:k:50%", "", "opacity", "0.5", False) in rows

@@ -146,6 +146,23 @@ def test_image_phash_pairs_on_cluster(spark):
     assert all(base[a] == base[b] >= 0 for a, b in got)
 
 
+def test_image_phash_pairs_drops_null_payload(spark):
+    """A null payload drops its row, not the job: the other pairs are
+    exactly the ones the corpus alone produces."""
+    from web_template_forensics_spark.operators.dedup import image_phash_pairs
+
+    rows = [(r["media_id"], bytearray(r["payload"])) for r in phash_corpus()]
+    schema = "media_id long, payload binary"
+
+    def pairs(rs):
+        df = image_phash_pairs(spark.createDataFrame(rs, schema), max_hamming=6)
+        return sorted(tuple(r) for r in df.collect())
+
+    with_null = pairs(rows + [(999, None)])
+    assert with_null == pairs(rows)
+    assert all(999 not in (a, b) for a, b, _ in with_null)
+
+
 def test_band_self_join_reuses_hash_stage(spark):
     """The banded self-join must execute the upstream hash stage ONCE
     (AQE ReusedQueryStage): for pHash the stage is a full image decode,

@@ -87,16 +87,3 @@ def test_fallback_contract():
     out = parse_jsx_or_fallback("function f() { return 1; }")
     assert set(out) == {"ast", "call_graph"}
 
-
-def test_parse_jsx_udf_matches_pure(spark):
-    from pyspark.sql import functions as F
-
-    from web_template_forensics_spark.functions.code_udfs import parse_jsx_udf
-
-    df = spark.createDataFrame([(s,) for s in SNIPPETS if s], "code string")
-    got = df.select(parse_jsx_udf("code").alias("p")).select("p.*").collect()
-    for row, code in zip(got, [s for s in SNIPPETS if s]):
-        p = parse_jsx(code)
-        assert row.ast_json == json.dumps(p["ast"], sort_keys=True, separators=(",", ":"))
-        edges = {(e.caller, e.callee) for e in row.edges}
-        assert edges == {(a, b) for a, bs in p["call_graph"].items() for b in bs}

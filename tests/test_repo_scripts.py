@@ -1,24 +1,25 @@
-"""The top-level scripts stay runnable without running them.
+"""The top-level scripts stay runnable without running them, and the
+operators take no option nobody sets.
 
-No test executes bench.py, the jobs or the tools, so a stale path in the
-README or a call to a ``get_spark`` parameter that no longer exists would
+No test executes bench.py, the jobs, the tools or perfbench, so a stale
+path in the README or a call to a parameter that no longer exists would
 only fail when someone runs the script. These checks read the files:
 the README's Layout and Running blocks name only paths that exist, every
-script compiles, every ``get_spark(...)`` call binds to its signature, and
-every package module is imported by something other than a test.
+script compiles, every script call to a package function binds to its
+signature, every package module is imported by something other than a
+test, and every defaulted operator parameter is passed by some call.
 """
 
 from __future__ import annotations
 
 import ast
 import glob
+import importlib
 import inspect
 import os
 import re
 
 import pytest
-
-from web_template_forensics_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -71,34 +72,121 @@ def test_script_compiles(path):
         compile(fh.read(), path, "exec")
 
 
-def _get_spark_calls(path: str) -> list[ast.Call]:
+PKG = "web_template_forensics_spark"
+
+
+def _parse(path: str) -> ast.Module:
     with open(os.path.join(REPO, path), encoding="utf-8") as fh:
-        tree = ast.parse(fh.read(), path)
-    return [
-        node
-        for node in ast.walk(tree)
-        if isinstance(node, ast.Call)
-        and getattr(node.func, "id", getattr(node.func, "attr", None)) == "get_spark"
-    ]
+        return ast.parse(fh.read(), path)
 
 
-def test_get_spark_calls_bind_to_signature():
-    sig = inspect.signature(get_spark)
-    calls = {path: _get_spark_calls(path) for path in SCRIPTS}
-    assert calls["bench.py"] and calls["perfbench/run.py"]
-    for path, nodes in calls.items():
-        for node in nodes:
+def _package_calls(path: str) -> list[tuple[ast.Call, str, object]]:
+    """(call, name, function) for every call in ``path`` to a function
+    the file imports from the package, by ``from pkg.m import f`` or as
+    ``m.f`` after ``import pkg.m as m``."""
+    tree = _parse(path)
+    funcs, mods = {}, {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and not node.level and node.module.startswith(PKG):
+            for a in node.names:
+                funcs[a.asname or a.name] = (node.module, a.name)
+        elif isinstance(node, ast.Import):
+            mods.update((a.asname, a.name) for a in node.names if a.asname and a.name.startswith(PKG))
+    out = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Name) and f.id in funcs:
+            module, name = funcs[f.id]
+        elif isinstance(f, ast.Attribute) and getattr(f.value, "id", None) in mods:
+            module, name = mods[f.value.id], f.attr
+        else:
+            continue
+        obj = getattr(importlib.import_module(module), name, None)
+        if inspect.isfunction(obj):
+            out.append((node, name, obj))
+    return out
+
+
+def test_package_calls_bind_to_signature():
+    """A signature edit that breaks bench.py, a job, a tool or perfbench
+    fails here instead of in a benchmark run."""
+    calls = {path: _package_calls(path) for path in SCRIPTS}
+    names = {path: {name for _, name, _ in found} for path, found in calls.items()}
+    assert "get_spark" in names["bench.py"] and "get_spark" in names["perfbench/run.py"]
+    assert {
+        "pip_join",
+        "tile_rollup",
+        "checkpointed_write",
+        "pages_to_geo_fused",
+        "run_pages_pipeline",
+    } <= names["perfbench/workloads.py"]
+    for path, found in calls.items():
+        for node, name, fn in found:
             if any(isinstance(a, ast.Starred) for a in node.args) or any(
                 kw.arg is None for kw in node.keywords
             ):
                 continue  # *args / **kwargs cannot be checked statically
+            sig = inspect.signature(fn)
             try:
                 sig.bind(*node.args, **{kw.arg: kw.value for kw in node.keywords})
             except TypeError as e:
-                pytest.fail(f"{path}:{node.lineno}: get_spark{sig}: {e}")
+                pytest.fail(f"{path}:{node.lineno}: {name}{sig}: {e}")
 
 
-PKG = "web_template_forensics_spark"
+OPTION_MODULES = ("operators/*.py", "streaming/*.py", "plans/multimodal_fixture.py")
+
+
+def _defaulted_params() -> dict[str, tuple[str, list[str], list[str]]]:
+    """Public function name -> (module, positional names, defaulted names)
+    over the operator modules."""
+    out = {}
+    for pattern in OPTION_MODULES:
+        for path in sorted(glob.glob(os.path.join(REPO, PKG, pattern))):
+            rel = os.path.relpath(path, REPO)
+            for node in _parse(rel).body:
+                if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
+                    continue
+                a = node.args
+                pos = [x.arg for x in a.posonlyargs + a.args]
+                defaulted = pos[len(pos) - len(a.defaults):] + [
+                    k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+                ]
+                if defaulted:
+                    out[node.name] = (rel, pos, defaulted)
+    return out
+
+
+def test_every_operator_option_is_passed():
+    """A defaulted parameter that no call in the repo passes, tests
+    included, is an option nobody uses: delete it with the branch behind
+    it. Calls match by name, by position and by keyword; ``*args`` and
+    ``**kwargs`` pass nothing."""
+    params = _defaulted_params()
+    passed: dict[str, set[str]] = {name: set() for name in params}
+    files = glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)
+    files += glob.glob(os.path.join(REPO, "tests", "*.py"))
+    for path in files + [os.path.join(REPO, p) for p in SCRIPTS]:
+        for node in ast.walk(_parse(path)):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", getattr(node.func, "attr", None))
+            if name not in params:
+                continue
+            n_pos = next(
+                (i for i, a in enumerate(node.args) if isinstance(a, ast.Starred)),
+                len(node.args),
+            )
+            passed[name].update(params[name][1][:n_pos])
+            passed[name].update(kw.arg for kw in node.keywords if kw.arg)
+    unused = [
+        f"{module}:{name}({p})"
+        for name, (module, _, defaulted) in sorted(params.items())
+        for p in defaulted
+        if p not in passed[name]
+    ]
+    assert not unused, f"{len(unused)} options no call passes: {unused}"
 
 
 def _module_name(path: str) -> str:

@@ -16,8 +16,11 @@ from web_template_forensics_spark.functions.webp_codec import (
     decode_webp,
     encode_webp,
     is_webp,
-    is_webp_lossless,
 )
+
+
+def is_webp_lossless(payload: bytes) -> bool:
+    return is_webp(payload) and payload[12:16] == b"VP8L"
 
 
 def _check(img: np.ndarray, **kw) -> None:

@@ -62,3 +62,21 @@ def audio_hash64(samples: np.ndarray) -> int:
     for v in bits.reshape(-1):
         h = (h << 1) | int(v)
     return h
+
+
+def audio_payload_hash64(payload: bytes) -> int:
+    """Audio payload (RIFF/WAVE or FLAC) -> unsigned 64-bit fingerprint,
+    dispatched on magic bytes. FLAC decodes to the EXACT source samples,
+    so a WAV<->FLAC re-containering is a hamming-0 pair. Raises
+    ValueError when the payload is neither or does not decode (drop
+    policy)."""
+    from .flac_codec import decode_flac, is_flac
+    from .wav_codec import decode_wav, is_wav
+
+    if is_wav(payload):
+        samples, _rate = decode_wav(payload)
+    elif is_flac(payload):
+        samples, _rate = decode_flac(payload)
+    else:
+        raise ValueError("not a WAV or FLAC payload")
+    return audio_hash64(samples)

@@ -34,6 +34,9 @@ from collections.abc import Sequence
 
 import numpy as np
 
+# frames sampled evenly per clip: only these pay a decode + pHash
+MAX_FRAMES = 8
+
 
 def even_sample(items: Sequence, k: int) -> list:
     """Evenly-spaced subset (first-biased integer grid) — the ONE
@@ -67,7 +70,7 @@ def video_hash64(frame_hashes: Sequence[int]) -> int:
     return out
 
 
-def video_payload_hash64(payload: bytes, max_frames: int = 8) -> int:
+def video_payload_hash64(payload: bytes) -> int:
     """Video payload (MJPEG, animated GIF or animated WebP) -> unsigned
     64-bit fingerprint, dispatched on magic bytes. Because the combiner
     is an order-invariant vote over per-frame pHashes, the SAME clip
@@ -81,7 +84,7 @@ def video_payload_hash64(payload: bytes, max_frames: int = 8) -> int:
 
     if is_gif(payload):
         try:
-            frames = decode_gif_frames(payload, sample_k=max_frames)
+            frames = decode_gif_frames(payload, sample_k=MAX_FRAMES)
         except GifFormatError as exc:
             raise ValueError(f"GIF video: {exc}") from exc
     elif is_webp(payload):
@@ -90,21 +93,21 @@ def video_payload_hash64(payload: bytes, max_frames: int = 8) -> int:
             # canvases materialize, not every composited frame
             frames = [
                 f[:, :, :3]
-                for f in decode_webp_frames(payload, sample_k=max_frames)
+                for f in decode_webp_frames(payload, sample_k=MAX_FRAMES)
             ]
         except (WebpFormatError, NotImplementedError) as exc:
             raise ValueError(f"WebP video: {exc}") from exc
         return video_hash64([phash64(f) for f in frames])
     else:
-        return mjpeg_video_hash64(payload, max_frames)
+        return mjpeg_video_hash64(payload)
     return video_hash64([phash64(f) for f in frames])
 
 
-def mjpeg_video_hash64(payload: bytes, max_frames: int = 8) -> int:
+def mjpeg_video_hash64(payload: bytes) -> int:
     """MJPEG payload -> unsigned 64-bit video fingerprint.
 
     Structural framing is cheap (marker walk, no decode); only the
-    <= ``max_frames`` evenly-sampled frames pay the real JPEG decode +
+    <= ``MAX_FRAMES`` evenly-sampled frames pay the real JPEG decode +
     pHash cost. A TRUNCATED TAIL (capture cut mid-frame — common in
     real MJPEG) keeps every complete frame already walked; frames that
     fail to decode are skipped; raises ValueError when NO frame
@@ -118,7 +121,7 @@ def mjpeg_video_hash64(payload: bytes, max_frames: int = 8) -> int:
             spans.append(span)
     except JpegFormatError:
         pass  # keep the complete frames walked before the cut
-    spans = even_sample(spans, max_frames)
+    spans = even_sample(spans, MAX_FRAMES)
     hashes: list[int] = []
     for s, e in spans:
         try:

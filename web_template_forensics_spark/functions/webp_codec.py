@@ -44,10 +44,6 @@ def is_webp(payload: bytes) -> bool:
     return payload[:4] == b"RIFF" and payload[8:12] == b"WEBP"
 
 
-def is_webp_lossless(payload: bytes) -> bool:
-    return is_webp(payload) and payload[12:16] == b"VP8L"
-
-
 # ------------------------------------------------------------- bit I/O
 
 

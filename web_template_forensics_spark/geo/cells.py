@@ -142,15 +142,6 @@ def k_ring(cell: int, k: int) -> np.ndarray:
     return np.unique(ids)
 
 
-def k_ring_shell(cell: int, k: int) -> np.ndarray:
-    """Only the ring at exactly Chebyshev distance k (grid_ring analogue)."""
-    if k == 0:
-        return np.asarray([np.int64(cell)])
-    inner = set(k_ring(cell, k - 1).tolist())
-    disk = k_ring(cell, k)
-    return np.asarray(sorted(set(disk.tolist()) - inner), dtype=np.int64)
-
-
 def cell_bounds(cell) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """(lat_min, lat_max, lon_min, lon_max) of the cell rectangle."""
     level, ix, iy = cell_decode(cell)

@@ -336,15 +336,9 @@ def match_cascade(files: DataFrame) -> DataFrame:
     )
 
 
-def matched_with_contents(files: DataFrame, matched: DataFrame | None = None) -> DataFrame:
-    """Matched pairs + both contents + the E1 pairwise-comparison struct.
-
-    ``matched``: optionally a precomputed (e.g. localCheckpointed)
-    match_cascade output — the cascade subplan contains ~a dozen
-    grouped-map stages, so callers composing several aggregates over the
-    same file table should materialize it once and pass it in.
-    """
-    matched = match_cascade(files) if matched is None else matched
+def matched_with_contents(files: DataFrame) -> DataFrame:
+    """Matched pairs + both contents + the E1 pairwise-comparison struct."""
+    matched = match_cascade(files)
     l = files.filter(F.col("side") == "original").select(
         F.col("filetype").alias("_ft1"), F.col("path").alias("_p1"), F.col("content").alias("_c1")
     )
@@ -679,12 +673,12 @@ _REPORT_SCHEMA = (
 )
 
 
-def cascade_reports_per_pair(files: DataFrame, pair_col: str = "pair_id") -> DataFrame:
+def cascade_reports_per_pair(files: DataFrame) -> DataFrame:
     """MANY project pairs at once — the cascade's 100x scale shape.
 
     One reference "analysis" covers a single (original, modified) project
     pair whose inventory is small; web-scale means MILLIONS of pairs, not
-    one huge pair. Grouping by ``pair_col`` and running the whole E1
+    one huge pair. Grouping by ``pair_id`` and running the whole E1
     lifecycle per group in one grouped-map pass makes each pair an
     independent unit of work: no cross-pair shuffle at all, linear in the
     number of pairs, AQE-balanced across executors. The per-pair logic is
@@ -694,7 +688,7 @@ def cascade_reports_per_pair(files: DataFrame, pair_col: str = "pair_id") -> Dat
 
     Input columns: (pair_id, side, path, filetype, content).
 
-    Round-7 shape: ``repartition(pair_col) + sortWithinPartitions +
+    Round-7 shape: ``repartition(pair_id) + sortWithinPartitions +
     mapInPandas`` instead of ``groupBy().applyInPandas`` — semantically
     identical (hash partitioning co-locates each pair; the sort makes
     its rows contiguous; a carried tail handles groups spanning Arrow
@@ -734,7 +728,7 @@ def cascade_reports_per_pair(files: DataFrame, pair_col: str = "pair_id") -> Dat
                 tail = None
             if len(pdf) == 0:
                 continue
-            pids = pdf[pair_col].to_numpy()
+            pids = pdf["pair_id"].to_numpy()
             # hold back the trailing group: it may continue in the next batch
             last = pids[-1]
             cut = int((pids != last).nonzero()[0][-1]) + 1 if (pids != last).any() else 0
@@ -744,17 +738,17 @@ def cascade_reports_per_pair(files: DataFrame, pair_col: str = "pair_id") -> Dat
             if len(pdf) == 0:
                 continue
             out = [
-                _report(int(pid), g) for pid, g in pdf.groupby(pair_col, sort=False)
+                _report(int(pid), g) for pid, g in pdf.groupby("pair_id", sort=False)
             ]
             yield pd.DataFrame(out)
         if tail is not None and len(tail):
             yield pd.DataFrame(
-                [_report(int(pid), g) for pid, g in tail.groupby(pair_col, sort=False)]
+                [_report(int(pid), g) for pid, g in tail.groupby("pair_id", sort=False)]
             )
 
     n_parts = files.sparkSession.sparkContext.defaultParallelism
     return (
-        files.repartition(n_parts, pair_col)
-        .sortWithinPartitions(pair_col)
+        files.repartition(n_parts, "pair_id")
+        .sortWithinPartitions("pair_id")
         .mapInPandas(many_pairs, schema=_REPORT_SCHEMA)
     )

@@ -101,12 +101,7 @@ def _signature(edges: DataFrame):
     return row["n"], row["h"]
 
 
-def connected_components(
-    edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    loop_shuffle_partitions: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Edges (id_a, id_b) -> (node, component) with component = min node
     id reachable. Nodes appearing only as isolated endpoints of dropped
     self-loops still label themselves. Alternates large-star/small-star
@@ -127,7 +122,7 @@ def connected_components(
     ones inside the window — avoid running concurrent queries on the
     same session mid-call)."""
     e = (
-        edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+        edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -136,11 +131,7 @@ def connected_components(
     sig = _signature(e)
     spark = e.sparkSession
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    parts = (
-        loop_shuffle_partitions
-        if loop_shuffle_partitions is not None
-        else max(8, min(session_parts, sig[0] // 1_000_000 + 8))
-    )
+    parts = max(8, min(session_parts, sig[0] // 1_000_000 + 8))
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         for _ in range(MAX_ROUNDS):
@@ -165,14 +156,9 @@ def connected_components(
     return labelled.union(selfs)
 
 
-def dedup_clusters(
-    docs: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Assign EVERY document a dedup cluster from near-dup pair edges.
+def dedup_clusters(docs: DataFrame, edges: DataFrame) -> DataFrame:
+    """Assign EVERY document (``doc_id``) a dedup cluster from near-dup
+    pair edges (``id_a``, ``id_b``).
 
     Output per doc: cluster_id (min doc id in its component — the
     canonical survivor), cluster_size, is_canonical (1/0 bigint,
@@ -181,8 +167,8 @@ def dedup_clusters(
     computation shuffles only id pairs; the final joins are
     id-equi-joins (the component map is |near-dup docs| rows — tiny
     next to the corpus — so AQE broadcasts it)."""
-    comp = connected_components(edges, id_a, id_b)
-    ids = docs.select(F.col(id_col).alias("doc_id"))
+    comp = connected_components(edges)
+    ids = docs.select("doc_id")
     assigned = (
         ids.join(comp, ids.doc_id == comp.node, "left")
         .select("doc_id", F.coalesce(F.col("component"), F.col("doc_id")).alias("cluster_id"))

@@ -20,6 +20,15 @@ from ..functions.text_udfs import (
     simhash64_udf,
 )
 
+# LSH bands over the N_MINHASH-slot signature (a divisor of it), read by
+# minhash_lsh_pairs and its DuckDB replica
+MINHASH_BANDS = 16
+# perceptual near-dup radii, one home for the operators' defaults, the
+# declared queries and the DuckDB oracle builders
+IMAGE_HAMMING = 6
+AUDIO_HAMMING = 8
+VIDEO_HAMMING = 6
+
 
 def latest_crawl_dedup(pages: DataFrame, key: str = "url", ts: str = "warc_ts") -> DataFrame:
     """Keep the latest crawl per url (deterministic: ts desc, then all
@@ -51,7 +60,6 @@ def minhash_lsh_pairs(
     id_col: str,
     text_col: str,
     threshold: float = 0.7,
-    bands: int = 16,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs -> (id_a, id_b, jaccard).
 
@@ -66,13 +74,7 @@ def minhash_lsh_pairs(
     computes exact Jaccard JVM-side with array_intersect — no per-pair
     Python, no re-shingling.
     """
-    if not (1 <= bands <= N_MINHASH) or N_MINHASH % bands != 0:
-        raise ValueError(
-            f"bands={bands} must divide the signature length "
-            f"{N_MINHASH} (bands > {N_MINHASH} would degenerate to an "
-            f"all-docs bucket; non-divisors silently drop signature tail)"
-        )
-    rows_per_band = N_MINHASH // bands
+    rows_per_band = N_MINHASH // MINHASH_BANDS
     # zero-shingle (empty / whitespace-only) docs are excluded up front:
     # their Jaccard is 0/0 — not "1.0" — and their constant sentinel
     # signatures would otherwise bucket every empty doc with every other
@@ -102,7 +104,7 @@ def minhash_lsh_pairs(
     )
     banded = base.select(
         "_id",
-        F.explode(F.array(*_band_cols("_sig", bands, rows_per_band))).alias("band_key"),
+        F.explode(F.array(*_band_cols("_sig", MINHASH_BANDS, rows_per_band))).alias("band_key"),
     )
     ba, bb = banded.alias("_ba"), banded.alias("_bb")
     cand = (
@@ -246,166 +248,90 @@ def hamming_band_pairs(
     )
 
 
-def image_phash_pairs(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    max_hamming: int = 6,
-    n_bands: int | None = None,
-) -> DataFrame:
-    """Perceptual near-duplicate image pairs -> (id_a, id_b, hamming).
+def _media_hash_pairs(media: DataFrame, payload_hash64, max_hamming: int) -> DataFrame:
+    """(media_id, payload) -> (id_a, id_b, hamming): the loop shared by
+    the image, audio and video near-dup operators.
 
-    Stage 1 decodes each payload ON EXECUTORS (Arrow-batched
+    Stage 1 hashes each payload ON EXECUTORS (Arrow-batched
     ``mapInPandas`` — the expensive, embarrassingly-parallel part) and
-    emits only (id, 64-bit pHash): payload bytes never shuffle, the
-    pairing stage moves 16 bytes/row no matter how large the images
-    are. Stage 2 is the shared pigeonhole banding (exact recall at the
-    radius). Rows whose payload fails to decode are DROPPED from
-    pairing — a corrupt image has no perceptual identity to match on
-    (callers wanting an audit trail join the output back against the
-    input ids). Default radius 6 is comfortably inside the measured
-    operating point: same image re-encoded across JPEG quality
-    70-92/progressive/PNG lands at hamming <= 2 on this package's own
-    codecs, while distinct textures sit >= 20."""
-    import pandas as pd
-
-    from ..functions.image_hash import phash64, phash_to_signed
-    from .multimodal import decode_image
-
-    def op(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            hs: list[int] = []
-            for r in pdf[[id_col, payload_col]].itertuples(index=False):
-                try:
-                    img = decode_image(bytes(r[1]))
-                except (ValueError, NotImplementedError):
-                    continue
-                ids.append(int(r[0]))
-                hs.append(phash_to_signed(phash64(img)))
-            yield pd.DataFrame(
-                {"_id": pd.array(ids, dtype="int64"), "_sh": pd.array(hs, dtype="int64")}
-            )
-
-    hashed = media.select(
-        F.col(id_col).alias(id_col), F.col(payload_col).alias(payload_col)
-    ).mapInPandas(op, "_id long, _sh long")
-    return hamming_band_pairs(hashed, max_hamming, n_bands)
-
-
-def audio_fingerprint_pairs(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    max_hamming: int = 8,
-    n_bands: int | None = None,
-) -> DataFrame:
-    """Perceptual near-duplicate audio pairs -> (id_a, id_b, hamming).
-
-    The audio sibling of ``image_phash_pairs``: decode RIFF/WAVE on
-    executors, emit only (id, 64-bit gain-invariant time-frequency
-    fingerprint), then the shared pigeonhole banding — payload bytes
-    never shuffle, recall is exact at the radius, corrupt/non-WAV rows
-    are dropped (no perceptual identity to match on). Default radius 8
-    sits inside the measured gap: the same clip across gain 0.6-1.2 /
-    dither / PCM-depth + float re-encodes lands at hamming <= 6 while
-    distinct clips sit >= 17 (functions/audio_hash.py docstring)."""
-    import pandas as pd
-
-    from ..functions.audio_hash import audio_hash64
-    from ..functions.flac_codec import decode_flac, is_flac
-    from ..functions.image_hash import phash_to_signed
-    from ..functions.wav_codec import decode_wav, is_wav
-
-    def op(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            hs: list[int] = []
-            for r in pdf[[id_col, payload_col]].itertuples(index=False):
-                payload = bytes(r[1]) if r[1] is not None else b""
-                try:
-                    if is_wav(payload):
-                        samples, _rate = decode_wav(payload)
-                    elif is_flac(payload):
-                        # FLAC decodes to the EXACT source samples, so a
-                        # WAV<->FLAC re-containering is a hamming-0 pair
-                        samples, _rate = decode_flac(payload)
-                    else:
-                        continue
-                except ValueError:
-                    continue
-                ids.append(int(r[0]))
-                hs.append(phash_to_signed(audio_hash64(samples)))
-            yield pd.DataFrame(
-                {"_id": pd.array(ids, dtype="int64"), "_sh": pd.array(hs, dtype="int64")}
-            )
-
-    hashed = media.select(
-        F.col(id_col).alias(id_col), F.col(payload_col).alias(payload_col)
-    ).mapInPandas(op, "_id long, _sh long")
-    return hamming_band_pairs(hashed, max_hamming, n_bands)
-
-
-def video_phash_pairs(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    max_frames: int = 8,
-    max_hamming: int = 6,
-    n_bands: int | None = None,
-) -> DataFrame:
-    """Perceptual near-duplicate VIDEO pairs -> (id_a, id_b, hamming).
-
-    Completes the multimodal x dedup triad (image ``image_phash_pairs``,
-    audio ``audio_fingerprint_pairs``): real decode of <= ``max_frames``
-    evenly-sampled frames ON EXECUTORS — structural MJPEG framing + JPEG
-    decode, or animated-GIF compositing, dispatched per row on magic
-    bytes — per-frame pHash, per-bit majority vote into one 64-bit
-    fingerprint (functions/video_hash.py), then the shared pigeonhole
-    banding: payload bytes never shuffle, recall is exact at the radius,
-    and the SAME clip in different containers (MJPEG vs animated GIF)
-    pairs up. Rows with no decodable frame are dropped (no perceptual
-    identity). Default radius 6 sits inside the measured gap: the same
-    clip across MJPEG quality 78-85 / progressive re-encode / trim /
-    reversal / GIF re-containering lands at hamming <= 4 while distinct
-    clips sit >= 18."""
+    emits only (id, 64-bit hash): payload bytes never shuffle, the
+    pairing stage moves 16 bytes/row no matter how large the media are.
+    A null payload hashes as empty bytes. A row whose hash raises
+    ValueError or NotImplementedError (corrupt, unknown or unsupported
+    payload) is DROPPED from pairing — it has no perceptual identity to
+    match on (callers wanting an audit trail join the output back
+    against the input ids). Stage 2 is the shared pigeonhole banding
+    (exact recall at the radius)."""
     import pandas as pd
 
     from ..functions.image_hash import phash_to_signed
-    from ..functions.video_hash import video_payload_hash64
 
     def op(batches):
         for pdf in batches:
             ids: list[int] = []
             hs: list[int] = []
-            for r in pdf[[id_col, payload_col]].itertuples(index=False):
-                payload = bytes(r[1]) if r[1] is not None else b""
+            for media_id, payload in pdf.itertuples(index=False):
                 try:
-                    h = video_payload_hash64(payload, max_frames)
+                    h = payload_hash64(bytes(payload) if payload is not None else b"")
                 except (ValueError, NotImplementedError):
-                    # lossy-codec seams (e.g. lossy WebP frames) drop the
-                    # row instead of crashing the task — same contract as
-                    # image_phash_pairs / av_fingerprint_pairs
                     continue
-                ids.append(int(r[0]))
+                ids.append(int(media_id))
                 hs.append(phash_to_signed(h))
             yield pd.DataFrame(
                 {"_id": pd.array(ids, dtype="int64"), "_sh": pd.array(hs, dtype="int64")}
             )
 
-    hashed = media.select(
-        F.col(id_col).alias(id_col), F.col(payload_col).alias(payload_col)
-    ).mapInPandas(op, "_id long, _sh long")
-    return hamming_band_pairs(hashed, max_hamming, n_bands)
+    hashed = media.select("media_id", "payload").mapInPandas(op, "_id long, _sh long")
+    return hamming_band_pairs(hashed, max_hamming)
 
 
-def av_fingerprint_pairs(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    audio_hamming: int = 8,
-    video_hamming: int = 6,
-) -> DataFrame:
+def image_phash_pairs(media: DataFrame, max_hamming: int = IMAGE_HAMMING) -> DataFrame:
+    """Perceptual near-duplicate image pairs -> (id_a, id_b, hamming):
+    decode + 64-bit pHash per payload, then the shared banding
+    (``_media_hash_pairs``). Default radius 6 is comfortably inside the
+    measured operating point: same image re-encoded across JPEG quality
+    70-92/progressive/PNG lands at hamming <= 2 on this package's own
+    codecs, while distinct textures sit >= 20."""
+    from ..functions.image_hash import phash64
+    from .multimodal import decode_image
+
+    return _media_hash_pairs(media, lambda p: phash64(decode_image(p)), max_hamming)
+
+
+def audio_fingerprint_pairs(media: DataFrame, max_hamming: int = AUDIO_HAMMING) -> DataFrame:
+    """Perceptual near-duplicate audio pairs -> (id_a, id_b, hamming).
+
+    The audio sibling of ``image_phash_pairs``: decode RIFF/WAVE or FLAC
+    and take the 64-bit gain-invariant time-frequency fingerprint
+    (functions/audio_hash.py); non-WAV/FLAC rows drop. Default radius 8
+    sits inside the measured gap: the same clip across gain 0.6-1.2 /
+    dither / PCM-depth + float re-encodes lands at hamming <= 6 while
+    distinct clips sit >= 17 (functions/audio_hash.py docstring)."""
+    from ..functions.audio_hash import audio_payload_hash64
+
+    return _media_hash_pairs(media, audio_payload_hash64, max_hamming)
+
+
+def video_phash_pairs(media: DataFrame, max_hamming: int = VIDEO_HAMMING) -> DataFrame:
+    """Perceptual near-duplicate VIDEO pairs -> (id_a, id_b, hamming).
+
+    Completes the multimodal x dedup triad (image ``image_phash_pairs``,
+    audio ``audio_fingerprint_pairs``): real decode of <= MAX_FRAMES
+    evenly-sampled frames — structural MJPEG framing + JPEG decode, or
+    animated-GIF/WebP compositing, dispatched per row on magic bytes —
+    per-frame pHash, per-bit majority vote into one 64-bit fingerprint
+    (functions/video_hash.py), then the shared banding: the SAME clip in
+    different containers (MJPEG vs animated GIF) pairs up. Rows with no
+    decodable frame drop. Default radius 6 sits inside the measured
+    gap: the same clip across MJPEG quality 78-85 / progressive
+    re-encode / trim / reversal / GIF re-containering lands at hamming
+    <= 4 while distinct clips sit >= 18."""
+    from ..functions.video_hash import video_payload_hash64
+
+    return _media_hash_pairs(media, video_payload_hash64, max_hamming)
+
+
+def av_fingerprint_pairs(media: DataFrame) -> DataFrame:
     """CROSS-MODAL near-duplicate pairs over a mixed media bucket ->
     (family, id_a, id_b, hamming), family in {audio, video}.
 
@@ -427,24 +353,25 @@ def av_fingerprint_pairs(
     ONE self-join keyed by (family, band_no, band_val) with
     n_bands = max(radii) + 1 — pigeonhole-sound for the smaller radius
     too, and the single aliased plan means the demux/decode/hash stage
-    executes once (ReusedExchange), not once per family."""
+    executes once (ReusedExchange), not once per family. Two
+    ``_media_hash_pairs`` calls would decode every payload twice."""
     import pandas as pd
 
-    from ..functions.audio_hash import audio_hash64
+    from ..functions.audio_hash import audio_hash64, audio_payload_hash64
     from ..functions.avi_codec import demux_avi, is_avi
-    from ..functions.flac_codec import decode_flac, is_flac
+    from ..functions.flac_codec import is_flac
     from ..functions.image_hash import phash_to_signed
     from ..functions.mp4_codec import demux_mp4, is_mp4
     from ..functions.video_hash import video_payload_hash64
-    from ..functions.wav_codec import decode_wav, is_wav
+    from ..functions.wav_codec import is_wav
 
     def op(batches):
         for pdf in batches:
             ids: list[int] = []
             fams: list[str] = []
             hs: list[int] = []
-            for r in pdf[[id_col, payload_col]].itertuples(index=False):
-                payload = bytes(r[1]) if r[1] is not None else b""
+            for media_id, payload in pdf.itertuples(index=False):
+                payload = bytes(payload) if payload is not None else b""
                 emitted: list[tuple[str, int]] = []
                 try:
                     if is_avi(payload):
@@ -466,12 +393,8 @@ def av_fingerprint_pairs(
                             )
                         if samples.shape[0]:
                             emitted.append(("audio", audio_hash64(samples)))
-                    elif is_wav(payload):
-                        samples, _rate = decode_wav(payload)
-                        emitted.append(("audio", audio_hash64(samples)))
-                    elif is_flac(payload):
-                        samples, _rate = decode_flac(payload)
-                        emitted.append(("audio", audio_hash64(samples)))
+                    elif is_wav(payload) or is_flac(payload):
+                        emitted.append(("audio", audio_payload_hash64(payload)))
                     else:
                         # MJPEG / animated GIF / WebP magic dispatch;
                         # anything else raises ValueError -> dropped
@@ -479,11 +402,11 @@ def av_fingerprint_pairs(
                 except (ValueError, NotImplementedError):
                     # NotImplementedError too (ADVICE r6 high): demux_avi
                     # raises it for non-MJPG/non-PCM AVIs (XviD, MP3-in-
-                    # AVI) — the drop/partial-fingerprint contract, like
-                    # image_phash_pairs
+                    # AVI) — the drop/partial-fingerprint contract of
+                    # _media_hash_pairs
                     continue
                 for fam, h in emitted:
-                    ids.append(int(r[0]))
+                    ids.append(int(media_id))
                     fams.append(fam)
                     hs.append(phash_to_signed(h))
             yield pd.DataFrame(
@@ -494,11 +417,11 @@ def av_fingerprint_pairs(
                 }
             )
 
-    hashed = media.select(
-        F.col(id_col).alias(id_col), F.col(payload_col).alias(payload_col)
-    ).mapInPandas(op, "_id long, family string, _sh long")
+    hashed = media.select("media_id", "payload").mapInPandas(
+        op, "_id long, family string, _sh long"
+    )
 
-    n_bands = max(audio_hamming, video_hamming) + 1
+    n_bands = max(AUDIO_HAMMING, VIDEO_HAMMING) + 1
     band_structs = band_struct_cols(n_bands - 1, n_bands)
     # same tiny-exchange materialization as hamming_band_pairs: the demux
     # + decode + hash stage executes once regardless of join strategy
@@ -525,8 +448,8 @@ def av_fingerprint_pairs(
         )
         .dropDuplicates(["family", "id_a", "id_b"])
     )
-    radius = F.when(F.col("family") == "audio", F.lit(audio_hamming)).otherwise(
-        F.lit(video_hamming)
+    radius = F.when(F.col("family") == "audio", F.lit(AUDIO_HAMMING)).otherwise(
+        F.lit(VIDEO_HAMMING)
     )
     return (
         cand.withColumn(

@@ -27,6 +27,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _U64 = 1 << 64
+# one home for the values both faces read: the Spark operator and its
+# DuckDB twin must hash the same key with the same salt
+_STRATUM = "lang"
+_KEY = "doc_id"
+_SALT = "sample_v1"
+_WSALT = "wsample_v1"
 
 
 def _threshold(fraction: float) -> int:
@@ -50,9 +56,7 @@ def _hash_u64_sql(key_expr: str, salt: str) -> str:
 def stratified_sample(
     df: DataFrame,
     fractions: dict[str, float],
-    stratum_col: str = "lang",
-    key_col: str = "doc_id",
-    salt: str = "sample_v1",
+    salt: str = _SALT,
 ) -> DataFrame:
     """Keep each row iff hash(key, salt) clears its stratum's exact
     integer threshold. Strata absent from ``fractions`` are DROPPED
@@ -65,16 +69,13 @@ def stratified_sample(
         for stratum, frac in sorted(fractions.items())
     ]
     for stratum, t in mapping:
-        thr = F.when(F.col(stratum_col) == stratum, t).otherwise(thr)
-    return df.filter(_hash_u64_col(F.col(key_col), salt) < thr)
+        thr = F.when(F.col(_STRATUM) == stratum, t).otherwise(thr)
+    return df.filter(_hash_u64_col(F.col(_KEY), salt) < thr)
 
 
 def stratified_sample_sql(
     table: str,
     fractions: dict[str, float],
-    stratum_col: str = "lang",
-    key_col: str = "doc_id",
-    salt: str = "sample_v1",
     select: str = "*",
 ) -> str:
     cases = " ".join(
@@ -82,8 +83,8 @@ def stratified_sample_sql(
         for stratum, frac in sorted(fractions.items())
     )
     return (
-        f"SELECT {select} FROM {table} WHERE {_hash_u64_sql(key_col, salt)}"
-        f" < (CASE {stratum_col} {cases} ELSE 0::UBIGINT END)"
+        f"SELECT {select} FROM {table} WHERE {_hash_u64_sql(_KEY, _SALT)}"
+        f" < (CASE {_STRATUM} {cases} ELSE 0::UBIGINT END)"
     )
 
 
@@ -91,9 +92,7 @@ def weighted_sample_per_stratum(
     df: DataFrame,
     n: int,
     weight_col: str,
-    stratum_col: str = "lang",
-    key_col: str = "doc_id",
-    salt: str = "wsample_v1",
+    salt: str = _WSALT,
 ) -> DataFrame:
     """EXACT-size weighted sampling without replacement, per stratum —
     the Efraimidis-Spirakis A-Res scheme made deterministic: each row
@@ -115,13 +114,11 @@ def weighted_sample_per_stratum(
     partition keys, so no global sort)."""
     from pyspark.sql import Window
 
-    u = (_hash_u64_col(F.col(key_col), salt) + F.lit(1)).cast("double") / F.lit(
+    u = (_hash_u64_col(F.col(_KEY), salt) + F.lit(1)).cast("double") / F.lit(
         float(_U64)
     )
     key = F.round(F.log(u) / F.col(weight_col).cast("double"), 9)
-    w = Window.partitionBy(stratum_col).orderBy(
-        F.col("_skey").desc(), F.col(key_col).asc()
-    )
+    w = Window.partitionBy(_STRATUM).orderBy(F.col("_skey").desc(), F.col(_KEY).asc())
     return (
         df.filter(F.col(weight_col) > 0)
         .withColumn("_skey", key)
@@ -135,18 +132,15 @@ def weighted_sample_per_stratum_sql(
     table: str,
     n: int,
     weight_col: str,
-    stratum_col: str = "lang",
-    key_col: str = "doc_id",
-    salt: str = "wsample_v1",
     select: str = "*",
 ) -> str:
-    u = f"(cast({_hash_u64_sql(key_col, salt)} as double) + 1) / {float(_U64)!r}"
+    u = f"(cast({_hash_u64_sql(_KEY, _WSALT)} as double) + 1) / {float(_U64)!r}"
     key = f"round(ln({u}) / cast({weight_col} as double), 9)"
     return f"""
 SELECT {select} FROM (
   SELECT *, row_number() OVER (
-    PARTITION BY {stratum_col}
-    ORDER BY {key} DESC, {key_col} ASC) AS _rn
+    PARTITION BY {_STRATUM}
+    ORDER BY {key} DESC, {_KEY} ASC) AS _rn
   FROM {table} WHERE {weight_col} > 0)
 WHERE _rn <= {n}
 """

@@ -16,6 +16,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+# the embedding frames' schema: (vec_id long, embedding array<float>)
+_ID = "vec_id"
+_VEC = "embedding"
+# hyperplanes only need an upper bound on the dimension: the bucket UDF
+# multiplies by the batch's actual width, so padding planes is harmless.
+# 4096 covers every embedding family in use; no .first() job needed.
+_MAX_DIM = 4096
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
@@ -25,11 +33,11 @@ def _norm(a):
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
+def with_cosine(df: DataFrame, a: str, b: str) -> DataFrame:
     ac, bc = F.col(a), F.col(b)
     denom = _norm(ac) * _norm(bc)
     return df.withColumn(
-        out, F.when(denom > 0, _dot(ac, bc) / denom).otherwise(F.lit(0.0))
+        "cosine", F.when(denom > 0, _dot(ac, bc) / denom).otherwise(F.lit(0.0))
     )
 
 
@@ -60,11 +68,9 @@ def cosine_topk_bruteforce(
     probes: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """Exact cosine top-k -> (probe_id, neighbor_id, rank, cosine).
+    """Exact cosine top-k -> (probe_id, neighbor_id, rank, cosine); a
+    probe never neighbours itself.
 
     Deterministic total order (cosine desc, neighbor_id asc).
 
@@ -85,7 +91,7 @@ def cosine_topk_bruteforce(
     collected: it streams through the map side.
     """
     probe_pdf = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("p_vec")
+        F.col(_ID).alias("probe_id"), F.col(_VEC).alias("p_vec")
     ).toPandas()
     spark = probes.sparkSession
     out_schema = "probe_id long, neighbor_id long, cosine double"
@@ -102,7 +108,6 @@ def cosine_topk_bruteforce(
 
         ids, mat = bc.value
         norm_p = _seqfold_norm(mat)
-        n_keep = k + 1 if exclude_self else k
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -116,14 +121,13 @@ def cosine_topk_bruteforce(
             denom = np.multiply.outer(_seqfold_norm(C), norm_p)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = np.where(denom > 0, dots / denom, 0.0)
-            top = np.argsort(-cos, axis=0, kind="stable")[: min(n_keep, len(c_ids))]
+            top = np.argsort(-cos, axis=0, kind="stable")[: min(k + 1, len(c_ids))]
             n_top, n_p = top.shape
             probe_rep = np.broadcast_to(ids, (n_top, n_p)).ravel()
             neigh = c_ids[top].ravel()
             cosv = np.take_along_axis(cos, top, axis=0).ravel()
-            if exclude_self:
-                keep = neigh != probe_rep
-                probe_rep, neigh, cosv = probe_rep[keep], neigh[keep], cosv[keep]
+            keep = neigh != probe_rep
+            probe_rep, neigh, cosv = probe_rep[keep], neigh[keep], cosv[keep]
             yield pd.DataFrame(
                 {"probe_id": probe_rep, "neighbor_id": neigh, "cosine": cosv}
             )
@@ -131,7 +135,7 @@ def cosine_topk_bruteforce(
     # no JVM-side cast: float32 -> float64 in numpy is the identical exact
     # widening, and shipping the narrower float32 halves the Arrow bytes
     cand = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col(_ID).alias("neighbor_id"), F.col(_VEC).alias("c_vec")
     ).mapInPandas(op, out_schema)
     w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (
@@ -182,39 +186,13 @@ def _sign_lsh_udf(dim: int, bits: int, seed: int = 7):
     return _bucket
 
 
-def cosine_topk_lsh(
-    probes: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = 8,
-    probe_hamming: int = 1,
-    exclude_self: bool = True,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate cosine top-k via sign-LSH buckets (the ANN scale path).
-
-    Candidates = corpus vectors whose bucket is within ``probe_hamming``
-    bit flips of the probe's bucket; then exact cosine + window top-k.
-
-    ``dim`` defaults to the fixed element count when the schema carries it;
-    pass it explicitly otherwise — the operator never runs a driver-side
-    job just to discover the dimensionality.
-    """
-    if dim is None:
-        # hyperplanes only need an upper bound on dim: matmul below uses
-        # the batch's actual width, so padding planes is harmless. 4096
-        # covers every embedding family in use; no .first() job needed.
-        dim = 4096
-    bucket = _sign_lsh_udf(dim, bits)
-
-    # probe bucket expansion: ALL buckets within the requested hamming
-    # distance (itertools over bit subsets — the old hand-rolled version
-    # silently capped at 2 flips, so probe_hamming=3 quietly behaved
-    # like 2). Fan-out is sum(C(bits, h)) for h <= probe_hamming; the
-    # guard keeps an accidental probe_hamming=bits from exploding into
-    # the full 2^bits bucket space unnoticed.
+def _probe_flips(bits: int, probe_hamming: int) -> list[int]:
+    """XOR masks of every bucket within ``probe_hamming`` bit flips
+    (itertools over bit subsets — the old hand-rolled version silently
+    capped at 2 flips, so probe_hamming=3 quietly behaved like 2).
+    Fan-out is sum(C(bits, h)) for h <= probe_hamming; the guard keeps
+    an accidental probe_hamming=bits from exploding into the full
+    2^bits bucket space unnoticed."""
     import itertools
     import math
 
@@ -227,29 +205,46 @@ def cosine_topk_lsh(
             f"probe_hamming={probe_hamming}) — lower probe_hamming or "
             f"raise this guard deliberately"
         )
-    flips = [
+    return [
         sum(1 << b for b in combo)
         for h in range(probe_hamming + 1)
         for combo in itertools.combinations(range(bits), h)
     ]
 
+
+def cosine_topk_lsh(
+    probes: DataFrame,
+    corpus: DataFrame,
+    k: int = 5,
+    bits: int = 8,
+    probe_hamming: int = 1,
+) -> DataFrame:
+    """Approximate cosine top-k via sign-LSH buckets (the ANN scale path).
+
+    Candidates = corpus vectors other than the probe itself whose bucket
+    is within ``probe_hamming`` bit flips of the probe's bucket; then
+    exact cosine + window top-k.
+    """
+    bucket = _sign_lsh_udf(_MAX_DIM, bits)
+    flips = _probe_flips(bits, probe_hamming)
     p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("p_vec"),
-        bucket(F.col(vec_col)).alias("p_bucket"),
+        F.col(_ID).alias("probe_id"),
+        F.transform(F.col(_VEC), lambda x: x.cast("double")).alias("p_vec"),
+        bucket(F.col(_VEC)).alias("p_bucket"),
     ).withColumn(
         "bucket",
         F.explode(F.array(*[F.col("p_bucket").bitwiseXOR(F.lit(fl)) for fl in flips])),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("c_vec"),
-        bucket(F.col(vec_col)).alias("bucket"),
+        F.col(_ID).alias("neighbor_id"),
+        F.transform(F.col(_VEC), lambda x: x.cast("double")).alias("c_vec"),
+        bucket(F.col(_VEC)).alias("bucket"),
     )
-    pairs = p.join(c, "bucket")
-    if exclude_self:
-        pairs = pairs.filter(F.col("probe_id") != F.col("neighbor_id"))
-    pairs = pairs.dropDuplicates(["probe_id", "neighbor_id"])
+    pairs = (
+        p.join(c, "bucket")
+        .filter(F.col("probe_id") != F.col("neighbor_id"))
+        .dropDuplicates(["probe_id", "neighbor_id"])
+    )
     scored = with_cosine(pairs, "p_vec", "c_vec")
     w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (
@@ -278,7 +273,7 @@ def _kmeans_centroids(mat: np.ndarray, k: int, iters: int = 10, seed: int = 11) 
 
 
 def ivf_centroids_from_parquet(
-    path: str, n_lists: int = 16, sample_rows: int = 2000, seed: int = 11
+    path: str, n_lists: int = 16, sample_rows: int = 2000
 ) -> np.ndarray:
     """Spark-free twin of the centroid training inside ``cosine_topk_ivf``:
     same deterministic sample (order by id, first ``sample_rows``), same
@@ -289,27 +284,24 @@ def ivf_centroids_from_parquet(
     import pyarrow.parquet as pq
 
     t = (
-        pq.read_table(path, columns=["vec_id", "embedding"])
+        pq.read_table(path, columns=[_ID, _VEC])
         .to_pandas()
-        .sort_values("vec_id")
+        .sort_values(_ID)
         .head(sample_rows)
     )
-    mat = np.stack(t["embedding"].to_numpy()).astype(np.float64)
+    mat = np.stack(t[_VEC].to_numpy()).astype(np.float64)
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
-    return _kmeans_centroids(mat / norms, n_lists, seed=seed)
+    return _kmeans_centroids(mat / norms, n_lists)
 
 
 def cosine_topk_ivf(
     probes: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_lists: int = 16,
     n_probe: int = 4,
     sample_rows: int = 2000,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k via IVF (inverted-file) lists — the other
     canonical ANN scale path next to sign-LSH:
@@ -320,7 +312,8 @@ def cosine_topk_ivf(
          nearest list (one map pass),
       3. each probe explodes to its ``n_probe`` nearest lists; candidates
          come from an equi-join on list id (never a cross join),
-      4. exact cosine + window top-k on the candidates.
+      4. exact cosine + window top-k on the candidates (a probe never
+         neighbours itself).
 
     Recall rises with n_probe (n_probe = n_lists degenerates to exact).
     """
@@ -331,15 +324,15 @@ def cosine_topk_ivf(
     # TakeOrderedAndProject operator (top-N per partition + driver merge),
     # still O(sample) driver-side.
     sample = np.stack(
-        corpus.select(id_col, vec_col)
-        .orderBy(id_col)
+        corpus.select(_ID, _VEC)
+        .orderBy(_ID)
         .limit(sample_rows)
-        .toPandas()[vec_col]
+        .toPandas()[_VEC]
         .to_numpy()
     ).astype(np.float64)
     norms = np.linalg.norm(sample, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
-    centroids = _kmeans_centroids(sample / norms, n_lists, seed=11)
+    centroids = _kmeans_centroids(sample / norms, n_lists)
 
     # Centroid similarities are quantized at 1e-9 before argmax/argsort so
     # list assignment and probe expansion are decided on values a
@@ -368,19 +361,20 @@ def cosine_topk_ivf(
         return pd.Series([row.tolist() for row in top])
 
     p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("p_vec"),
-        F.explode(_probe_lists(F.col(vec_col))).alias("list_id"),
+        F.col(_ID).alias("probe_id"),
+        F.transform(F.col(_VEC), lambda x: x.cast("double")).alias("p_vec"),
+        F.explode(_probe_lists(F.col(_VEC))).alias("list_id"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("c_vec"),
-        _list_of(F.col(vec_col)).alias("list_id"),
+        F.col(_ID).alias("neighbor_id"),
+        F.transform(F.col(_VEC), lambda x: x.cast("double")).alias("c_vec"),
+        _list_of(F.col(_VEC)).alias("list_id"),
     )
-    pairs = p.join(c, "list_id")
-    if exclude_self:
-        pairs = pairs.filter(F.col("probe_id") != F.col("neighbor_id"))
-    pairs = pairs.dropDuplicates(["probe_id", "neighbor_id"])
+    pairs = (
+        p.join(c, "list_id")
+        .filter(F.col("probe_id") != F.col("neighbor_id"))
+        .dropDuplicates(["probe_id", "neighbor_id"])
+    )
     scored = with_cosine(pairs, "p_vec", "c_vec")
     w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return (
@@ -392,12 +386,9 @@ def cosine_topk_ivf(
 
 def semantic_near_dup_pairs(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     bits: int = 8,
     probe_hamming: int = 1,
-    dim: int | None = None,
 ) -> DataFrame:
     """Semantic near-duplicate PAIRS (SemDeDup shape — Abbas et al.
     2023 prune embedding-space duplicates the same way): (id_a, id_b,
@@ -418,33 +409,17 @@ def semantic_near_dup_pairs(
     (bits sizes the buckets to the corpus), and the exact cosine runs
     only on candidates.
     """
-    import itertools
-    import math
-
-    if probe_hamming > bits:
-        raise ValueError(f"probe_hamming={probe_hamming} exceeds bits={bits}")
-    fan_out = sum(math.comb(bits, h) for h in range(probe_hamming + 1))
-    if fan_out > 4096:
-        raise ValueError(
-            f"probe expansion of {fan_out} buckets (bits={bits}, "
-            f"probe_hamming={probe_hamming}) — lower probe_hamming or "
-            f"raise this guard deliberately"
-        )
-    flips = [
-        sum(1 << b for b in combo)
-        for h in range(probe_hamming + 1)
-        for combo in itertools.combinations(range(bits), h)
-    ]
-    bucket = _sign_lsh_udf(dim if dim is not None else 4096, bits)
+    flips = _probe_flips(bits, probe_hamming)
+    bucket = _sign_lsh_udf(_MAX_DIM, bits)
     # ONE materialized scan+bucket-UDF stage (round 7): both join sides
     # derive from the same (id, vec, bucket) frame; without an explicit
     # exchange above the UDF, each side re-scans and re-buckets the whole
     # corpus (a broadcast build side cannot reuse the other side's plan).
     # Explicit count so AQE can't coalesce-and-serialize the pair fan-out.
     base = vectors.select(
-        F.col(id_col).alias("_vid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-        bucket(F.col(vec_col)).alias("_b"),
+        F.col(_ID).alias("_vid"),
+        F.transform(F.col(_VEC), lambda x: x.cast("double")).alias("_v"),
+        bucket(F.col(_VEC)).alias("_b"),
     ).repartition(vectors.sparkSession.sparkContext.defaultParallelism, "_vid")
     left = (
         base.select(

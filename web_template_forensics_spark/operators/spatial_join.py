@@ -7,8 +7,8 @@ Scale design (the 100 TB story):
     even-odd ray cast runs on candidates only, as a JVM ``aggregate`` over
     the polygon's edge array (a broadcast one-row-per-polygon table), so
     no candidate crosses into Python. Hot cells (dense TLD clusters) are
-    immune on the broadcast side; the downstream per-polygon aggregation
-    uses AQE skew splitting + optional salting (operators in tiles.py).
+    immune on the broadcast side; the downstream aggregations combine
+    map-side (tiles.py).
   * kNN — one lazy plan, no driver action: every probe joins the corpus
     on its disk-1 cell ids (an equi-join, never the full cross product)
     and keeps its top k. A probe whose k-th candidate lies inside the
@@ -64,9 +64,6 @@ def pip_join(
     spark: SparkSession,
     points: DataFrame,
     polygons: list[Polygon],
-    id_col: str = "id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     index_level: int = 6,
 ) -> DataFrame:
     """Exact point-in-polygon join -> (id, poly_id).
@@ -84,10 +81,7 @@ def pip_join(
     index_df = spark.createDataFrame(index_pdf, schema="cell_id long, poly_id long")
     edges_df = spark.createDataFrame(_edge_table(polygons), schema=_EDGE_SCHEMA)
 
-    pts = points.select(
-        F.col(id_col).alias("id"), F.col(lat_col).alias("lat"), F.col(lon_col).alias("lon"),
-        cell_id_col(lat_col, lon_col, index_level).alias("cell_id"),
-    )
+    pts = points.select("id", "lat", "lon", cell_id_col("lat", "lon", index_level).alias("cell_id"))
     return (
         pts.join(F.broadcast(index_df), "cell_id")
         .join(F.broadcast(edges_df), "poly_id")

@@ -50,28 +50,28 @@ SPAN_WORDS = 8
 SPAN_STRIDE = 4
 
 
-def gopher_quality(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def gopher_quality(df: DataFrame) -> DataFrame:
     """Per-document Gopher quality rule columns + keep flag."""
-    cols = gopher_rule_cols(F.col(text_col))
-    return df.select(F.col(id_col), *[c.alias(name) for name, c in cols.items()])
+    cols = gopher_rule_cols(F.col("text"))
+    return df.select("doc_id", *[c.alias(name) for name, c in cols.items()])
 
 
-def gopher_quality_sql(table: str = "documents", id_col: str = "doc_id", text_col: str = "text") -> str:
-    sqls = gopher_rule_sqls(text_col)
+def gopher_quality_sql(table: str = "documents") -> str:
+    sqls = gopher_rule_sqls("text")
     sel = ", ".join(f"{expr} AS {name}" for name, expr in sqls.items())
-    return f"SELECT {id_col}, {sel} FROM {table}"
+    return f"SELECT doc_id, {sel} FROM {table}"
 
 
-def pii_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def pii_stats(df: DataFrame) -> DataFrame:
     """Per-document PII counts + md5 of the redacted text."""
-    cols = pii_cols(F.col(text_col))
-    return df.select(F.col(id_col), *[c.alias(name) for name, c in cols.items()])
+    cols = pii_cols(F.col("text"))
+    return df.select("doc_id", *[c.alias(name) for name, c in cols.items()])
 
 
-def pii_stats_sql(table: str = "documents", id_col: str = "doc_id", text_col: str = "text") -> str:
-    sqls = pii_sqls(text_col)
+def pii_stats_sql(table: str = "documents") -> str:
+    sqls = pii_sqls("text")
     sel = ", ".join(f"{expr} AS {name}" for name, expr in sqls.items())
-    return f"SELECT {id_col}, {sel} FROM {table}"
+    return f"SELECT doc_id, {sel} FROM {table}"
 
 
 def _grams_col(words, n: int):
@@ -95,13 +95,7 @@ def _grams_sql(words: str, n: int) -> str:
     )
 
 
-def repetition_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_ns: tuple[int, ...] = TOP_NGRAM_NS,
-    dup_ns: tuple[int, ...] = DUP_NGRAM_NS,
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher repetition filters, exactly specified:
 
     - ``top{n}gram_frac`` (n in TOP_NGRAM_NS): occurrences of the
@@ -119,11 +113,11 @@ def repetition_stats(
 
     All fractions rounded to 6 dp in both faces.
     """
-    words = words_col(F.col(text_col))
+    words = words_col(F.col("text"))
     base = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         words.alias("words"),
-        F.length(collapsed_text_col(F.col(text_col))).cast("long").alias("clen"),
+        F.length(collapsed_text_col(F.col("text"))).cast("long").alias("clen"),
     )
     # ONE materialized tokenization (round 7): the four n-gram branches
     # below each re-scanned the corpus and re-split the text. A single
@@ -134,7 +128,7 @@ def repetition_stats(
     # Explicit count so AQE can't coalesce-and-serialize the gram work.
     base = base.repartition(df.sparkSession.sparkContext.defaultParallelism, "doc_id")
     out = base.select("doc_id")
-    for n in top_ns:
+    for n in TOP_NGRAM_NS:
         counts = (
             base.select("doc_id", "clen", F.explode(_grams_col(F.col("words"), n)).alias("gram"))
             .groupBy("doc_id", "clen", "gram")
@@ -172,7 +166,7 @@ def repetition_stats(
             )
         )
         out = out.join(top, "doc_id", "left")
-    for n in dup_ns:
+    for n in DUP_NGRAM_NS:
         counts = (
             base.select("doc_id", F.explode(_grams_col(F.col("words"), n)).alias("gram"))
             .groupBy("doc_id", "gram")
@@ -186,23 +180,17 @@ def repetition_stats(
             ).alias(f"dup{n}gram_frac")
         )
         out = out.join(dup, "doc_id", "left")
-    fill = {f"top{n}gram_frac": 0.0 for n in top_ns}
-    fill.update({f"dup{n}gram_frac": 0.0 for n in dup_ns})
+    fill = {f"top{n}gram_frac": 0.0 for n in TOP_NGRAM_NS}
+    fill.update({f"dup{n}gram_frac": 0.0 for n in DUP_NGRAM_NS})
     return out.fillna(fill)
 
 
-def repetition_stats_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_ns: tuple[int, ...] = TOP_NGRAM_NS,
-    dup_ns: tuple[int, ...] = DUP_NGRAM_NS,
-) -> str:
-    words = words_sql(text_col)
-    clen = f"length({collapsed_text_sql(text_col)})"
-    ctes = [f"base AS (SELECT {id_col} AS doc_id, {words} AS words, cast({clen} as bigint) AS clen FROM {table})"]
+def repetition_stats_sql() -> str:
+    words = words_sql("text")
+    clen = f"length({collapsed_text_sql('text')})"
+    ctes = [f"base AS (SELECT doc_id AS doc_id, {words} AS words, cast({clen} as bigint) AS clen FROM documents)"]
     joins, sels = [], []
-    for n in top_ns:
+    for n in TOP_NGRAM_NS:
         ctes.append(
             f"g{n} AS (SELECT doc_id, clen, unnest({_grams_sql('words', n)}) AS gram FROM base)"
         )
@@ -217,7 +205,7 @@ def repetition_stats_sql(
         )
         joins.append(f"LEFT JOIN t{n} USING (doc_id)")
         sels.append(f"coalesce(top{n}gram_frac, 0.0) AS top{n}gram_frac")
-    for n in dup_ns:
+    for n in DUP_NGRAM_NS:
         ctes.append(f"h{n} AS (SELECT doc_id, unnest({_grams_sql('words', n)}) AS gram FROM base)")
         ctes.append(f"d{n} AS (SELECT doc_id, gram, count(*) AS cnt FROM h{n} GROUP BY 1, 2)")
         ctes.append(
@@ -233,17 +221,11 @@ def repetition_stats_sql(
     )
 
 
-def window_span_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span_words: int = SPAN_WORDS,
-    stride: int = SPAN_STRIDE,
-) -> DataFrame:
+def window_span_dedup(df: DataFrame) -> DataFrame:
     """Cross-document duplicated-span accounting (Lee et al. 2021 shape).
 
-    Each document is shingled into ``span_words``-word windows starting
-    every ``stride`` words (positions 1, 1+stride, ... while the full
+    Each document is shingled into ``SPAN_WORDS``-word windows starting
+    every ``SPAN_STRIDE`` words (positions 1, 1+SPAN_STRIDE, ... while the
     window fits). A window is a DUPLICATED SPAN iff its md5 appears in
     at least two DISTINCT documents. Output per document: window count,
     duplicated-window count, and their ratio (6 dp; 0.0 for docs too
@@ -254,15 +236,15 @@ def window_span_dedup(
     an equi-join back. md5 (not xxhash) so DuckDB recomputes the exact
     same keys.
     """
-    words = words_col(F.col(text_col))
+    words = words_col(F.col("text"))
     grams = F.when(
-        F.size(words) >= span_words,
+        F.size(words) >= SPAN_WORDS,
         F.transform(
-            F.sequence(F.lit(1), F.size(words) - F.lit(span_words - 1), F.lit(stride)),
-            lambda i: F.concat_ws(" ", F.slice(words, i, span_words)),
+            F.sequence(F.lit(1), F.size(words) - F.lit(SPAN_WORDS - 1), F.lit(SPAN_STRIDE)),
+            lambda i: F.concat_ws(" ", F.slice(words, i, SPAN_WORDS)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    spans = df.select(F.col(id_col).alias("doc_id"), F.explode(grams).alias("span")).select(
+    spans = df.select("doc_id", F.explode(grams).alias("span")).select(
         "doc_id", F.md5("span").alias("h")
     )
     # ONE materialized span stage (round 7): three consumers below
@@ -277,7 +259,7 @@ def window_span_dedup(
         spans.join(dup_h.select("h"), "h").groupBy("doc_id").agg(F.count(F.lit(1)).alias("dup_windows"))
     )
     out = (
-        df.select(F.col(id_col).alias("doc_id"))
+        df.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .join(dup_per_doc, "doc_id", "left")
         .fillna({"n_windows": 0, "dup_windows": 0})
@@ -293,20 +275,14 @@ def window_span_dedup(
     )
 
 
-def window_span_dedup_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span_words: int = SPAN_WORDS,
-    stride: int = SPAN_STRIDE,
-) -> str:
-    words = words_sql(text_col)
+def window_span_dedup_sql(table: str = "documents") -> str:
+    words = words_sql("text")
     grams = (
-        f"list_transform(generate_series(1, greatest(len(words) - {span_words - 1}, 0), {stride}),"
-        f" i -> array_to_string(words[i:i+{span_words - 1}], ' '))"
+        f"list_transform(generate_series(1, greatest(len(words) - {SPAN_WORDS - 1}, 0), {SPAN_STRIDE}),"
+        f" i -> array_to_string(words[i:i+{SPAN_WORDS - 1}], ' '))"
     )
     return f"""
-  WITH base AS (SELECT {id_col} AS doc_id, {words} AS words FROM {table}),
+  WITH base AS (SELECT doc_id AS doc_id, {words} AS words FROM {table}),
   raw_spans AS (SELECT doc_id, unnest({grams}) AS span FROM base),
   spans AS (SELECT doc_id, md5(span) AS h FROM raw_spans),
   per_doc AS (SELECT doc_id, count(*) AS n_windows FROM spans GROUP BY doc_id),
@@ -325,16 +301,10 @@ def window_span_dedup_sql(
 DECONTAM_NGRAM = 8
 
 
-def decontaminate(
-    train: DataFrame,
-    eval_set: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DECONTAM_NGRAM,
-) -> DataFrame:
+def decontaminate(train: DataFrame, eval_set: DataFrame) -> DataFrame:
     """Benchmark decontamination (the Lee/Brown-et-al. eval-overlap
     rule): a training document is CONTAMINATED iff any of its word
-    ``n``-grams (stride 1 — every alignment) appears in the benchmark
+    ``DECONTAM_NGRAM``-grams (stride 1 — every alignment) appears in the benchmark
     set's n-grams. Output per train doc: window count, hit count,
     contaminated 0/1.
 
@@ -344,14 +314,14 @@ def decontaminate(
     LEFT SEMI-style join with no shuffle of train text (only the
     per-doc count groupBy shuffles (doc_id, counts)). md5, not
     xxhash64, so DuckDB recomputes identical keys."""
-    t_words = words_col(F.col(text_col))
-    t_grams = _grams_col(t_words, n)
+    t_words = words_col(F.col("text"))
+    t_grams = _grams_col(t_words, DECONTAM_NGRAM)
     spans = train.select(
-        F.col(id_col).alias("doc_id"), F.explode_outer(t_grams).alias("gram")
+        "doc_id", F.explode_outer(t_grams).alias("gram")
     ).select("doc_id", F.md5("gram").alias("h"))
-    e_words = words_col(F.col(text_col))
+    e_words = words_col(F.col("text"))
     eval_h = (
-        eval_set.select(F.explode(_grams_col(e_words, n)).alias("gram"))
+        eval_set.select(F.explode(_grams_col(e_words, DECONTAM_NGRAM)).alias("gram"))
         .select(F.md5("gram").alias("h"))
         .distinct()
     )
@@ -384,14 +354,11 @@ def decontaminate(
 def decontaminate_sql(
     train_table: str = "documents",
     eval_table: str = "eval_docs",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DECONTAM_NGRAM,
 ) -> str:
-    words = words_sql(text_col)
-    grams = _grams_sql("words", n)
+    words = words_sql("text")
+    grams = _grams_sql("words", DECONTAM_NGRAM)
     return f"""
-WITH tbase AS (SELECT {id_col} AS doc_id, {words} AS words FROM {train_table}),
+WITH tbase AS (SELECT doc_id AS doc_id, {words} AS words FROM {train_table}),
 tspans AS (
   SELECT doc_id, md5(g.gram) AS h
   FROM tbase, LATERAL unnest({grams}) AS g(gram)),
@@ -411,16 +378,10 @@ LEFT JOIN hits USING (doc_id)
 """
 
 
-def decontaminate_redact(
-    train: DataFrame,
-    eval_set: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DECONTAM_NGRAM,
-) -> DataFrame:
+def decontaminate_redact(train: DataFrame, eval_set: DataFrame) -> DataFrame:
     """Span-LEVEL decontamination (the surgical variant of
     ``decontaminate``): instead of flagging whole documents, remove
-    every word covered by a contaminated ``n``-gram window and emit the
+    every word covered by a contaminated ``DECONTAM_NGRAM``-gram window and emit the
     cleaned text's digest + removal accounting. Output per train doc:
     n_words, n_removed (covered word count), clean_md5 (md5 of the
     surviving words joined by single spaces — i.e. of the
@@ -431,19 +392,19 @@ def decontaminate_redact(
     train text never shuffles; the only additions are a per-doc covered-
     index aggregation (doc-keyed, bounded by doc length) and the final
     id-equi-join back."""
-    words = words_col(F.col(text_col))
-    base = train.select(F.col(id_col).alias("doc_id"), words.alias("words"))
+    words = words_col(F.col("text"))
+    base = train.select("doc_id", words.alias("words"))
     grams = F.when(
-        F.size(F.col("words")) >= n,
+        F.size(F.col("words")) >= DECONTAM_NGRAM,
         F.transform(
-            F.sequence(F.lit(1), F.size(F.col("words")) - F.lit(n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(F.col("words"), i, n)),
+            F.sequence(F.lit(1), F.size(F.col("words")) - F.lit(DECONTAM_NGRAM - 1)),
+            lambda i: F.concat_ws(" ", F.slice(F.col("words"), i, DECONTAM_NGRAM)),
         ),
     ).otherwise(F.array().cast("array<string>"))
     spans = base.select("doc_id", F.posexplode(grams).alias("pos0", "gram"))
-    e_words = words_col(F.col(text_col))
+    e_words = words_col(F.col("text"))
     eval_h = (
-        eval_set.select(F.explode(_grams_col(e_words, n)).alias("gram"))
+        eval_set.select(F.explode(_grams_col(e_words, DECONTAM_NGRAM)).alias("gram"))
         .select(F.md5("gram").alias("h"))
         .distinct()
     )
@@ -453,7 +414,7 @@ def decontaminate_redact(
     cov = (
         hits.select(
             "doc_id",
-            F.explode(F.sequence(F.col("pos0") + 1, F.col("pos0") + n)).alias("wi"),
+            F.explode(F.sequence(F.col("pos0") + 1, F.col("pos0") + DECONTAM_NGRAM)).alias("wi"),
         )
         .distinct()
         .groupBy("doc_id")
@@ -476,24 +437,21 @@ def decontaminate_redact(
 def decontaminate_redact_sql(
     train_table: str = "documents",
     eval_table: str = "eval_docs",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DECONTAM_NGRAM,
 ) -> str:
-    words = words_sql(text_col)
-    grams = _grams_sql("words", n)
+    words = words_sql("text")
+    grams = _grams_sql("words", DECONTAM_NGRAM)
     return f"""
-WITH base AS (SELECT {id_col} AS doc_id, {words} AS words FROM {train_table}),
+WITH base AS (SELECT doc_id AS doc_id, {words} AS words FROM {train_table}),
 spans AS (
   SELECT doc_id, s.i AS start1,
-         md5(array_to_string(words[s.i:s.i+{n - 1}], ' ')) AS h
-  FROM base, LATERAL unnest(generate_series(1, greatest(len(words) - {n - 1}, 0))) s(i)),
+         md5(array_to_string(words[s.i:s.i+{DECONTAM_NGRAM - 1}], ' ')) AS h
+  FROM base, LATERAL unnest(generate_series(1, greatest(len(words) - {DECONTAM_NGRAM - 1}, 0))) s(i)),
 ebase AS (SELECT {words} AS words FROM {eval_table}),
 eh AS (SELECT DISTINCT md5(g.gram) AS h FROM ebase, LATERAL unnest({grams}) AS g(gram)),
 hits AS (SELECT doc_id, start1 FROM spans WHERE h IN (SELECT h FROM eh)),
 cov AS (
   SELECT DISTINCT doc_id, start1 + o.off AS wi
-  FROM hits, LATERAL unnest(generate_series(0, {n - 1})) o(off)),
+  FROM hits, LATERAL unnest(generate_series(0, {DECONTAM_NGRAM - 1})) o(off)),
 cova AS (SELECT doc_id, list(wi ORDER BY wi) AS covered FROM cov GROUP BY doc_id)
 SELECT b.doc_id,
        cast(len(b.words) as bigint) AS n_words,
@@ -509,11 +467,7 @@ FROM base b LEFT JOIN cova c USING (doc_id)
 """
 
 
-def unigram_logprob(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def unigram_logprob(df: DataFrame) -> DataFrame:
     """Corpus-trained unigram language-model score per document — the
     honest relational analog of the CCNet/KenLM perplexity filter
     (Wenzek et al. 2020): documents whose tokens are improbable under
@@ -530,7 +484,7 @@ def unigram_logprob(
     sums) and one token-keyed equi-join; text never shuffles beyond its
     exploded tokens."""
     toks = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(words_col(F.col(text_col))).alias("token")
+        "doc_id", F.explode(words_col(F.col("text"))).alias("token")
     )
     totals = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     # grand total via a window-free scalar: sum over the unigram table,
@@ -557,7 +511,7 @@ def unigram_logprob(
         F.count(F.lit(1)).alias("n_tokens"), F.avg("lp").alias("mean_lp")
     )
     return (
-        df.select(F.col(id_col).alias("doc_id"))
+        df.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
@@ -567,15 +521,11 @@ def unigram_logprob(
     )
 
 
-def unigram_logprob_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    words = words_sql(text_col)
+def unigram_logprob_sql(table: str = "documents") -> str:
+    words = words_sql("text")
     return f"""
 WITH toks AS (
-  SELECT {id_col} AS doc_id, t.token FROM {table}, LATERAL unnest({words}) AS t(token)),
+  SELECT doc_id AS doc_id, t.token FROM {table}, LATERAL unnest({words}) AS t(token)),
 totals AS (SELECT token, count(*) AS cnt FROM toks GROUP BY token),
 grand AS (SELECT sum(cnt) AS total FROM totals),
 scored AS (
@@ -587,20 +537,14 @@ per_doc AS (
 SELECT b.doc_id,
        cast(coalesce(p.n_tokens, 0) as bigint) AS n_tokens,
        round(coalesce(p.mean_lp, 0.0), 6) AS mean_logprob
-FROM (SELECT {id_col} AS doc_id FROM {table}) b LEFT JOIN per_doc p USING (doc_id)
+FROM (SELECT doc_id AS doc_id FROM {table}) b LEFT JOIN per_doc p USING (doc_id)
 """
 
 
-def self_dedup_redact(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span_words: int = SPAN_WORDS,
-    stride: int = SPAN_STRIDE,
-) -> DataFrame:
+def self_dedup_redact(df: DataFrame) -> DataFrame:
     """Corpus SELF-dedup surgery — the removal step Lee et al. 2021
     apply after detection (window_span_dedup is the detection face):
-    a span (``span_words``-word window at ``stride``) duplicated across
+    a span (``SPAN_WORDS``-word window at ``SPAN_STRIDE``) duplicated across
     >= 2 distinct documents is KEPT only in its canonical document (the
     MIN doc_id containing that span hash) and surgically removed from
     every other document's text. Output per doc: n_words, n_removed
@@ -611,19 +555,19 @@ def self_dedup_redact(
     the keeper choice is a per-hash min (map-side combinable); the
     covered-index agg is doc-keyed and bounded by doc length. Text
     never leaves the map side until the final per-doc surgery."""
-    words = words_col(F.col(text_col))
-    base = df.select(F.col(id_col).alias("doc_id"), words.alias("words"))
+    words = words_col(F.col("text"))
+    base = df.select("doc_id", words.alias("words"))
     grams = F.when(
-        F.size(F.col("words")) >= span_words,
+        F.size(F.col("words")) >= SPAN_WORDS,
         F.transform(
-            F.sequence(F.lit(1), F.size(F.col("words")) - F.lit(span_words - 1), F.lit(stride)),
-            lambda i: F.concat_ws(" ", F.slice(F.col("words"), i, span_words)),
+            F.sequence(F.lit(1), F.size(F.col("words")) - F.lit(SPAN_WORDS - 1), F.lit(SPAN_STRIDE)),
+            lambda i: F.concat_ws(" ", F.slice(F.col("words"), i, SPAN_WORDS)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    # stride-s grams: array slot j (0-based) starts at word 1 + j*stride
+    # SPAN_STRIDE grams: array slot j (0-based) starts at word 1 + j*SPAN_STRIDE
     spans = base.select("doc_id", F.posexplode(grams).alias("j", "gram")).select(
         "doc_id",
-        (F.lit(1) + F.col("j") * F.lit(stride)).alias("start1"),
+        (F.lit(1) + F.col("j") * F.lit(SPAN_STRIDE)).alias("start1"),
         F.md5("gram").alias("h"),
     )
     # ONE materialized span stage (round 7): the keeper aggregate and the
@@ -645,7 +589,7 @@ def self_dedup_redact(
         victims.select(
             "doc_id",
             F.explode(
-                F.sequence(F.col("start1"), F.col("start1") + F.lit(span_words - 1))
+                F.sequence(F.col("start1"), F.col("start1") + F.lit(SPAN_WORDS - 1))
             ).alias("wi"),
         )
         .distinct()
@@ -666,20 +610,14 @@ def self_dedup_redact(
     )
 
 
-def self_dedup_redact_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span_words: int = SPAN_WORDS,
-    stride: int = SPAN_STRIDE,
-) -> str:
-    words = words_sql(text_col)
+def self_dedup_redact_sql(table: str = "documents") -> str:
+    words = words_sql("text")
     return f"""
-WITH base AS (SELECT {id_col} AS doc_id, {words} AS words FROM {table}),
+WITH base AS (SELECT doc_id AS doc_id, {words} AS words FROM {table}),
 spans AS (
   SELECT doc_id, s.i AS start1,
-         md5(array_to_string(words[s.i:s.i+{span_words - 1}], ' ')) AS h
-  FROM base, LATERAL unnest(generate_series(1, greatest(len(words) - {span_words - 1}, 0), {stride})) s(i)),
+         md5(array_to_string(words[s.i:s.i+{SPAN_WORDS - 1}], ' ')) AS h
+  FROM base, LATERAL unnest(generate_series(1, greatest(len(words) - {SPAN_WORDS - 1}, 0), {SPAN_STRIDE})) s(i)),
 keepers AS (
   SELECT h, min(doc_id) AS keep_doc FROM spans
   GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
@@ -688,7 +626,7 @@ victims AS (
   WHERE spans.doc_id <> keepers.keep_doc),
 cov AS (
   SELECT DISTINCT doc_id, start1 + o.off AS wi
-  FROM victims, LATERAL unnest(generate_series(0, {span_words - 1})) o(off)),
+  FROM victims, LATERAL unnest(generate_series(0, {SPAN_WORDS - 1})) o(off)),
 cova AS (SELECT doc_id, list(wi ORDER BY wi) AS covered FROM cov GROUP BY doc_id)
 SELECT b.doc_id,
        cast(len(b.words) as bigint) AS n_words,

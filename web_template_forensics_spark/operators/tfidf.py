@@ -5,7 +5,7 @@ The third candidate-generation family next to signature banding
 (operators/similarity_search.py): classic IR sparse cosine, where
 candidates come from the INVERTED INDEX (docs sharing a token) with
 document-frequency pruning bounding the join fan-out — tokens appearing
-in more than ``df_cap_frac`` of the corpus are dropped from the vectors
+in more than ``DF_CAP_FRAC`` of the corpus are dropped from the vectors
 entirely (stopword pruning by document frequency, the SpotSigs move),
 so no token contributes more than (cap choose 2) candidate pairs.
 
@@ -32,22 +32,23 @@ from pyspark.sql import functions as F
 
 from ..functions.text_quality import words_col
 
+# the df cap both faces apply: a token in more than this share of the
+# corpus is dropped from every vector
+DF_CAP_FRAC = 0.6
+
 
 def tfidf_topk_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
-    df_cap_frac: float = 0.6,
 ) -> DataFrame:
     """Per-document top-``k`` most TF-IDF-cosine-similar neighbors ->
     (doc_id, neighbor_id, rank, cosine). Deterministic total order
     (quantized cosine desc, neighbor_id asc). Documents with no
     surviving tokens (everything pruned by the df cap) emit no rows."""
     n_docs = docs.count()  # one driver action: N is a scalar of the corpus
-    cap = int(df_cap_frac * n_docs)
+    cap = int(DF_CAP_FRAC * n_docs)
     toks = (
-        docs.select(F.col(id_col).alias("doc_id"), F.explode(words_col(F.col(text_col))).alias("token"))
+        docs.select("doc_id", F.explode(words_col(F.col("text"))).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -112,26 +113,22 @@ def tfidf_topk_pairs(
 
 def tfidf_topk_sql(
     n_docs_sql: str,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
-    df_cap_frac: float = 0.6,
 ) -> str:
     """DuckDB replica; ``n_docs_sql`` is a scalar subquery for N so the
     oracle recomputes the corpus size rather than pinning a constant."""
     from ..functions.text_quality import words_sql
 
-    words = words_sql(text_col)
+    words = words_sql("text")
     return f"""
 WITH nn AS (SELECT ({n_docs_sql}) AS n),
 toks AS (
-  SELECT {id_col} AS doc_id, t.token, count(*) AS tf
-  FROM {table}, LATERAL unnest({words}) AS t(token)
+  SELECT doc_id AS doc_id, t.token, count(*) AS tf
+  FROM documents, LATERAL unnest({words}) AS t(token)
   GROUP BY 1, 2),
 dfreq AS (
   SELECT token, count(*) AS df_t FROM toks GROUP BY token
-  HAVING count(*) <= (SELECT cast(floor({df_cap_frac} * n) as bigint) FROM nn)),
+  HAVING count(*) <= (SELECT cast(floor({DF_CAP_FRAC} * n) as bigint) FROM nn)),
 w AS (
   SELECT toks.token, toks.doc_id,
          round(cast(tf as double) * (ln(cast((SELECT n FROM nn) + 1 as double)

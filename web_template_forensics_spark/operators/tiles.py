@@ -4,10 +4,13 @@ The A9 aggregation family (SURVEY.md §2.5) plus the graft's raster/vector
 operators. All pure DataFrame ops except the dense-grid assembly, which is
 a grouped-map pandas UDF (one numpy 2-D histogram per tile).
 
-Scale notes: the rollup is a map-side-combinable hash aggregate on int64
-tile keys. Hot tiles (the .de cluster) are handled by two-phase salted
-aggregation — ``salted=True`` pre-aggregates on (tile, salt) before the
-final combine, bounding any single reducer's input.
+Scale notes: the rollup is a hash aggregate on int64 tile keys, and its
+count and sums combine map-side, so a hot tile (the .de cluster) reaches
+its reducer as one partial row per map task. The pages pipeline runs this
+plain rollup. ``salted=True`` adds a two-phase aggregate on (tile, salt)
+that buys nothing for count and sum; the ``tile_rollup_z6`` and
+``pages_pipeline_tiles`` queries, the flagship ``entry()`` plan and
+perfbench's pages split pass still pass it.
 """
 
 from __future__ import annotations
@@ -23,11 +26,8 @@ from ..functions.geo_udfs import tile_ix_col, tile_iy_col
 def tile_rollup(
     points: DataFrame,
     z: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     weight_col: str | list[str] | None = None,
     salted: bool = False,
-    n_salt: int = 16,
 ) -> DataFrame:
     """-> (tile_z, tile_x, tile_y, page_count[, byte_count | <w>_sum...]).
 
@@ -37,8 +37,8 @@ def tile_rollup(
         weights = [(weight_col, "byte_count")]
     else:
         weights = [(c, f"{c}_sum") for c in (weight_col or [])]
-    df = points.withColumn("tile_x", tile_ix_col(lon_col, z)).withColumn(
-        "tile_y", tile_iy_col(lat_col, z)
+    df = points.withColumn("tile_x", tile_ix_col("lon", z)).withColumn(
+        "tile_y", tile_iy_col("lat", z)
     )
     aggs = [F.count(F.lit(1)).alias("page_count")] + [
         F.sum(c).alias(n) for c, n in weights
@@ -50,7 +50,7 @@ def tile_rollup(
         # salted path matters for aggs without partial pushdown and for
         # pathological reducer skew; the salt itself is free
         # (spark_partition_id, no data-dependent expression).
-        df = df.withColumn("_salt", F.pmod(F.spark_partition_id(), F.lit(n_salt)))
+        df = df.withColumn("_salt", F.pmod(F.spark_partition_id(), F.lit(16)))
         partial_aggs = [F.count(F.lit(1)).alias("_pc")] + [
             F.sum(c).alias(f"_w{j}") for j, (c, _) in enumerate(weights)
         ]
@@ -70,8 +70,6 @@ def rasterize_tiles(
     points: DataFrame,
     z_base: int,
     depth: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
 ) -> DataFrame:
     """Vector->raster: per base tile, a dense (2^depth x 2^depth) count grid.
 
@@ -81,8 +79,8 @@ def rasterize_tiles(
     z_fine = z_base + depth
     side = 1 << depth
     df = (
-        points.withColumn("fx", tile_ix_col(lon_col, z_fine))
-        .withColumn("fy", tile_iy_col(lat_col, z_fine))
+        points.withColumn("fx", tile_ix_col("lon", z_fine))
+        .withColumn("fy", tile_iy_col("lat", z_fine))
         .select(
             (F.col("fx") / side).cast("long").alias("tile_x"),
             (F.col("fy") / side).cast("long").alias("tile_y"),

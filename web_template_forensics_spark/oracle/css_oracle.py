@@ -402,25 +402,3 @@ def compare_css(css1: str, css2: str) -> dict[str, Any]:
         "supports": compare_supports(sup1, sup2, rv1, rv2),
     }
 
-
-def css_rule_rows(css: str) -> list[tuple[str, str, str, str, bool]]:
-    """Explode a stylesheet to (scope, selector, prop, value, important)
-    rows — the engine's relational CSS shape (SURVEY.md §1.2)."""
-    rules, media, kf, sup, _ = parse_css(css)
-    rows = []
-    for sel, props in rules.items():
-        for prop, (val, imp) in props.items():
-            rows.append(("top", sel, prop, val, imp))
-    for mq, seld in media.items():
-        for sel, props in seld.items():
-            for prop, (val, imp) in props.items():
-                rows.append((f"media:{mq}", sel, prop, val, imp))
-    for cond, seld in sup.items():
-        for sel, props in seld.items():
-            for prop, (val, imp) in props.items():
-                rows.append((f"supports:{cond}", sel, prop, val, imp))
-    for name, steps in kf.items():
-        for step, props in steps.items():
-            for prop, val in props.items():
-                rows.append((f"keyframes:{name}:{step}", "", prop, val, False))
-    return rows

@@ -60,6 +60,7 @@ import struct
 from ..functions.jpeg_codec import decode_jpeg, encode_jpeg, encode_mjpeg
 from ..functions.png_codec import PNG_SIGNATURE, _chunk as _png_chunk, encode_png
 from ..functions.wav_codec import encode_wav
+from ..operators.dedup import AUDIO_HAMMING, IMAGE_HAMMING, VIDEO_HAMMING
 
 FIXTURE_SEED = 20250817
 
@@ -631,17 +632,17 @@ def phash_corpus_hashes() -> list[tuple[int, int]]:
     return out
 
 
-def phash_oracle_sql(max_hamming: int = 6, n_bands: int | None = None) -> str:
+def phash_oracle_sql() -> str:
     """DuckDB face of image_phash_pairs over the fixture corpus: the
     hashes are injected VALUES from the Spark-free twin; the banding
     (same lo/width formula as operators.dedup.hamming_band_pairs, in
     exact HUGEINT div/mod arithmetic), candidate equi-join, per-band
     Hamming sum and the radius filter are genuinely recomputed in SQL."""
-    return _hamming_pairs_oracle_sql(phash_corpus_hashes(), max_hamming, n_bands)
+    return _hamming_pairs_oracle_sql(phash_corpus_hashes(), IMAGE_HAMMING)
 
 
 def _hamming_pairs_oracle_sql(
-    hashes: list[tuple[int, int]], max_hamming: int, n_bands: int | None
+    hashes: list[tuple[int, int]], max_hamming: int, n_bands: int | None = None
 ) -> str:
     """Generic SQL recomputation of hamming_band_pairs over injected
     (id, unsigned-64-bit-hash) VALUES — shared by the pHash (image) and
@@ -759,30 +760,21 @@ def audio_fp_corpus_hashes() -> list[tuple[int, int]]:
     """Spark-free twin: (media_id, unsigned fingerprint) for every
     decodable corpus row — driver-side decode_wav + the same pure-numpy
     hash; the corrupt row is absent (the drop-policy pin)."""
-    from ..functions.audio_hash import audio_hash64
-    from ..functions.flac_codec import decode_flac, is_flac
-    from ..functions.wav_codec import decode_wav, is_wav
+    from ..functions.audio_hash import audio_payload_hash64
 
     out = []
     for row in audio_fp_corpus():
-        payload = bytes(row["payload"])
         try:
-            if is_wav(payload):
-                samples, _rate = decode_wav(payload)
-            elif is_flac(payload):
-                samples, _rate = decode_flac(payload)
-            else:
-                continue
+            out.append((row["media_id"], audio_payload_hash64(bytes(row["payload"]))))
         except ValueError:
             continue
-        out.append((row["media_id"], audio_hash64(samples)))
     return out
 
 
-def audio_fp_oracle_sql(max_hamming: int = 8, n_bands: int | None = None) -> str:
+def audio_fp_oracle_sql() -> str:
     """DuckDB face of audio_fingerprint_pairs over the fixture corpus —
     same structure as phash_oracle_sql via the shared generic builder."""
-    return _hamming_pairs_oracle_sql(audio_fp_corpus_hashes(), max_hamming, n_bands)
+    return _hamming_pairs_oracle_sql(audio_fp_corpus_hashes(), AUDIO_HAMMING)
 
 
 # ---------------------------------------------------------------------------
@@ -851,13 +843,11 @@ def audio_fp_compressed_hashes() -> list[tuple[int, int]]:
     return out
 
 
-def audio_fp_compressed_oracle_sql(
-    max_hamming: int = _COMPRESSED_MAX_HAMMING, n_bands: int | None = None
-) -> str:
+def audio_fp_compressed_oracle_sql() -> str:
     """DuckDB face of audio_fingerprint_pairs over the compressed
     corpus — twin fingerprints as VALUES; banding, candidate equi-join,
     Hamming and the radius filter genuinely recomputed in SQL."""
-    return _hamming_pairs_oracle_sql(audio_fp_compressed_hashes(), max_hamming, n_bands)
+    return _hamming_pairs_oracle_sql(audio_fp_compressed_hashes(), _COMPRESSED_MAX_HAMMING)
 
 
 # ---------------------------------------------------------------------------
@@ -955,10 +945,10 @@ def video_fp_corpus_hashes() -> list[tuple[int, int]]:
     return out
 
 
-def video_fp_oracle_sql(max_hamming: int = 6, n_bands: int | None = None) -> str:
+def video_fp_oracle_sql() -> str:
     """DuckDB face of video_phash_pairs over the fixture corpus — same
     structure as phash/audio via the shared generic builder."""
-    return _hamming_pairs_oracle_sql(video_fp_corpus_hashes(), max_hamming, n_bands)
+    return _hamming_pairs_oracle_sql(video_fp_corpus_hashes(), VIDEO_HAMMING)
 
 
 # ---------------------------------------------------------------------------
@@ -1092,17 +1082,15 @@ def av_corpus_hashes() -> list[tuple[int, str, int]]:
     return out
 
 
-def av_near_dup_oracle_sql(
-    audio_hamming: int = 8, video_hamming: int = 6
-) -> str:
+def av_near_dup_oracle_sql() -> str:
     """DuckDB face of av_fingerprint_pairs over the fixture corpus:
     per-family twin-pinned hash VALUES through the shared banding
     recomputation (same n_bands the single-join operator uses for both
     families), family-tagged and UNION ALL'd."""
     hashes = av_corpus_hashes()
-    n_bands = max(audio_hamming, video_hamming) + 1
+    n_bands = max(AUDIO_HAMMING, VIDEO_HAMMING) + 1
     parts = []
-    for fam, radius in (("audio", audio_hamming), ("video", video_hamming)):
+    for fam, radius in (("audio", AUDIO_HAMMING), ("video", VIDEO_HAMMING)):
         fam_hashes = [(mid, h) for mid, f, h in hashes if f == fam]
         parts.append(
             f"SELECT '{fam}' AS family, id_a, id_b, hamming FROM ("
@@ -1143,15 +1131,15 @@ def media_near_dup_oracle_sql() -> str:
     modality tag and the id offsets applied to the injected hashes."""
     parts = []
     for tag, hashes, radius in (
-        ("image", phash_corpus_hashes(), 6),
-        ("audio", audio_fp_corpus_hashes(), 8),
-        ("video", video_fp_corpus_hashes(), 6),
+        ("image", phash_corpus_hashes(), IMAGE_HAMMING),
+        ("audio", audio_fp_corpus_hashes(), AUDIO_HAMMING),
+        ("video", video_fp_corpus_hashes(), VIDEO_HAMMING),
     ):
         off = _MODALITY_OFFSET[tag]
         shifted = [(mid + off, h) for mid, h in hashes]
         parts.append(
             f"SELECT '{tag}' AS modality, id_a, id_b, hamming FROM ("
-            + _hamming_pairs_oracle_sql(shifted, radius, None)
+            + _hamming_pairs_oracle_sql(shifted, radius)
             + ")"
         )
     return "\nUNION ALL\n".join(parts)

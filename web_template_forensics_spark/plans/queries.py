@@ -1727,7 +1727,7 @@ ORACLE_SQL["pipeline_lineage"] = _Q_PIPELINE_LINEAGE_SQL
 # ---------------------------------------------------------------------------
 
 
-def _q_minhash_sql(bands: int = 16, rows_per_band: int = 4) -> str:
+def _q_minhash_sql() -> str:
     """DuckDB replica of q_minhash_pairs with the BANDING itself
     recomputed in SQL (the same determinization move simhash made in
     round 3), so oracle == operator by construction — no probabilistic
@@ -1759,8 +1759,9 @@ def _q_minhash_sql(bands: int = 16, rows_per_band: int = 4) -> str:
     CONTRACT — output equals the exact threshold set on this corpus —
     is checked deterministically instead of assumed)."""
     from ..functions.text_udfs import _MH_A, _MH_B, N_MINHASH
+    from ..operators.dedup import MINHASH_BANDS
 
-    assert bands * rows_per_band == N_MINHASH
+    rows_per_band = N_MINHASH // MINHASH_BANDS
     m61 = (1 << 61) - 1
     c1, c2, c3 = 0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
     perm_rows = ",\n      ".join(
@@ -2130,12 +2131,12 @@ def q_phash_near_dup(spark, sf_dir):
     Reference parity: the reference's visual path is an empty stub
     (``visual/compare_images.py`` — SURVEY.md §0), so this is graft
     surface."""
-    from ..operators.dedup import image_phash_pairs
+    from ..operators.dedup import IMAGE_HAMMING, image_phash_pairs
     from .multimodal_fixture import phash_corpus
 
     rows = [(r["media_id"], bytearray(r["payload"])) for r in phash_corpus()]
     media = spark.createDataFrame(rows, "media_id long, payload binary")
-    return image_phash_pairs(media, max_hamming=6)
+    return image_phash_pairs(media, max_hamming=IMAGE_HAMMING)
 
 
 QUERIES["phash_near_dup"] = q_phash_near_dup
@@ -2159,12 +2160,12 @@ def q_audio_fp_near_dup(spark, sf_dir):
     radius filter genuinely recomputed in SQL. The corrupt row pins the
     drop policy. Self-contained; ``sf_dir`` unused. Reference parity:
     no audio surface exists in the reference (SURVEY.md §2 graft)."""
-    from ..operators.dedup import audio_fingerprint_pairs
+    from ..operators.dedup import AUDIO_HAMMING, audio_fingerprint_pairs
     from .multimodal_fixture import audio_fp_corpus
 
     rows = [(r["media_id"], bytearray(r["payload"])) for r in audio_fp_corpus()]
     media = spark.createDataFrame(rows, "media_id long, payload binary")
-    return audio_fingerprint_pairs(media, max_hamming=8)
+    return audio_fingerprint_pairs(media, max_hamming=AUDIO_HAMMING)
 
 
 QUERIES["audio_fp_near_dup"] = q_audio_fp_near_dup
@@ -2194,12 +2195,12 @@ def q_video_fp_near_dup(spark, sf_dir):
     corrupt row pins the drop policy. Self-contained; ``sf_dir``
     unused. Reference parity: no video surface exists in the reference
     (SURVEY.md §2 graft)."""
-    from ..operators.dedup import video_phash_pairs
+    from ..operators.dedup import VIDEO_HAMMING, video_phash_pairs
     from .multimodal_fixture import video_fp_corpus
 
     rows = [(r["media_id"], bytearray(r["payload"])) for r in video_fp_corpus()]
     media = spark.createDataFrame(rows, "media_id long, payload binary")
-    return video_phash_pairs(media, max_hamming=6)
+    return video_phash_pairs(media, max_hamming=VIDEO_HAMMING)
 
 
 QUERIES["video_fp_near_dup"] = q_video_fp_near_dup
@@ -2432,6 +2433,9 @@ def q_media_near_dup_all(spark, sf_dir):
     hash VALUES + SQL-recomputed banding, UNION ALL. Self-contained;
     ``sf_dir`` unused."""
     from ..operators.dedup import (
+        AUDIO_HAMMING,
+        IMAGE_HAMMING,
+        VIDEO_HAMMING,
         audio_fingerprint_pairs,
         image_phash_pairs,
         video_phash_pairs,
@@ -2444,13 +2448,13 @@ def q_media_near_dup_all(spark, sf_dir):
     ]
     media = spark.createDataFrame(rows, "media_id long, kind string, payload binary")
     img = image_phash_pairs(
-        media.filter(F.col("kind") == "image"), max_hamming=6
+        media.filter(F.col("kind") == "image"), max_hamming=IMAGE_HAMMING
     ).select(F.lit("image").alias("modality"), "id_a", "id_b", "hamming")
     aud = audio_fingerprint_pairs(
-        media.filter(F.col("kind") == "audio"), max_hamming=8
+        media.filter(F.col("kind") == "audio"), max_hamming=AUDIO_HAMMING
     ).select(F.lit("audio").alias("modality"), "id_a", "id_b", "hamming")
     vid = video_phash_pairs(
-        media.filter(F.col("kind") == "video"), max_hamming=6
+        media.filter(F.col("kind") == "video"), max_hamming=VIDEO_HAMMING
     ).select(F.lit("video").alias("modality"), "id_a", "id_b", "hamming")
     return img.unionByName(aud).unionByName(vid)
 

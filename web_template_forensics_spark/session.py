@@ -14,6 +14,10 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_ram_mb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // (1 << 20)
+
+
 def get_spark(
     app_name: str = "web_template_forensics_spark",
     cores: int | None = None,
@@ -63,7 +67,9 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
         # Deterministic timestamps vs the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # half of physical RAM: a heap allowed past RAM would end in an
+        # OOM kill instead of a GC
+        .config("spark.driver.memory", f"{_half_ram_mb()}m")
         .config("spark.ui.enabled", "false")
         # stdout hygiene: stage-progress bars interleave with any
         # one-line-JSON contract a caller prints (bench.py's r4 artifact

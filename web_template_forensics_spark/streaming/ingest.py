@@ -24,28 +24,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# state-table buckets: a merge reads back and rewrites only the buckets
+# its batch touches
+_N_BUCKETS = 16
+
 
 def windowed_event_counts(
     events_stream: DataFrame,
     window: str = "5 minutes",
-    slide: str | None = None,
     watermark: str = "10 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
 ) -> DataFrame:
-    """Watermarked tumbling/sliding window counts + value sums."""
+    """Watermarked tumbling-window counts + value sums per event_type."""
     # watermarks require TIMESTAMP (LTZ); parquet NTZ columns are cast in
     # the session timezone (pinned UTC by the session factory)
-    events_stream = events_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    win = F.window(F.col(ts_col), window, slide) if slide else F.window(F.col(ts_col), window)
+    events_stream = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events_stream.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("win"), F.col(key_col))
+        events_stream.withWatermark("ts", watermark)
+        .groupBy(F.window(F.col("ts"), window).alias("win"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
         .select(
             F.col("win.start").alias("win_start"),
             F.col("win.end").alias("win_end"),
-            key_col,
+            "event_type",
             "n",
             "total_value",
         )
@@ -57,7 +57,6 @@ def merge_upsert_latest(
     table_path: str,
     key_col: str,
     ts_col: str,
-    n_buckets: int = 16,
     tiebreak_cols: list[str] | None = None,
 ) -> None:
     """MERGE a micro-batch into the bucketed state table at ``table_path``
@@ -83,7 +82,7 @@ def merge_upsert_latest(
 
     spark = batch_df.sparkSession
     tb = [F.col(c).desc() for c in (tiebreak_cols or [])]
-    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
+    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(_N_BUCKETS))
     w = Window.partitionBy(key_col).orderBy(F.col(ts_col).desc(), *tb)
     latest = (
         batch_df.withColumn("_rn", F.row_number().over(w))
@@ -93,10 +92,8 @@ def merge_upsert_latest(
     )
     data_dir = os.path.join(table_path, "data")
     if os.path.isdir(data_dir):
-        # driver-side collect is bounded by n_buckets (<= n_buckets rows
-        # of one int each), NOT by batch or table size — callers passing
-        # a large n_buckets raise that bound proportionally, so keep it
-        # to O(100s) (Iceberg-partition granularity), not O(key space)
+        # driver-side collect is bounded by _N_BUCKETS (<= _N_BUCKETS rows
+        # of one int each), NOT by batch or table size
         touched = [r["bucket"] for r in latest.select("bucket").distinct().collect()]
         if not touched:
             return
@@ -135,7 +132,6 @@ def latest_state_stream(
     table_path: str,
     key_col: str = "user_id",
     ts_col: str = "ts",
-    n_buckets: int = 16,
     tiebreak_cols: list[str] | None = None,
 ):
     """Streaming as-of dedup with a REAL sink: every micro-batch is
@@ -144,9 +140,7 @@ def latest_state_stream(
     ``read_state(spark)`` reads the current latest-per-key table."""
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_upsert_latest(
-            batch_df, table_path, key_col, ts_col, n_buckets, tiebreak_cols
-        )
+        merge_upsert_latest(batch_df, table_path, key_col, ts_col, tiebreak_cols)
 
     def start(checkpoint_dir: str):
         return (
@@ -187,8 +181,6 @@ def coalesce_sessions(
 def sessionize_events(
     events_stream: DataFrame,
     gap: str = "30 minutes",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
     watermark: str = "1 minutes",
 ) -> DataFrame:
     """Gap-based crawl sessionization — the custom STATEFUL streaming
@@ -302,11 +294,9 @@ def sessionize_events(
                 }
             )
 
-    ev = events_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    ev = ev.withWatermark(ts_col, watermark).withColumn(
-        "_ts_us", F.unix_micros(F.col(ts_col))
-    )
-    return ev.groupBy(F.col(user_col)).applyInPandasWithState(
+    ev = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    ev = ev.withWatermark("ts", watermark).withColumn("_ts_us", F.unix_micros(F.col("ts")))
+    return ev.groupBy(F.col("user_id")).applyInPandasWithState(
         fn,
         out_schema,
         state_schema,

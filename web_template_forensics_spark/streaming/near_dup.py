@@ -43,7 +43,6 @@ def simhash_pairs_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    n_bands: int | None = None,
 ) -> DataFrame:
     """documents stream -> (id_a, id_b, hamming) append stream.
 
@@ -68,7 +67,7 @@ def simhash_pairs_stream(
     banded = sh.select(
         "_id",
         "_sh",
-        F.explode(F.array(*band_struct_cols(max_hamming, n_bands))).alias("band"),
+        F.explode(F.array(*band_struct_cols(max_hamming))).alias("band"),
     ).select("_id", "_sh", "band.band_no", "band.band_val")
 
     out_schema = StructType(
@@ -139,7 +138,6 @@ def simhash_pairs_stream_ttl(
     ttl_seconds: int = 7200,
     watermark_delay: str = "1 day",
     max_hamming: int = 3,
-    n_bands: int | None = None,
     dedup_cross_band: bool = False,
 ) -> DataFrame:
     """BOUNDED-STATE streaming near-dup (r5 verdict ask #7): the TTL'd
@@ -200,7 +198,7 @@ def simhash_pairs_stream_ttl(
         "_sh",
         "_ts",
         "_tms",
-        F.explode(F.array(*band_struct_cols(max_hamming, n_bands))).alias("band"),
+        F.explode(F.array(*band_struct_cols(max_hamming))).alias("band"),
     ).select("_id", "_sh", "_ts", "_tms", "band.band_no", "band.band_val")
 
     out_schema = StructType(
